@@ -1,7 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -16,9 +15,12 @@ import graft.functions.VectorFunctions.{vec_cosine, vec_l2}
  *  - signatures are map-only codegen'd expressions ([[SignatureExprs]])
  *    computed once per document behind an explicit materialization
  *    boundary;
- *  - candidate generation is a band-bucket self-join (the one shuffle
- *    that matters at 100 TB; hot buckets can be salted and the exact
- *    verify that follows keeps false positives out);
+ *  - candidate generation collects each band (or chunk) bucket once
+ *    and expands its pairs map-side — no self-join. Hot buckets are
+ *    dropped before they are collected, and the exact verify that
+ *    follows keeps false positives out. That kernel, the verify tail,
+ *    the merge drop policy and the staged pair report are shared with
+ *    the semantic and multimodal families in [[DeltaMerge]];
  *  - exact-dup grouping runs first in a real pipeline to shrink input
  *    (SURVEY §4).
  *
@@ -110,27 +112,6 @@ object Dedup {
     df.join(hot, keys, "left_anti")
   }
 
-  /**
-   * All unordered within-bucket pairs of a collected element array,
-   * generated by a nested codegen'd array transform — the r16
-   * replacement for the band/chunk self-joins: ONE aggregation
-   * collects each bucket (the exact bytes the old window/self-join
-   * exchange shipped), the size guard is a plain filter on the array
-   * length, and pair expansion is map-side — no WindowExec (whose
-   * per-group setup over the many tiny buckets was the kernels'
-   * hottest CPU), no second shuffle for the join's other side, no
-   * probe-side exchange. `mk(x, y)` builds the output struct for one
-   * unordered element pair (elements are distinct within a bucket —
-   * one row per doc per band — so no self-pair arises); it may return
-   * a NULL literal to drop the pair (the delta kernels' "at least one
-   * delta endpoint" restriction), which `filter(isNotNull)` removes.
-   */
-  private def bucketPairs(xs: Column, mk: (Column, Column) => Column): Column =
-    flatten(transform(xs, (x, i) =>
-      filter(
-        transform(slice(xs, (i + lit(2)).cast("int"), size(xs)), y => mk(x, y)),
-        p => p.isNotNull)))
-
   // ---- MinHash + LSH banding ----
 
   /**
@@ -207,12 +188,15 @@ object Dedup {
        |FROM c""".stripMargin
   }
 
-  /** (id, band, band_hash) — bands of `rowsPerBand` signature slots. */
+  /** (id, band, band_hash) — bands of `rowsPerBand` signature slots;
+    * every other column of `sigs` but `sig` rides along (the delta
+    * tag of the pair kernel). */
   def minhashBands(sigs: DataFrame, numPerms: Int, rowsPerBand: Int): DataFrame = {
     val bandHashes = (0 until numPerms / rowsPerBand).map { b =>
       xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))
     }
-    sigs.select(col("id"), posexplode(array(bandHashes: _*)).as(Seq("band", "band_hash")))
+    sigs.select(sigs.columns.filter(_ != "sig").map(col) :+
+      posexplode(array(bandHashes: _*)).as(Seq("band", "band_hash")): _*)
   }
 
   /**
@@ -221,68 +205,16 @@ object Dedup {
    * before pairing: a bucket of b docs yields O(b^2) candidate pairs,
    * and at corpus scale a degenerate bucket (boilerplate, empty docs)
    * would otherwise dominate the join; near-dups lost this way still
-   * collide in their other 15 bands.
+   * collide in their other 15 bands. The full run is the
+   * [[minhashPairsDelta]] kernel with every document delta (an empty
+   * resident base — the optimizer drops its union branch).
    */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
       numPerms: Int = 64, rowsPerBand: Int = 4, shingleWidth: Int = 3,
-      threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
-    // materialize: the signature expression must run once per doc, not
-    // once per band hash (projection collapse would inline it 16x) nor
-    // once per self-join side. At 100 TB this is a persisted signature
-    // table; here an in-memory cache marks the same boundary. The
-    // spread unblocks map parallelism on few-split sources (no-op at
-    // scale, LshIndex.spread scaladoc).
-    val sigs = minhashSignatures(graft.index.LshIndex.spread(docs),
-      idCol, textCol, numPerms, shingleWidth).cache()
-    // r16 candidate kernel: collect each (band, band_hash) bucket in
-    // ONE aggregation, guard on the collected size, expand pairs
-    // map-side ([[bucketPairs]]). The r15 window-guard + self-join
-    // shape shipped the same band rows but paid a WindowExec over the
-    // many tiny buckets per join side plus the join's second exchange.
-    // Pair set identical: x.id < y.id within a bucket == least/
-    // greatest over its distinct ids; the same distinct folds
-    // multi-band collisions.
-    val cands = minhashBands(sigs, numPerms, rowsPerBand)
-      .groupBy("band", "band_hash").agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")) <= maxBucket)
-      .select(explode(bucketPairs(col("ids"), (x, y) =>
-        when(x =!= y, struct(least(x, y).as("a"), greatest(x, y).as("b"))))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .distinct()
-      .cache()
-    // exact-verify shingle sets only for docs that appear in a candidate
-    // pair — at scale the candidate set is a sliver of the corpus, so
-    // the re-tokenization cost tracks candidates, not documents. The
-    // semi-join runs BELOW the shingle projection by construction
-    // (joining first guarantees the pruning instead of relying on the
-    // optimizer to push the join through the planted-corpus union).
-    val candIds = cands.select(col("a").as("id"))
-      .unionByName(cands.select(col("b").as("id"))).distinct()
-    // CACHED (candidate-bounded, released below): the shingle-set
-    // table feeds BOTH endpoint joins (sh_a and sh_b) whose exchanges
-    // hash on different keys — uncached, the corpus scan + semi-join +
-    // tokenize/shingle subtree evaluated twice per pass (guide §1.2)
-    val sets = graft.index.LshIndex.spread(
-        docs.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .join(candIds, Seq("id"), "left_semi")
-      .select(col("id"),
-        array_distinct(shingles(tokens(col("__text")), shingleWidth)).as("sh"))
-      .cache()
-    val result = cands
-      .join(sets.select(col("id").as("a"), col("sh").as("sh_a")), "a")
-      .join(sets.select(col("id").as("b"), col("sh").as("sh_b")), "b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), (floor(col("jaccard") * 10000) / 10000).as("jaccard"))
-      .cache()
-    result.count() // materialize the (small) pair list, then release the big intermediates
-    sigs.unpersist()
-    cands.unpersist()
-    sets.unpersist()
-    result
-  }
+      threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame =
+    minhashPairsDelta(minhashSignatures(docs.limit(0), idCol, textCol, numPerms, shingleWidth),
+        docs, docs, idCol, textCol, numPerms, rowsPerBand, shingleWidth, threshold, maxBucket)
+      .select(col("a"), col("b"), col("jaccard"))
 
   /**
    * DELTA near-dedup for corpus merges — the batch twin of the index
@@ -294,18 +226,16 @@ object Dedup {
    * `baseSigs` is the RESIDENT signature table (id, sig) — on disk in
    * production, written once when the base was deduped; only the
    * delta docs are signed here (one map-only pass over the crawl).
-   * Candidates are the two delta-touching band-join legs, delta×base
-   * and delta×delta, produced by ONE join: delta-side bands probe the
-   * combined band table (at scale the delta side is crawl-sized
-   * against a corpus-sized build side — AQE broadcasts it when small
-   * enough). The hot-bucket guard counts over base∪delta, exactly the
-   * statistics the full run would see, so the delta output equals the
-   * full-corpus [[minhashPairs]] restricted to delta-touching pairs
-   * (DedupTextSpec asserts that equality across several splits).
-   * Exact-Jaccard verify fetches text only for candidate ids, same as
-   * the full path. `leg` labels each surviving pair `delta_base` or
-   * `delta_delta` — the merge report a pipeline owner acts on (drop
-   * the copy vs pick a keeper inside the new crawl).
+   * Candidates are the two delta-touching legs, delta×base and
+   * delta×delta, from ONE collect per bucket over base∪delta: the
+   * hot-bucket guard counts exactly the statistics the full run would
+   * see, so the delta output equals the full-corpus [[minhashPairs]]
+   * restricted to delta-touching pairs (DedupTextSpec asserts that
+   * equality across several splits). Exact-Jaccard verify fetches
+   * text only for candidate ids, same as the full path. `leg` labels
+   * each surviving pair `delta_base` or `delta_delta` — the merge
+   * report a pipeline owner acts on (drop the copy vs pick a keeper
+   * inside the new crawl).
    *
    * PRECONDITION: `deltaDocs` must carry UNIQUE ids, disjoint from the
    * resident base's (one row per doc — every registry caller passes a
@@ -319,71 +249,30 @@ object Dedup {
       idCol: String, textCol: String,
       numPerms: Int = 64, rowsPerBand: Int = 4, shingleWidth: Int = 3,
       threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
+    // materialize: the signature expression must run once per doc, not
+    // once per band hash (projection collapse would inline it 16x). At
+    // 100 TB this is a persisted signature table; here an in-memory
+    // cache marks the same boundary. The spread unblocks map
+    // parallelism on few-split sources (no-op at scale,
+    // LshIndex.spread scaladoc).
     val deltaSigs = minhashSignatures(graft.index.LshIndex.spread(deltaDocs),
       idCol, textCol, numPerms, shingleWidth).cache()
-    // delta membership rides the UNION's provenance as a 0/1 tag (r16)
-    // — the base/delta sides are disjoint id sets by the resident-base
-    // contract, so the tag equals the old deltaIds-join flags without
-    // any join, and the pair expansion below restricts to
-    // delta-touching pairs without the old semi-join leg
-    val allSigs = baseSigs.select(col("id"), col("sig"), lit(0).as("__d"))
-      .unionByName(deltaSigs.select(col("id"), col("sig"), lit(1).as("__d")))
-    // r16 candidate kernel (the [[minhashPairs]] shape): one
-    // aggregation collects each bucket over base∪delta — exactly the
-    // statistics the full run would see — the size guard is a filter,
-    // and map-side expansion keeps pairs with >= 1 delta endpoint
-    // (NULL otherwise, filtered inside [[bucketPairs]]); least/
-    // greatest orients pairs, distinct folds multi-band collisions.
-    val cands = allSigs.select(col("id"), col("__d"),
-        posexplode(array((0 until numPerms / rowsPerBand).map { b =>
-          xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))
-        }: _*)).as(Seq("band", "band_hash")))
-      .groupBy("band", "band_hash")
-      .agg(collect_list(struct(col("id"), col("__d"))).as("xs"))
-      .filter(size(col("xs")) <= maxBucket)
-      .select(explode(bucketPairs(col("xs"), (x, y) =>
-        when(x.getField("id") =!= y.getField("id") &&
-            (x.getField("__d") === 1 || y.getField("__d") === 1),
-          when(x.getField("id") < y.getField("id"),
-            struct(x.getField("id").as("a"), y.getField("id").as("b"),
-              x.getField("__d").as("da"), y.getField("__d").as("db")))
-            .otherwise(
-              struct(y.getField("id").as("a"), x.getField("id").as("b"),
-                y.getField("__d").as("da"), x.getField("__d").as("db")))))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"),
-        col("p.da").as("da"), col("p.db").as("db"))
-      .distinct()
-      .cache()
-    val candIds = cands.select(col("a").as("id"))
-      .unionByName(cands.select(col("b").as("id"))).distinct()
-    // CACHED (candidate-bounded, released below) — the two endpoint
-    // joins otherwise re-evaluate the corpus scan + semi-join +
-    // shingle subtree, same rationale as [[minhashPairs]]
-    val sets = graft.index.LshIndex.spread(
+    // delta membership rides the UNION's provenance as a 0/1 tag — the
+    // base/delta sides are disjoint id sets by the resident-base
+    // contract, so no id join is needed anywhere downstream
+    val tagged = baseSigs.select(col("id"), col("sig"), lit(0).as("d"))
+      .unionByName(deltaSigs.select(col("id"), col("sig"), lit(1).as("d")))
+    val cands = DeltaMerge.bucketCandidates(minhashBands(tagged, numPerms, rowsPerBand),
+      Seq("band", "band_hash"), Seq("d"), maxBucket, (x, y) => x("d") === 1 || y("d") === 1)
+    // the semi-join runs BELOW the shingle projection by construction,
+    // so re-tokenization tracks candidates, not documents
+    val fetchSets = (ids: DataFrame) => graft.index.LshIndex.spread(
         corpus.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .join(candIds, Seq("id"), "left_semi")
-      .select(col("id"),
-        array_distinct(shingles(tokens(col("__text")), shingleWidth)).as("sh"))
-      .cache()
-    // the leg label reads the pair's carried provenance flags — the
-    // r15 dFlag LEFT joins (two joins + the deltaIds cache) are gone
-    val result = cands
-      .join(sets.select(col("id").as("a"), col("sh").as("sh_a")), "a")
-      .join(sets.select(col("id").as("b"), col("sh").as("sh_b")), "b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"),
-        (floor(col("jaccard") * 10000) / 10000).as("jaccard"),
-        when(col("da") === 1 && col("db") === 1, "delta_delta")
-          .otherwise("delta_base").as("leg"))
-      .cache()
-    result.count() // materialize the (small) pair list, release intermediates
-    deltaSigs.unpersist()
-    cands.unpersist()
-    sets.unpersist()
-    result
+      .join(ids, Seq("id"), "left_semi")
+      .select(col("id"), array_distinct(shingles(tokens(col("__text")), shingleWidth)).as("v"))
+    DeltaMerge.verifiedPairs(cands, fetchSets,
+      (a, b) => size(array_intersect(a, b)).cast("double") / size(array_union(a, b)),
+      _ >= threshold, j => (floor(j * 10000) / 10000).as("jaccard"), Seq(deltaSigs))
   }
 
   // ---- SimHash ----
@@ -419,27 +308,15 @@ object Dedup {
     val mask = (1L << width) - 1
     // same materialization boundary as minhashPairs: one SimHash64
     // eval per doc, shared across chunk projections; candidates via
-    // the r16 collect-bucket + map-side pair expansion kernel (the
-    // minhashPairs shape — simhash values ride the bucket structs so
-    // the Hamming verify needs no extra join)
+    // the [[DeltaMerge.bucketCandidates]] kernel — simhash values ride
+    // the bucket structs so the Hamming verify needs no extra join
     val sigs = simhash(graft.index.LshIndex.spread(docs), idCol, textCol).cache()
-    val result = sigs.select(col("id"), col("simhash"),
-        posexplode(array((0 until nChunks).map(c =>
-          shiftrightunsigned(col("simhash"), c * width).bitwiseAND(lit(mask))): _*))
-          .as(Seq("chunk", "chunk_val")))
-      .groupBy("chunk", "chunk_val")
-      .agg(collect_list(struct(col("id"), col("simhash"))).as("xs"))
-      .filter(size(col("xs")) <= maxBucket)
-      .select(explode(bucketPairs(col("xs"), (x, y) =>
-        when(x.getField("id") < y.getField("id"),
-          struct(x.getField("id").as("a"), y.getField("id").as("b"),
-            x.getField("simhash").as("sa"), y.getField("simhash").as("sb")))
-          .when(y.getField("id") < x.getField("id"),
-            struct(y.getField("id").as("a"), x.getField("id").as("b"),
-              y.getField("simhash").as("sa"), x.getField("simhash").as("sb"))))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"),
-        col("p.sa").as("sa"), col("p.sb").as("sb"))
-      .distinct()
+    val chunks = sigs.select(col("id"), col("simhash").as("s"),
+      posexplode(array((0 until nChunks).map(c =>
+        shiftrightunsigned(col("simhash"), c * width).bitwiseAND(lit(mask))): _*))
+        .as(Seq("chunk", "chunk_val")))
+    val result = DeltaMerge.bucketCandidates(chunks, Seq("chunk", "chunk_val"),
+        Seq("s"), maxBucket, (_, _) => lit(true))
       .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("a"), col("b"), col("hamming"))
@@ -481,12 +358,17 @@ object Dedup {
        |SELECT MIN(doc_id) AS keeper, COUNT(*) AS n_copies
        |FROM all_docs GROUP BY sha256(text)""".stripMargin
 
-  def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame = {
+  def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
+    minhashPairs(signedCorpus(spark, sfDir), "doc_id", "text")
+
+  /** The planted minhash demo corpus, with its signature fixture
+    * exported (once per JVM per corpus). */
+  private def signedCorpus(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = withPlantedNearDups(Tables.documents(spark, sfDir), 25, mutate = true)
     exportFixture(s"minhash:$sfDir", MinhashSigExportPath) {
       minhashSignatures(corpus, "doc_id", "text", numPerms = 64, shingleWidth = 3)
     }
-    minhashPairs(corpus, "doc_id", "text")
+    corpus
   }
 
   /** Delta split for the demo merge: the planted recrawl copies plus
@@ -507,47 +389,24 @@ object Dedup {
   /** `dedup_minhash_delta`: merge-time near-dedup of a new crawl
     * against the resident base signature table — the signatures are
     * READ BACK from the exported store (never recomputed for base
-    * docs), only delta docs are signed, and the band join probes with
-    * the delta side. Output = the delta-touching pair report with its
+    * docs) and only delta docs are signed ([[minhashPairsDelta]]).
+    * Output = the delta-touching pair report with its
     * `leg` label; equals [[dedupMinhash]] restricted to delta-touching
     * pairs by construction (spec-checked across splits). */
   def dedupMinhashDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = withPlantedNearDups(Tables.documents(spark, sfDir), 25, mutate = true)
-    exportFixture(s"minhash:$sfDir", MinhashSigExportPath) {
-      minhashSignatures(corpus, "doc_id", "text", numPerms = 64, shingleWidth = 3)
-    }
+    val corpus = signedCorpus(spark, sfDir)
     val baseSigs = spark.read.parquet(MinhashSigExportPath)
       .filter(!deltaSplit(col("id")))
     val delta = corpus.filter(deltaSplit(col("doc_id")))
-    val pairs = minhashPairsDelta(baseSigs, delta, corpus, "doc_id", "text")
     // stage the (already materialized) pair report ONCE per JVM: the
     // write is pair-report-sized, and it is what lets the staged
     // apply/compact twins price a merge's real marginal cost
-    graft.FixtureExport.ensure(s"minhash-delta-pairs:$sfDir", MinhashDeltaPairsExportPath) {
-      pairs.coalesce(1).write.mode("overwrite").parquet(MinhashDeltaPairsExportPath)
-    }
-    pairs
+    MinhashReport.stage(sfDir,
+      minhashPairsDelta(baseSigs, delta, corpus, "doc_id", "text"))
   }
 
-  /** The staged pair report, running the delta chain first only if
-    * this JVM has not staged it yet (nested ensure — reentrant). */
-  private def stagedDeltaPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.FixtureExport.ensure(s"minhash-delta-pairs:$sfDir", MinhashDeltaPairsExportPath) {
-      dedupMinhashDelta(spark, sfDir)
-      ()
-    }
-    spark.read.parquet(MinhashDeltaPairsExportPath)
-  }
-
-  /** The merge drop policy over a pair report: `delta_delta` keeps the
-    * lower id, `delta_base` keeps the base copy. Shared by the in-plan
-    * and staged apply/compact forms. */
-  private def deltaDrops(pairs: DataFrame, outCol: String): DataFrame =
-    pairs.select(
-        when(col("leg") === "delta_delta", col("b"))
-          .otherwise(when(deltaSplit(col("a")), col("a")).otherwise(col("b")))
-          .as(outCol))
-      .distinct()
+  private val MinhashReport = new DeltaMerge.PairReport("minhash-delta-pairs",
+    MinhashDeltaPairsExportPath, dedupMinhashDelta)
 
   /** Oracle: the [[dedupMinhashSql]] chain restricted to delta-touching
     * candidate pairs, with the same signature fixture as the resident
@@ -598,31 +457,24 @@ object Dedup {
     * every pair already carries its verify). The base is NEVER
     * re-filtered: only delta docs are admitted or dropped, so the
     * entry's output is delta-sized. */
-  def dedupMinhashDeltaApply(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = withPlantedNearDups(Tables.documents(spark, sfDir), 25, mutate = true)
-    val drops = deltaDrops(dedupMinhashDelta(spark, sfDir), "doc_id")
-    corpus.filter(deltaSplit(col("doc_id")))
-      .join(drops, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), length(col("text")).as("n_chars"))
-  }
+  def dedupMinhashDeltaApply(spark: SparkSession, sfDir: String): DataFrame =
+    minhashApplyFrom(spark, sfDir, dedupMinhashDelta(spark, sfDir))
 
-  /**
-   * `dedup_minhash_apply_staged`: the SAME merge verdict as
-   * [[dedupMinhashDeltaApply]], routed off the STAGED pair report
-   * instead of re-running the sign→band→verify chain — what a
-   * production pipeline actually pays per merge once the delta pass
-   * has run (r10 VERDICT #4: the in-plan trilogy re-priced one chain
-   * 1×/2×/3× by the fixture-honesty rule; these twins show the
-   * marginal cost, the in-plan forms stay as the recompute
-   * cross-check). Spec-asserted verdict-identical to the in-plan
-   * form. Scale posture: one pair-report read (KBs), a broadcast
-   * anti-join of the delta slice against the pair-bounded drop set.
-   */
-  def dedupMinhashApplyStaged(spark: SparkSession, sfDir: String): DataFrame = {
+  /** `dedup_minhash_apply_staged`: the SAME merge verdict routed off
+    * the STAGED pair report instead of re-running the
+    * sign→band→verify chain — what a pipeline pays per merge once the
+    * delta pass has run; the in-plan form stays as the recompute
+    * cross-check (spec-asserted verdict-identical). */
+  def dedupMinhashApplyStaged(spark: SparkSession, sfDir: String): DataFrame =
+    minhashApplyFrom(spark, sfDir, MinhashReport.staged(spark, sfDir))
+
+  /** The merge verdict over either pair source: the delta slice
+    * anti-joined against the pair-bounded (broadcast) drop set. */
+  private def minhashApplyFrom(spark: SparkSession, sfDir: String,
+      pairs: DataFrame): DataFrame = {
     val corpus = withPlantedNearDups(Tables.documents(spark, sfDir), 25, mutate = true)
-    val drops = deltaDrops(stagedDeltaPairs(spark, sfDir), "doc_id")
     corpus.filter(deltaSplit(col("doc_id")))
-      .join(broadcast(drops), Seq("doc_id"), "left_anti")
+      .join(broadcast(DeltaMerge.drops(pairs, deltaSplit, "doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), length(col("text")).as("n_chars"))
   }
 
@@ -677,7 +529,7 @@ object Dedup {
   def dedupMinhashCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = withPlantedNearDups(Tables.documents(spark, sfDir), 25, mutate = true)
     // also ensures the fixture export
-    val drops = deltaDrops(dedupMinhashDelta(spark, sfDir), "id")
+    val drops = DeltaMerge.drops(dedupMinhashDelta(spark, sfDir), deltaSplit, "id")
     val baseSigs = spark.read.parquet(MinhashSigExportPath)
       .filter(!deltaSplit(col("id")))
       .select(col("id"), col("sig"))
@@ -718,7 +570,7 @@ object Dedup {
    * scan minus a broadcast pair-bounded drop set — zero text passes.
    */
   def dedupMinhashCompactStaged(spark: SparkSession, sfDir: String): DataFrame = {
-    val drops = deltaDrops(stagedDeltaPairs(spark, sfDir), "id")
+    val drops = DeltaMerge.drops(MinhashReport.staged(spark, sfDir), deltaSplit, "id")
     // drops ⊆ delta ids by the policy, so all-minus-drops = base ∪ admitted
     spark.read.parquet(MinhashSigExportPath)
       .join(broadcast(drops), Seq("id"), "left_anti")

@@ -73,10 +73,7 @@ object SemDedup {
 
   private def exportCentroids(spark: SparkSession, key: String,
       cents: Array[Array[Float]]): Unit =
-    graft.FixtureExport.ensure(key, SemCentroidExportPath) {
-      IvfSearch.centroidsDf(spark, cents)
-        .coalesce(1).write.mode("overwrite").parquet(SemCentroidExportPath)
-    }
+    Dedup.exportFixture(key, SemCentroidExportPath)(IvfSearch.centroidsDf(spark, cents))
 
   /**
    * Per-vector home cell + centroid similarity in ONE map-side
@@ -350,6 +347,35 @@ object SemDedup {
   val SemDeltaPairsExportPath =
     graft.FixturePaths.fixture("semdelta_pairs.parquet")
 
+  /** The merge-time corpus split + frozen models the delta family and
+    * its live intake twin ([[graft.streaming.StreamingSemanticNearDup]])
+    * share: the already-deduped resident base, the arriving delta, and
+    * the base-fitted centroids (memoized — every caller sees the same
+    * frozen fit). */
+  private[graft] def deltaParts(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame, Array[Array[Float]]) = {
+    val corpus = semCorpus(spark, sfDir)
+    val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
+    val base = corpus.filter(!isDelta)
+    val delta = corpus.filter(isDelta)
+    val sd = graft.config.GraftConfig.active.semdedup
+    val c = resolveCells(IvfSearch.memoCount(base, s"semdelta:$sfDir"), sd)
+    (base, delta, IvfSearch.fitCentroids(base, c, Some(s"semdelta:$sfDir")))
+  }
+
+  /** [[deltaParts]] with its frozen model staged for the oracles: the
+    * centroids and the resident base assignment, once per JVM per
+    * (corpus, cells) — a restage when another corpus staged them last. */
+  private def stagedDeltaParts(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame, Array[Array[Float]]) = {
+    val parts @ (base, _, cents) = deltaParts(spark, sfDir)
+    val key = s"semdelta:$sfDir|c=${cents.length}"
+    Dedup.exportFixture(key, SemDeltaCentroidExportPath)(IvfSearch.centroidsDf(spark, cents))
+    Dedup.exportFixture(key, SemDeltaAssignExportPath)(
+      assignWithCentSim(base, cents).select(col("vec_id"), col("cell")))
+    parts
+  }
+
   /**
    * `dedup_semantic_delta`: SemDeDup for CORPUS MERGES — the semantic
    * counterpart of [[Dedup.minhashPairsDelta]]'s discipline, closing
@@ -373,90 +399,43 @@ object SemDedup {
    * with a crawl-sized delta side; the quadratic term is bounded by
    * the cell guard; verify is candidate-bounded.
    */
-  /** The merge-time corpus split + frozen models the delta family and
-    * its live intake twin ([[graft.streaming.StreamingSemanticNearDup]])
-    * share: the already-deduped resident base, the arriving delta, and
-    * the base-fitted centroids (memoized — every caller sees the same
-    * frozen fit). */
-  private[graft] def deltaParts(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, Array[Array[Float]]) = {
-    val corpus = semCorpus(spark, sfDir)
-    val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
-    val base = corpus.filter(!isDelta)
-    val delta = corpus.filter(isDelta)
-    val sd = graft.config.GraftConfig.active.semdedup
-    val c = resolveCells(IvfSearch.memoCount(base, s"semdelta:$sfDir"), sd)
-    (base, delta, IvfSearch.fitCentroids(base, c, Some(s"semdelta:$sfDir")))
-  }
-
   def dedupSemanticDelta(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = semCorpus(spark, sfDir)
-    val (base, delta, cents) = deltaParts(spark, sfDir)
+    val (_, delta, cents) = stagedDeltaParts(spark, sfDir)
     val sd = graft.config.GraftConfig.active.semdedup
-    val c = cents.length
-    graft.FixtureExport.ensure(s"semdelta:$sfDir|c=$c", SemDeltaCentroidExportPath) {
-      IvfSearch.centroidsDf(spark, cents)
-        .coalesce(1).write.mode("overwrite").parquet(SemDeltaCentroidExportPath)
-    }
-    graft.FixtureExport.ensure(s"semdelta:$sfDir|c=$c", SemDeltaAssignExportPath) {
-      assignWithCentSim(base, cents).select(col("vec_id"), col("cell"))
-        .coalesce(1).write.mode("overwrite").parquet(SemDeltaAssignExportPath)
-    }
     val baseAssign = spark.read.parquet(SemDeltaAssignExportPath)
     val deltaAssign = assignWithCentSim(delta, cents).select(col("vec_id"), col("cell"))
-    val pairs = semanticPairsDelta(baseAssign, deltaAssign, corpus,
-      tau = SemTau, maxCell = sd.maxCell)
     // stage the (already materialized) pair report ONCE per JVM — the
     // read the staged apply/compact twins route off
-    graft.FixtureExport.ensure(s"semdelta-pairs:$sfDir", SemDeltaPairsExportPath) {
-      pairs.coalesce(1).write.mode("overwrite").parquet(SemDeltaPairsExportPath)
-    }
-    pairs
+    SemReport.stage(sfDir, semanticPairsDelta(baseAssign, deltaAssign, corpus,
+      tau = SemTau, maxCell = sd.maxCell))
   }
 
-  /** The staged pair report, running the delta chain first only if
-    * this JVM has not staged it yet (nested ensure — reentrant). */
-  private def stagedSemPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.FixtureExport.ensure(s"semdelta-pairs:$sfDir", SemDeltaPairsExportPath) {
-      dedupSemanticDelta(spark, sfDir)
-      ()
-    }
-    spark.read.parquet(SemDeltaPairsExportPath)
-  }
-
-  /** The merge drop policy over a pair report: `delta_delta` keeps
-    * the lower id, `delta_base` keeps the base copy. */
-  private def semDrops(pairs: DataFrame): DataFrame =
-    pairs.select(
-        when(col("leg") === "delta_delta", col("b"))
-          .otherwise(when(isDeltaId(col("a")), col("a")).otherwise(col("b")))
-          .as("vec_id"))
-      .distinct()
+  private val SemReport = new DeltaMerge.PairReport("semdelta-pairs",
+    SemDeltaPairsExportPath, dedupSemanticDelta)
 
   /** Frame-level core of [[dedupSemanticDelta]] (resident base
     * assignment, freshly-assigned delta, and the embedding fetch side
     * injectable — the spec's handle for the equals-full-run-restricted
     * property across carves).
     *
-    * PRECONDITION: `deltaAssign` must carry UNIQUE vec_ids (one row
-    * per vector — an assignment is one row per vec_id by
-    * construction). The delta-id table is used un-deduplicated, so a
-    * duplicated id would duplicate output pairs through the `leg`
-    * LEFT joins; same contract as
-    * [[graft.dedup.Dedup.minhashPairsDelta]]. */
+    * PRECONDITION: `baseAssign` and `deltaAssign` must carry UNIQUE,
+    * disjoint vec_ids (an assignment is one row per vec_id by
+    * construction): delta membership rides the union's provenance tag,
+    * so an id on both sides would be treated as two vectors; same
+    * contract as [[graft.dedup.Dedup.minhashPairsDelta]]. */
   private[graft] def semanticPairsDelta(baseAssign: DataFrame,
       deltaAssign: DataFrame, corpus: DataFrame,
       tau: Double, maxCell: Int): DataFrame = {
-    val allAssign = baseAssign.select(col("vec_id"), col("cell"))
-      .unionByName(deltaAssign.select(col("vec_id"), col("cell")))
-    // guarded is CACHED (released below with the other intermediates)
-    // for two reasons: it feeds BOTH sides of the probe self-join, so
-    // the union + guard otherwise computes twice; and the
-    // InMemoryRelation leaf keeps the self-join's constraint
-    // propagation away from the union subtree — Spark 4.1's
-    // UnionBase.rewriteConstraints trips on a child constraint
-    // referencing a pruned-away upstream attribute when the union is
-    // self-joined through DeduplicateRelations (observed as
+    val allAssign = baseAssign.select(col("vec_id"), col("cell"), lit(0).as("d"))
+      .unionByName(deltaAssign.select(col("vec_id"), col("cell"), lit(1).as("d")))
+    // guarded is CACHED (released by the verify tail) for two reasons:
+    // it feeds BOTH sides of the probe self-join, so the union + guard
+    // otherwise computes twice; and the InMemoryRelation leaf keeps the
+    // self-join's constraint propagation away from the union subtree —
+    // Spark 4.1's UnionBase.rewriteConstraints trips on a child
+    // constraint referencing a pruned-away upstream attribute when the
+    // union is self-joined through DeduplicateRelations (observed as
     // `key not found: source#N` with a CASE-planted corpus under it).
     // The guard stays a count WINDOW (the semanticEdges single-pass
     // rationale: few large cell groups, expensive uncached input).
@@ -464,50 +443,25 @@ object SemDedup {
     val guarded = allAssign
       .withColumn("csz", count(lit(1)).over(wCell))
       .filter(col("csz") <= maxCell)
-      .select(col("vec_id"), col("cell"))
+      .select(col("vec_id"), col("cell"), col("d"))
       .cache()
-    // one row per delta vector by construction (every caller passes an
-    // assignment, which is one row per vec_id) — no distinct needed,
-    // and dropping it removes a shuffle+aggregate pair (guide §2.4:
-    // "a distinct on data that is already unique")
-    val deltaIds = deltaAssign.select(col("vec_id")).cache()
-    val deltaGuarded = guarded.join(deltaIds, Seq("vec_id"), "left_semi")
-    // one probe join covers both legs; least/greatest orients pairs
-    // (a delta×delta pair arrives in both directions — distinct folds it)
-    val cands = deltaGuarded.as("x").join(guarded.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") =!= col("y.vec_id"))
-      .select(least(col("x.vec_id"), col("y.vec_id")).as("a"),
-        greatest(col("x.vec_id"), col("y.vec_id")).as("b"))
+    // one probe join covers both legs: the delta side (the union's
+    // d = 1 tag — no id join) probes the whole guarded table; pairs are
+    // oriented a < b with their tags, and distinct folds a delta×delta
+    // pair arriving in both directions
+    val (x, y) = (col("x.vec_id"), col("y.vec_id"))
+    val cands = guarded.filter(col("d") === 1).as("x").join(guarded.as("y"),
+        col("x.cell") === col("y.cell") && x =!= y)
+      .select(least(x, y).as("a"), greatest(x, y).as("b"),
+        when(x < y, col("x.d")).otherwise(col("y.d")).as("da"),
+        when(x < y, col("y.d")).otherwise(col("x.d")).as("db"))
       .distinct()
-      .cache()
-    val candIds = cands.select(col("a").as("vec_id"))
-      .unionByName(cands.select(col("b").as("vec_id"))).distinct()
-    // CACHED (candidate-bounded, released below): the embedding fetch
-    // feeds BOTH endpoint joins (ea and eb), and the a-side/b-side
-    // exchanges hash on different keys so nothing is reused — uncached,
-    // the corpus scan + semi-join subtree evaluated twice per pass
-    // (guide §1.2: don't compute things twice)
-    val vecs = corpus.join(candIds, Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("embedding"))
-      .cache()
-    val dFlag = deltaIds.withColumn("__d", lit(1))
-    val result = cands
-      .join(vecs.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-      .join(vecs.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .withColumn("cos", round(vec_cosine(col("ea"), col("eb")), 4))
-      .filter(col("cos") >= tau)
-      .join(dFlag.select(col("vec_id").as("a"), col("__d").as("da")), Seq("a"), "left")
-      .join(dFlag.select(col("vec_id").as("b"), col("__d").as("db")), Seq("b"), "left")
-      .select(col("a"), col("b"), col("cos"),
-        when(col("da").isNotNull && col("db").isNotNull, "delta_delta")
-          .otherwise("delta_base").as("leg"))
-      .cache()
-    result.count() // materialize the (small) pair list, release intermediates
-    guarded.unpersist()
-    deltaIds.unpersist()
-    cands.unpersist()
-    vecs.unpersist()
-    result
+    // the embedding fetch is candidate-bounded
+    val fetchVecs = (ids: DataFrame) => corpus
+      .join(ids.select(col("id").as("vec_id")), Seq("vec_id"), "left_semi")
+      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    DeltaMerge.verifiedPairs(cands, fetchVecs,
+      (ea, eb) => round(vec_cosine(ea, eb), 4), _ >= tau, _.as("cos"), Seq(guarded))
   }
 
   /**
@@ -519,32 +473,35 @@ object SemDedup {
    * delta — the rows a merge would actually admit — with the
    * embedding dimension as the hashable payload stand-in.
    */
-  def dedupSemanticDeltaApply(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = semCorpus(spark, sfDir)
-    val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
-    val drops = semDrops(dedupSemanticDelta(spark, sfDir))
-    corpus.filter(isDelta)
-      .join(drops, Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), size(col("embedding")).as("n_dims"))
-  }
+  def dedupSemanticDeltaApply(spark: SparkSession, sfDir: String): DataFrame =
+    semApplyFrom(spark, sfDir, dedupSemanticDelta(spark, sfDir))
 
-  /**
-   * `dedup_semantic_apply_staged`: the SAME admit decision as
-   * [[dedupSemanticDeltaApply]], routed off the STAGED pair report —
-   * a pipeline's real per-merge marginal cost once the delta pass has
-   * run (r10 VERDICT #4; the in-plan form stays as the recompute
-   * cross-check). Spec-asserted verdict-identical. Scale posture: one
-   * pair-report read, broadcast anti-join of the crawl-sized delta
-   * against the pair-bounded drop set — no assignment, no cell join.
-   */
-  def dedupSemanticApplyStaged(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = semCorpus(spark, sfDir)
-    val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
-    val drops = semDrops(stagedSemPairs(spark, sfDir))
-    corpus.filter(isDelta)
-      .join(broadcast(drops), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), size(col("embedding")).as("n_dims"))
-  }
+  /** `dedup_semantic_apply_staged`: the SAME admit decision routed off
+    * the STAGED pair report — a pipeline's real per-merge marginal cost
+    * once the delta pass has run (the in-plan form stays as the
+    * recompute cross-check; spec-asserted verdict-identical): no
+    * assignment, no cell join. */
+  def dedupSemanticApplyStaged(spark: SparkSession, sfDir: String): DataFrame =
+    semApplyFrom(spark, sfDir, SemReport.staged(spark, sfDir))
+
+  private def semApplyFrom(spark: SparkSession, sfDir: String,
+      pairs: DataFrame): DataFrame =
+    admittedFrom(spark, sfDir, pairs).select(col("vec_id"), size(col("embedding")).as("n_dims"))
+
+  /** The delta rows `(vec_id, embedding)` a merge admits over either
+    * pair source: the delta slice anti-joined against the pair-bounded
+    * (broadcast) drop set. */
+  private def admittedFrom(spark: SparkSession, sfDir: String,
+      pairs: DataFrame): DataFrame =
+    semCorpus(spark, sfDir).filter(Dedup.deltaSplit(col("vec_id")))
+      .join(broadcast(DeltaMerge.drops(pairs, Dedup.deltaSplit, "vec_id")),
+        Seq("vec_id"), "left_anti")
+
+  /** The post-merge corpus over either pair source: the base snapshot
+    * ∪ the admitted delta. */
+  private def mergedFrom(spark: SparkSession, sfDir: String, pairs: DataFrame): DataFrame =
+    semCorpus(spark, sfDir).filter(!Dedup.deltaSplit(col("vec_id")))
+      .unionByName(admittedFrom(spark, sfDir, pairs))
 
   /** Oracle: the identical drop policy over the STAGED pair parquet —
     * no chain CTEs (that absence is the point). */
@@ -561,9 +518,6 @@ object SemDedup {
        |WHERE (${dPred("e.vec_id")})
        |  AND e.vec_id NOT IN (SELECT id FROM drops)""".stripMargin
   }
-
-  private def isDeltaId(id: org.apache.spark.sql.Column) =
-    graft.Carves.deltaSplit(id, Dedup.PlantOffset)
 
   /** Oracle: the delta chain (as a nested-WITH CTE) + the same
     * keep-the-base / keep-lower-id drop policy, anti-joined against
@@ -599,31 +553,34 @@ object SemDedup {
    * delta chain it consumes, so the bench prices the full production
    * round (sign/assign → pair → admit → fold), not a memoized slice.
    */
-  def dedupSemanticCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = semCorpus(spark, sfDir)
-    val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
-    // the full in-plan delta chain runs here (fixture-honesty: the
-    // bench prices sign/assign → pair → admit → fold); the admit
-    // decision is applied as an anti-join against the PAIR-BOUNDED
-    // drop set — the same policy the apply entry emits, without
-    // re-deriving the delta corpus slice through the apply subtree a
-    // second time (r15: the semi-join against the apply output re-ran
-    // the corpus scan + anti-join inside this entry's plan; values are
-    // identical because the fresh assignment covers exactly the delta
-    // ids, so delta ∖ drops == admitted). Broadcast is safe at recrawl
-    // scale precisely because drops is pair-bounded, never delta-sized
-    // (the multimodal compact / SemDedup.scala:614 discipline).
-    val drops = semDrops(dedupSemanticDelta(spark, sfDir))
-    val baseAssign = spark.read.parquet(SemDeltaAssignExportPath)
+  def dedupSemanticCompact(spark: SparkSession, sfDir: String): DataFrame =
+    semCompactFrom(spark, sfDir, dedupSemanticDelta(spark, sfDir))
+
+  /** `dedup_semantic_compact_staged`: the same fold off the STAGED pair
+    * report — the production per-merge cost: resident base assignment
+    * carried from the fixture, drops read from the staged pairs, and ONE
+    * map-only frozen-centroid assignment of the admitted delta rows (the
+    * only corpus-touching work, and it is delta-sized). Spec-asserted
+    * verdict-identical to the in-plan recompute. */
+  def dedupSemanticCompactStaged(spark: SparkSession, sfDir: String): DataFrame =
+    semCompactFrom(spark, sfDir, SemReport.staged(spark, sfDir))
+
+  /** The fold over either pair source. The admit decision is an
+    * anti-join against the PAIR-BOUNDED drop set — the policy the apply
+    * entry emits, without re-deriving the delta slice through the apply
+    * subtree (values are identical because the fresh assignment covers
+    * exactly the delta ids, so delta ∖ drops == admitted); broadcast is
+    * safe at recrawl scale because drops is never delta-sized. */
+  private def semCompactFrom(spark: SparkSession, sfDir: String,
+      pairs: DataFrame): DataFrame = {
+    val (_, delta, cents) = deltaParts(spark, sfDir)
+    val carried = spark.read.parquet(SemDeltaAssignExportPath)
       .select(col("vec_id"), col("cell"), lit("carried").as("src"))
-    val base = corpus.filter(!isDelta)
-    val sd = graft.config.GraftConfig.active.semdedup
-    val c = resolveCells(IvfSearch.memoCount(base, s"semdelta:$sfDir"), sd)
-    val cents = IvfSearch.fitCentroids(base, c, Some(s"semdelta:$sfDir"))
-    val fresh = assignWithCentSim(corpus.filter(isDelta), cents)
-      .join(broadcast(drops), Seq("vec_id"), "left_anti")
+    val fresh = assignWithCentSim(delta, cents)
+      .join(broadcast(DeltaMerge.drops(pairs, Dedup.deltaSplit, "vec_id")),
+        Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"), lit("fresh").as("src"))
-    baseAssign.unionByName(fresh)
+    carried.unionByName(fresh)
   }
 
   /** Oracle: resident base assignment carried verbatim + the admitted
@@ -649,32 +606,6 @@ object SemDedup {
        |UNION ALL
        |SELECT da.vec_id, da.cell, 'fresh' AS src
        |FROM delta_assign da JOIN adm ON adm.vec_id = da.vec_id""".stripMargin
-
-  /**
-   * `dedup_semantic_compact_staged`: fold the admitted delta into the
-   * resident semantic state off the STAGED pair report — the
-   * production per-merge cost: resident base assignment carried from
-   * the fixture, drops read from the staged pairs, and ONE map-only
-   * frozen-centroid assignment of the admitted delta rows (the only
-   * corpus-touching work, and it is delta-sized). The in-plan
-   * [[dedupSemanticCompact]] stays as the full-chain recompute
-   * cross-check. Spec-asserted verdict-identical.
-   */
-  def dedupSemanticCompactStaged(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = semCorpus(spark, sfDir)
-    val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
-    val drops = semDrops(stagedSemPairs(spark, sfDir))
-    val baseAssign = spark.read.parquet(SemDeltaAssignExportPath)
-      .select(col("vec_id"), col("cell"), lit("carried").as("src"))
-    val base = corpus.filter(!isDelta)
-    val sd = graft.config.GraftConfig.active.semdedup
-    val c = resolveCells(IvfSearch.memoCount(base, s"semdelta:$sfDir"), sd)
-    val cents = IvfSearch.fitCentroids(base, c, Some(s"semdelta:$sfDir"))
-    val fresh = assignWithCentSim(corpus.filter(isDelta), cents)
-      .join(broadcast(drops), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("cell"), lit("fresh").as("src"))
-    baseAssign.unionByName(fresh)
-  }
 
   /** Oracle: carried base fixture + frozen-centroid assignment of the
     * delta restricted to the staged-report survivors. */
@@ -802,12 +733,7 @@ object SemDedup {
   private def mergedCorpusWithCount(spark: SparkSession, sfDir: String): (DataFrame, Long) =
     mergedCache.synchronized {
       mergedCache.getOrElseUpdate((sessionKey(spark), sfDir), {
-        val corpus = semCorpus(spark, sfDir)
-        val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
-        val admitted = dedupSemanticDeltaApply(spark, sfDir).select(col("vec_id"))
-        val df = corpus.filter(!isDelta)
-          .unionByName(corpus.filter(isDelta).join(admitted, Seq("vec_id"), "left_semi"))
-          .localCheckpoint()
+        val df = mergedFrom(spark, sfDir, dedupSemanticDelta(spark, sfDir)).localCheckpoint()
         (df, df.count())
       })
     }
@@ -849,10 +775,8 @@ object SemDedup {
     val sd = graft.config.GraftConfig.active.semdedup
     val cR = resolveCells(nMerged, sd)
     val cents = IvfSearch.fitCentroids(merged, cR, Some(s"semrefit:$sfDir"))
-    graft.FixtureExport.ensure(s"semrefit:$sfDir|c=$cR", SemRefitCentroidExportPath) {
-      IvfSearch.centroidsDf(spark, cents)
-        .coalesce(1).write.mode("overwrite").parquet(SemRefitCentroidExportPath)
-    }
+    Dedup.exportFixture(s"semrefit:$sfDir|c=$cR", SemRefitCentroidExportPath)(
+      IvfSearch.centroidsDf(spark, cents))
     cents
   }
 
@@ -868,16 +792,10 @@ object SemDedup {
     // dedupSemanticCompact (profiled: 89 jobs → the compact subtree was
     // 74 of them). Row-for-row the same (vec_id, cell) table; the
     // `dedup_semantic_compact` ENTRY keeps its full in-plan recompute.
-    val (baseCorpus, _, frozenCents) = deltaParts(spark, sfDir)
-    // keep the fixture current for THIS sfDir before the direct read
-    // (per-(JVM, key) ensure — a no-op when already staged, a restage
-    // when another corpus dir staged it last; the delta entry's exact
-    // keys, so the two paths can never disagree about the fixture)
-    graft.FixtureExport.ensure(s"semdelta:$sfDir|c=${frozenCents.length}",
-        SemDeltaAssignExportPath) {
-      assignWithCentSim(baseCorpus, frozenCents).select(col("vec_id"), col("cell"))
-        .coalesce(1).write.mode("overwrite").parquet(SemDeltaAssignExportPath)
-    }
+    // the fixtures are kept current for THIS sfDir before the direct
+    // read, under the delta entry's exact keys — the two paths can
+    // never disagree about them
+    val (_, _, frozenCents) = stagedDeltaParts(spark, sfDir)
     val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
     val frozen = spark.read.parquet(SemDeltaAssignExportPath)
       .select(col("vec_id"), col("cell"))
@@ -1068,14 +986,8 @@ object SemDedup {
     * (spec-asserted). This is the refresh family's marginal-cost
     * input: what a pipeline that already ran the per-merge staged
     * twins actually pays to open the refresh round. */
-  private[graft] def mergedCorpusStaged(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpus = semCorpus(spark, sfDir)
-    val isDelta = graft.Carves.deltaSplit(col("vec_id"), Dedup.PlantOffset)
-    val drops = semDrops(stagedSemPairs(spark, sfDir))
-    corpus.filter(!isDelta)
-      .unionByName(corpus.filter(isDelta)
-        .join(broadcast(drops), Seq("vec_id"), "left_anti"))
-  }
+  private[graft] def mergedCorpusStaged(spark: SparkSession, sfDir: String): DataFrame =
+    mergedFrom(spark, sfDir, SemReport.staged(spark, sfDir))
 
   /**
    * `dedup_semantic_refit_staged`: the refresh round's fidelity report

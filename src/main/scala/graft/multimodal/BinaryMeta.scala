@@ -414,63 +414,42 @@ object BinaryMeta {
    * are fetched only for candidate ids.
    */
   def multimodalNeardupDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val media = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), mediaPlant.as("media"))
-    val e = embedStubCentered(media)
-      .select(col("doc_id").as("vec_id"), col("embedding"))
-    val isDelta = col("vec_id") % graft.Carves.DeltaMod === 0
-    val base = e.filter(!isDelta)
-    val delta = e.filter(isDelta)
-    val cells = graft.query.IvfSearch.scaledCells(
-      graft.query.IvfSearch.memoCount(base, s"mmdelta:$sfDir"))
-    val cents = graft.query.IvfSearch.fitCentroids(
-      base, cells, Some(s"mmdelta:$cells:$sfDir"))
-    graft.FixtureExport.ensure(s"mmdelta:$sfDir|c=$cells", MmDeltaCentroidExportPath) {
-      graft.query.IvfSearch.centroidsDf(spark, cents)
-        .coalesce(1).write.mode("overwrite").parquet(MmDeltaCentroidExportPath)
-    }
-    graft.FixtureExport.ensure(s"mmdelta:$sfDir|c=$cells", MmDeltaAssignExportPath) {
-      graft.dedup.SemDedup.assignWithCentSim(base, cents)
-        .select(col("vec_id"), col("cell"))
-        .coalesce(1).write.mode("overwrite").parquet(MmDeltaAssignExportPath)
-    }
+    val (e, base, delta, cents) = mmDeltaParts(spark, sfDir)
+    val key = s"mmdelta:$sfDir|c=${cents.length}"
+    graft.dedup.Dedup.exportFixture(key, MmDeltaCentroidExportPath)(
+      graft.query.IvfSearch.centroidsDf(spark, cents))
+    graft.dedup.Dedup.exportFixture(key, MmDeltaAssignExportPath)(
+      graft.dedup.SemDedup.assignWithCentSim(base, cents).select(col("vec_id"), col("cell")))
     val baseAssign = spark.read.parquet(MmDeltaAssignExportPath)
     val deltaAssign = graft.dedup.SemDedup.assignWithCentSim(delta, cents)
       .select(col("vec_id"), col("cell"))
-    val pairs = graft.dedup.SemDedup.semanticPairsDelta(baseAssign, deltaAssign, e,
-      tau = MmDeltaTau,
-      maxCell = graft.config.GraftConfig.active.semdedup.maxCell)
     // stage the (already materialized) pair report ONCE per JVM — the
     // read the staged apply/compact twins route off
-    graft.FixtureExport.ensure(s"mmdelta-pairs:$sfDir", MmDeltaPairsExportPath) {
-      pairs.coalesce(1).write.mode("overwrite").parquet(MmDeltaPairsExportPath)
-    }
-    pairs
+    MmReport.stage(sfDir, graft.dedup.SemDedup.semanticPairsDelta(baseAssign, deltaAssign, e,
+      tau = MmDeltaTau,
+      maxCell = graft.config.GraftConfig.active.semdedup.maxCell))
   }
 
-  /** The staged pair report, running the delta chain first only if
-    * this JVM has not staged it yet (nested ensure — reentrant). */
-  private def stagedMmPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.FixtureExport.ensure(s"mmdelta-pairs:$sfDir", MmDeltaPairsExportPath) {
-      multimodalNeardupDelta(spark, sfDir)
-      ()
-    }
-    spark.read.parquet(MmDeltaPairsExportPath)
-  }
+  private val MmReport = new graft.dedup.DeltaMerge.PairReport("mmdelta-pairs",
+    MmDeltaPairsExportPath, multimodalNeardupDelta)
 
-  /** The merge drop policy over a multimodal pair report — the
-    * [[graft.dedup.SemDedup]] admit rule: `delta_delta` keeps the
-    * lower id, `delta_base` keeps the base copy. PAIR-BOUNDED (one id
-    * per report row at most), which is what makes its broadcast safe
-    * at recrawl scale — unlike the admitted set, which is delta-sized. */
-  private def mmDrops(pairs: DataFrame): DataFrame = {
-    val isDeltaId = (c: org.apache.spark.sql.Column) =>
-      c % graft.Carves.DeltaMod === 0
-    pairs.select(
-        when(col("leg") === "delta_delta", col("b"))
-          .otherwise(when(isDeltaId(col("a")), col("a")).otherwise(col("b")))
-          .as("doc_id"))
-      .distinct()
+  /** The recrawl carve: every [[graft.Carves.DeltaMod]]-th doc. */
+  private def isRecrawl(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    id % graft.Carves.DeltaMod === 0
+
+  /** The media embedding corpus `(vec_id, embedding)`, its base and
+    * recrawl slices, and the frozen base-fitted centroids (memoized —
+    * the delta entry and both compact forms see the same fit). */
+  private def mmDeltaParts(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame, DataFrame, Array[Array[Float]]) = {
+    val e = embedStubCentered(Tables.documents(spark, sfDir)
+        .select(col("doc_id"), mediaPlant.as("media")))
+      .select(col("doc_id").as("vec_id"), col("embedding"))
+    val base = e.filter(!isRecrawl(col("vec_id")))
+    val cells = graft.query.IvfSearch.scaledCells(
+      graft.query.IvfSearch.memoCount(base, s"mmdelta:$sfDir"))
+    (e, base, e.filter(isRecrawl(col("vec_id"))),
+      graft.query.IvfSearch.fitCentroids(base, cells, Some(s"mmdelta:$cells:$sfDir")))
   }
 
   /**
@@ -485,34 +464,30 @@ object BinaryMeta {
    * drop set broadcasts; one anti-join over the recrawl-sized delta.
    */
   def multimodalNeardupDeltaApply(spark: SparkSession, sfDir: String): DataFrame =
-    mmApplyFrom(spark, sfDir, mmDrops(multimodalNeardupDelta(spark, sfDir)))
+    mmApplyFrom(spark, sfDir, multimodalNeardupDelta(spark, sfDir))
 
   /** The admit decision shared by the in-plan apply and its staged
-    * twin: recrawl delta anti-joined against the pair-bounded drop
-    * set. */
+    * twin: recrawl delta anti-joined against the drop set of either
+    * pair source ([[graft.dedup.DeltaMerge.drops]] — PAIR-BOUNDED, so
+    * its broadcast is safe at recrawl scale, unlike the admitted set,
+    * which is delta-sized). */
   private def mmApplyFrom(spark: SparkSession, sfDir: String,
-      drops: DataFrame): DataFrame = {
+      pairs: DataFrame): DataFrame = {
     val media = Tables.documents(spark, sfDir)
       .select(col("doc_id"), mediaPlant.as("media"))
-    media.filter(col("doc_id") % graft.Carves.DeltaMod === 0)
-      .join(broadcast(drops), Seq("doc_id"), "left_anti")
+    media.filter(isRecrawl(col("doc_id")))
+      .join(broadcast(graft.dedup.DeltaMerge.drops(pairs, isRecrawl, "doc_id")),
+        Seq("doc_id"), "left_anti")
       .select(col("doc_id"),
         octet_length(col("media")).cast("long").as("media_bytes"))
   }
 
-  /**
-   * `multimodal_neardup_apply_staged`: the SAME admit decision as
-   * [[multimodalNeardupDeltaApply]], routed off the STAGED pair
-   * report — a recrawl pipeline's real per-merge marginal cost once
-   * the delta pass has run (the `dedup_semantic_apply_staged`
-   * discipline on the media family; the in-plan form stays as the
-   * recompute cross-check). Spec-asserted verdict-identical. Scale
-   * posture: one pair-report read, broadcast anti-join of the
-   * recrawl-sized delta against the pair-bounded drop set — no
-   * embedding, no assignment, no cell join.
-   */
+  /** `multimodal_neardup_apply_staged`: the SAME admit decision routed
+    * off the STAGED pair report — a recrawl pipeline's per-merge
+    * marginal cost: no embedding, no assignment, no cell join
+    * (spec-asserted verdict-identical to the in-plan form). */
   def multimodalNeardupApplyStaged(spark: SparkSession, sfDir: String): DataFrame =
-    mmApplyFrom(spark, sfDir, mmDrops(stagedMmPairs(spark, sfDir)))
+    mmApplyFrom(spark, sfDir, MmReport.staged(spark, sfDir))
 
   /** Oracle: the identical drop policy over the STAGED pair parquet —
     * no chain CTEs (that absence is the point). */
@@ -565,51 +540,32 @@ object BinaryMeta {
    * delta-sized map-only assignment; the base is never rescanned.
    */
   def multimodalNeardupDeltaCompact(spark: SparkSession, sfDir: String): DataFrame =
-    // the delta entry stages the fixtures this fold carries; its drop
-    // set is PAIR-BOUNDED, so the anti-join broadcast is safe at
-    // recrawl scale (semi-joining the ADMITTED set instead would
-    // broadcast ~the whole recrawl delta — a driver-side build of
-    // billions of ids at a real recrawl; the
-    // `dedup_semantic_compact_staged` anti-join discipline)
-    mmCompactFrom(spark, sfDir, mmDrops(multimodalNeardupDelta(spark, sfDir)))
+    // the delta entry stages the fixtures this fold carries
+    mmCompactFrom(spark, sfDir, multimodalNeardupDelta(spark, sfDir))
 
   /** The fold shared by the in-plan compact and its staged twin:
     * carried base fixture + ONE map-only frozen-centroid assignment
     * of the delta, anti-joined against the pair-bounded drop set
-    * (dropped near-dups never enter the resident state). */
+    * (dropped near-dups never enter the resident state; semi-joining
+    * the ADMITTED set instead would broadcast ~the whole recrawl). */
   private def mmCompactFrom(spark: SparkSession, sfDir: String,
-      drops: DataFrame): DataFrame = {
-    val media = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), mediaPlant.as("media"))
-    val e = embedStubCentered(media)
-      .select(col("doc_id").as("vec_id"), col("embedding"))
-    val isDelta = col("vec_id") % graft.Carves.DeltaMod === 0
-    val base = e.filter(!isDelta)
-    val cells = graft.query.IvfSearch.scaledCells(
-      graft.query.IvfSearch.memoCount(base, s"mmdelta:$sfDir"))
-    val cents = graft.query.IvfSearch.fitCentroids(
-      base, cells, Some(s"mmdelta:$cells:$sfDir"))
+      pairs: DataFrame): DataFrame = {
+    val (_, _, delta, cents) = mmDeltaParts(spark, sfDir)
     val carried = spark.read.parquet(MmDeltaAssignExportPath)
       .select(col("vec_id").as("doc_id"), col("cell"), lit("carried").as("src"))
-    val fresh = graft.dedup.SemDedup.assignWithCentSim(e.filter(isDelta), cents)
-      .join(broadcast(drops.withColumnRenamed("doc_id", "vec_id")),
+    val fresh = graft.dedup.SemDedup.assignWithCentSim(delta, cents)
+      .join(broadcast(graft.dedup.DeltaMerge.drops(pairs, isRecrawl, "vec_id")),
         Seq("vec_id"), "left_anti")
       .select(col("vec_id").as("doc_id"), col("cell"), lit("fresh").as("src"))
     carried.unionByName(fresh)
   }
 
-  /**
-   * `multimodal_neardup_compact_staged`: fold the admitted recrawl
-   * into the resident multimodal state off the STAGED pair report —
-   * the production per-merge cost: carried base assignment from the
-   * fixture, drops read from the staged pairs, and ONE map-only
-   * frozen-centroid assignment of the delta rows (the only
-   * corpus-touching work, and it is delta-sized). The in-plan
-   * [[multimodalNeardupDeltaCompact]] stays as the full-chain
-   * recompute cross-check. Spec-asserted verdict-identical.
-   */
+  /** `multimodal_neardup_compact_staged`: the same fold off the STAGED
+    * pair report — the production per-merge cost, whose only
+    * corpus-touching work is the delta-sized map-only assignment
+    * (spec-asserted verdict-identical to the in-plan recompute). */
   def multimodalNeardupCompactStaged(spark: SparkSession, sfDir: String): DataFrame =
-    mmCompactFrom(spark, sfDir, mmDrops(stagedMmPairs(spark, sfDir)))
+    mmCompactFrom(spark, sfDir, MmReport.staged(spark, sfDir))
 
   /** Oracle: carried base fixture + frozen-centroid assignment of the
     * delta restricted to the staged-report survivors — no chain CTEs. */

@@ -42,20 +42,74 @@ class PlanPostureSpec extends SparkSpecBase {
   }
 
   test("dedup band joins are equi-joins (hash-partitioned), not nested loops") {
-    // the lazy plan (pre-materialization) of the band self-join: build it
-    // directly so the cache/count inside the query entries doesn't hide it
+    // the real plan of the shared bucket kernel over a corpus with one
+    // bucket far above maxBucket: the planted corpus plus 200 verbatim
+    // copies of doc 7, so each of that text's 16 band buckets holds
+    // >= 200 rows against a guard of 20
     import org.apache.spark.sql.functions._
-    val docs = graft.dedup.Dedup.withPlantedNearDups(
-      Tables.documents(spark, sf), 5, mutate = true)
-    val sigs = graft.dedup.Dedup.minhashSignatures(docs, "doc_id", "text", 64, 3)
-    val bands = graft.dedup.Dedup.minhashBands(sigs, 64, 4)
-    val selfJoin = bands.as("x").join(bands.as("y"),
-      col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash") &&
-        col("x.id") < col("y.id"))
-    val p = planOf(selfJoin)
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("BroadcastHashJoin"), s"band join must be an equi-join:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.dedup.{Dedup, DeltaMerge}
+    val maxBucket = 20
+    val hotBase = 900000L
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val hot = docs.filter(col("doc_id") === 7)
+      .select(explode(sequence(lit(hotBase), lit(hotBase + 199))).as("doc_id"), col("text"))
+    val corpus = Dedup.withPlantedNearDups(docs, 5, mutate = true).unionByName(hot)
+    val bands = Dedup.minhashBands(Dedup.minhashSignatures(corpus, "doc_id", "text", 64, 3)
+      .withColumn("d", lit(1)), 64, 4).cache()
+    val cands = DeltaMerge.bucketCandidates(bands, Seq("band", "band_hash"), Seq("d"),
+      maxBucket, (_, _) => lit(true))
+    val got = cands.collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSet
+
+    // the final adaptive plan of the execution that ran
+    val p = planOf(cands)
+    assert(p.contains("== Final Plan =="), p)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"the bucket kernel must stay on equi-joins:\n$p")
+    // every collect_list aggregate reads from the hot-bucket left-anti
+    // join: a bucket over the guard is never assembled into one row
+    def strip(q: SparkPlan): SparkPlan = q match {
+      case a: AdaptiveSparkPlanExec => strip(a.executedPlan)
+      case s: QueryStageExec => strip(s.plan)
+      case other => other
+    }
+    def nodes(q: SparkPlan): Seq[SparkPlan] = { val n = strip(q); n +: n.children.flatMap(nodes) }
+    def input(q: SparkPlan): SparkPlan = strip(q) match {
+      case u: UnaryExecNode => input(u.child)
+      case other => other
+    }
+    val collects = nodes(cands.queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec
+          if a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[CollectList]) => a
+    }
+    assert(collects.nonEmpty, s"no collect_list aggregate in the kernel plan:\n$p")
+    collects.foreach { a =>
+      input(a.child) match {
+        case j: BaseJoinExec =>
+          assert(j.joinType == LeftAnti, s"collect_list reads from a ${j.joinType} join:\n$p")
+        case other =>
+          fail(s"collect_list reads from ${other.nodeName}, not the hot-bucket anti-join:\n$p")
+      }
+    }
+
+    // pairs unchanged: the guarded band self-join, built independently
+    val sized = bands.groupBy("band", "band_hash").agg(count(lit(1)).as("n"))
+    val guarded = bands.join(sized.filter(col("n") <= maxBucket), Seq("band", "band_hash"))
+    val want = guarded.as("x").join(guarded.as("y"),
+        col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash") &&
+          col("x.id") < col("y.id"))
+      .select(col("x.id"), col("y.id")).distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == want, s"only-kernel=${(got -- want).take(5)} only-self-join=${(want -- got).take(5)}")
+    assert(got.nonEmpty, "the planted near-dups must still pair")
+    assert(!got.exists { case (a, b) => a >= hotBase || b >= hotBase || a == 7L || b == 7L },
+      "no member of the hot buckets may pair")
+    bands.unpersist()
   }
 
   test("decontaminate: benchmark n-gram set broadcasts; no cartesian anywhere") {

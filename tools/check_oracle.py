@@ -1,11 +1,15 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [q1,q2,...]
+       python3 tools/check_oracle.py --selftest
 
 Runs each oracle_sql.json entry in DuckDB against the sfDir parquet
 tables, loads the Spark result parquet from verifyOutDir, sorts columns
-by name and rows by value, and compares.
+by name and rows by value, and compares. The optional third argument is
+the same comma-separated name filter as graft.Verify's: only those
+entries are checked, so a filtered Verify run gets a meaningful exit
+status (a filter name with no oracle entry counts as a failure).
 """
 import sys, json, glob, os
 import duckdb
@@ -53,7 +57,7 @@ def selftest() -> int:
     return len(bad)
 
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, only=None) -> int:
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -61,6 +65,11 @@ def main(sf_dir: str, out_dir: str) -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_fail = 0
+    if only is not None:
+        for name in sorted(only - set(oracle)):
+            print(f"FAIL {name}: no oracle entry")
+            n_fail += 1
+        oracle = {k: v for k, v in oracle.items() if k in only}
     for name, sql in sorted(oracle.items()):
         spark_files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not spark_files:
@@ -131,4 +140,7 @@ def main(sf_dir: str, out_dir: str) -> int:
 if __name__ == "__main__":
     if len(sys.argv) == 2 and sys.argv[1] == "--selftest":
         sys.exit(selftest())
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    if len(sys.argv) not in (3, 4):
+        sys.exit(__doc__)
+    only = set(filter(None, sys.argv[3].split(","))) if len(sys.argv) == 4 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], only))
