@@ -18,8 +18,13 @@ object PlanDump {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
+    // the localized eval entries return LocalTableScans; their lazy
+    // plan twins show the shape the production pass actually executes
+    val planOverrides: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
+      "ann_recall_eval" -> (graft.query.AnnQuery.annRecallEvalPlan _),
+      "ann_diagnostics" -> (graft.eval.QueryDiagnostics.annDiagnosticsPlan _))
     for (name <- names.split(",").map(_.trim).filter(_.nonEmpty)) {
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val df = planOverrides.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val w = new java.io.PrintWriter(s"$outDir/${name}_$suffix.txt")

@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
- * Corpus-assembly scale probe (diagnostic main, like ExplainMain):
+ * Corpus-assembly scale probe (diagnostic main, like PlanDump):
  * 500k docs x 5 strata in /tmp, scalable paths vs windowed twins.
  * Measured (local[32], warm): the bounded data_mix BEATS the full
  * window (1.6s vs 2.7s); bounded sampling and bucketed seq_pack pay

@@ -689,69 +689,15 @@ object SemDedup {
   // Caveat: localCheckpoint blocks are NOT recomputable on executor
   // loss (unlike cache()); acceptable here because the corpus is
   // fixture-derived and a lost block just means re-running the entry.
-  // Keyed by a per-session UUID (a String), NOT by the SparkSession
-  // itself: a WeakHashMap[SparkSession, DataFrame] defeats its own
-  // weak keying because the memoized DataFrame strongly references its
-  // session, so entries (and their pinned localCheckpoint blocks)
-  // would live for the JVM. With the string key the session is only
-  // reachable through the value; `releaseMergedCheckpoint` is the
-  // explicit eviction hook (a long-lived serving JVM calls it when a
-  // corpus generation retires), and a SparkListener registered at key
-  // assignment auto-evicts the session's entries on application end —
-  // so a stopped session's entries, blocks, and the session itself
-  // (reachable only via the cached DataFrame) never outlive it.
-  private val mergedCache =
-    scala.collection.mutable.Map.empty[(String, String), (DataFrame, Long)]
-
-  // GUARANTEED-unique session key: a random UUID assigned per session
-  // in a side WeakHashMap (the value is a plain String with no strong
-  // reference back to the key, so weak collection actually works —
-  // unlike identityHashCode, which can collide across two live
-  // sessions and recur after an unreleased stopped session is GC'd).
-  private val sessionIds = new java.util.WeakHashMap[SparkSession, String]()
-
-  private def sessionKey(spark: SparkSession): String =
-    sessionIds.synchronized {
-      Option(sessionIds.get(spark)).getOrElse {
-        val id = java.util.UUID.randomUUID().toString
-        sessionIds.put(spark, id)
-        // auto-evict on session end; the listener captures only the
-        // String id, never the session
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              mergedCache.synchronized {
-                mergedCache.keys.filter(_._1 == id).toSeq
-                  .foreach(mergedCache.remove)
-              }
-          })
-        id
-      }
-    }
+  // The session memo evicts the entry on application end; a
+  // generation retired earlier is `mergedCorpora.release`d and its
+  // frame handed to [[releaseLocalCheckpoint]].
+  private val mergedCorpora = new graft.util.SessionMemo[String, (DataFrame, Long)]
 
   private def mergedCorpusWithCount(spark: SparkSession, sfDir: String): (DataFrame, Long) =
-    mergedCache.synchronized {
-      mergedCache.getOrElseUpdate((sessionKey(spark), sfDir), {
-        val df = mergedFrom(spark, sfDir, dedupSemanticDelta(spark, sfDir)).localCheckpoint()
-        (df, df.count())
-      })
-    }
-
-  /** Explicit eviction for the memoized merged checkpoint: unpersists
-    * its RDD blocks and forgets the entry (all corpus dirs of `spark`,
-    * or just `sfDir` when given). The release hook the memo needs in a
-    * long-lived JVM — without it the checkpoint blocks stay pinned at
-    * MEMORY_AND_DISK until session exit. */
-  def releaseMergedCheckpoint(spark: SparkSession, sfDir: Option[String] = None): Unit =
-    mergedCache.synchronized {
-      val doomed = mergedCache.keys.filter { case (sid, dir) =>
-        sid == sessionKey(spark) && sfDir.forall(_ == dir)
-      }.toSeq
-      doomed.foreach { k =>
-        releaseLocalCheckpoint(mergedCache(k)._1)
-        mergedCache.remove(k)
-      }
+    mergedCorpora(spark, sfDir) {
+      val df = mergedFrom(spark, sfDir, dedupSemanticDelta(spark, sfDir)).localCheckpoint()
+      (df, df.count())
     }
 
   /** Release a `localCheckpoint`'s persisted RDD blocks once the

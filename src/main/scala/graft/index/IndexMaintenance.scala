@@ -142,37 +142,28 @@ object IndexMaintenance {
   // SETUP-once memo for the split scenario's two indexes (the main
   // index is long-lived state and each staged batch is delta-built
   // once when it lands — queries serve from both, they don't rebuild)
-  private val deltaSetupCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, (LshIndex.Built, LshIndex.Built)]]()
+  private val deltaSetups = new graft.util.SessionMemo[String, (LshIndex.Built, LshIndex.Built)]
 
   private def setupDelta(spark: SparkSession, sfDir: String): (LshIndex.Built, LshIndex.Built) =
-    deltaSetupCache.synchronized {
-      deltaSetupCache.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir, {
-          val emb = Tables.embeddings(spark, sfDir)
-          val model = AnnQuery.setupModel(spark, sfDir)
-          val blockSize = model.params.blockSize
-          def cached(b: LshIndex.Built) =
-            LshIndex.Built(b.membership.cache(), b.summaries.cache())
-          (cached(LshIndex.build(stageCodes(
-              LshIndex.spread(emb.filter(col("vec_id") >= 100)),
-              "vec_id", "embedding", model), blockSize)),
-            cached(buildDelta(stageCodes(emb.filter(col("vec_id") < 100),
-              "vec_id", "embedding", model), blockSize)))
-        })
+    deltaSetups(spark, sfDir) {
+      val emb = Tables.embeddings(spark, sfDir)
+      val model = AnnQuery.setupModel(spark, sfDir)
+      val blockSize = model.params.blockSize
+      def cached(b: LshIndex.Built) =
+        LshIndex.Built(b.membership.cache(), b.summaries.cache())
+      (cached(LshIndex.build(stageCodes(
+          LshIndex.spread(emb.filter(col("vec_id") >= 100)),
+          "vec_id", "embedding", model), blockSize)),
+        cached(buildDelta(stageCodes(emb.filter(col("vec_id") < 100),
+          "vec_id", "embedding", model), blockSize)))
     }
 
   /** Re-materialize the split-scenario indexes after an external cache
     * clear (bench prep; same contract as `AnnQuery.ensureResident`). */
   def ensureResidentDelta(spark: SparkSession, sfDir: String): Unit = {
     val (main, delta) = setupDelta(spark, sfDir)
-    Seq(main, delta).foreach { b =>
-      Seq(b.membership, b.summaries).foreach { df =>
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.cache()
-        df.count()
-      }
-      b.collected
-    }
+    main.ensureResident()
+    delta.ensureResident()
   }
 
   /**

@@ -73,6 +73,18 @@ object LshIndex {
       * repeated probe calls must not re-serialize and re-ship the map. */
     @transient lazy val collectedBc: org.apache.spark.broadcast.Broadcast[Map[(Int, Int), TdSummary]] =
       summaries.sparkSession.sparkContext.broadcast(collected)
+
+    /** Keep the index resident (bench prep, so query timings measure
+      * serving, not re-indexing): re-mark both caches if an external
+      * `clearCache` dropped them, fill them, and collect the probe map. */
+    def ensureResident(): Unit = {
+      Seq(membership, summaries).foreach { df =>
+        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.cache()
+        df.count()
+      }
+      collected
+      ()
+    }
   }
 
   final case class CodeRow(id: Long, t: Int, d: Int, key: Long, code: Array[Long], bkt: Int)

@@ -288,33 +288,36 @@ object Embeddings {
    * pass over a bounded deterministic sample; the transform is
    * map-only with the folded matrix as a plan literal.
    */
-  // fitted components die with their session (the PqSearch memo shape)
-  private val pcaCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Array[(Array[Double], Double)]]]()
+  private val comps = new graft.util.SessionMemo[String, Array[(Array[Double], Double)]]
+
+  /** Fit once per (session, `key`), then fixture-export under `key` as
+    * (r, w, b) rows — outside the memo, so a memo hit still restores
+    * this fit after another corpus overwrote the shared path. */
+  private def fittedComps(spark: SparkSession, key: String, path: String)(
+      fit: => Array[(Array[Double], Double)]): Array[(Array[Double], Double)] = {
+    val c = comps(spark, key)(fit)
+    graft.FixtureExport.ensure(key, path) {
+      import spark.implicits._
+      c.zipWithIndex.map { case ((w, b), r) => (r, w.toSeq, b) }.toSeq
+        .toDF("r", "w", "b")
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    }
+    c
+  }
+
+  // the bounded, vec_id-pinned fit sample every PCA-family fit uses
+  private def pcaSample(data: DataFrame): Array[Array[Double]] =
+    data
+      .orderBy(col("vec_id")).limit(PcaSampleN)
+      .select(col("embedding").cast("array<double>"))
+      .collect().map(_.getSeq[Double](0).toArray)
 
   /** Fit (memoized per session+corpus) + fixture export — shared by
     * the `embed_pca` entry and the PQ-in-whitened-space chain
     * ([[graft.query.PqSearch.annPcapqTopK]]). */
-  private[graft] def fittedPca(spark: SparkSession, sfDir: String): Array[(Array[Double], Double)] = {
-    def fit(): Array[(Array[Double], Double)] = {
-      val sample = Tables.embeddings(spark, sfDir)
-        .orderBy(col("vec_id")).limit(PcaSampleN)
-        .select(col("embedding").cast("array<double>"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      fitPca(sample, PcaDim)
-    }
-    val comps = pcaCache.synchronized {
-      pcaCache.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir, fit())
-    }
-    graft.FixtureExport.ensure(s"pca:$sfDir", PcaExportPath) {
-      import spark.implicits._
-      comps.zipWithIndex.map { case ((w, b), r) => (r, w.toSeq, b) }.toSeq
-        .toDF("r", "w", "b")
-        .coalesce(1).write.mode("overwrite").parquet(PcaExportPath)
-    }
-    comps
-  }
+  private[graft] def fittedPca(spark: SparkSession, sfDir: String): Array[(Array[Double], Double)] =
+    fittedComps(spark, s"pca:$sfDir", PcaExportPath)(
+      fitPca(pcaSample(Tables.embeddings(spark, sfDir)), PcaDim))
 
   /** Fixture for the FULL-dimension unwhitened rotation (the ANN
     * chain's isometry — distinct from the whitened [[PcaExportPath]]). */
@@ -326,26 +329,9 @@ object Embeddings {
     * across the `m` PQ subspaces
     * ([[graft.query.PqSearch.annPcapqTopK]]). */
   private[graft] def fittedPcaRotation(spark: SparkSession, sfDir: String,
-      m: Int): Array[(Array[Double], Double)] = {
-    def fit(): Array[(Array[Double], Double)] = {
-      val sample = Tables.embeddings(spark, sfDir)
-        .orderBy(col("vec_id")).limit(PcaSampleN)
-        .select(col("embedding").cast("array<double>"))
-        .collect().map(_.getSeq[Double](0).toArray)
-      fitPcaOpq(sample, m)
-    }
-    val comps = pcaCache.synchronized {
-      pcaCache.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"rot:$m:$sfDir", fit())
-    }
-    graft.FixtureExport.ensure(s"pcarot:$m:$sfDir", PcaRotExportPath) {
-      import spark.implicits._
-      comps.zipWithIndex.map { case ((w, b), r) => (r, w.toSeq, b) }.toSeq
-        .toDF("r", "w", "b")
-        .coalesce(1).write.mode("overwrite").parquet(PcaRotExportPath)
-    }
-    comps
-  }
+      m: Int): Array[(Array[Double], Double)] =
+    fittedComps(spark, s"pcarot:$m:$sfDir", PcaRotExportPath)(
+      fitPcaOpq(pcaSample(Tables.embeddings(spark, sfDir)), m))
 
   /** Fixture for the MRL prefix rotation: the TOP dim/[[graft.query.MrlSearch.PrefixShare]]
     * principal components, unwhitened (isometric on the subspace),
@@ -371,30 +357,13 @@ object Embeddings {
     * to SQ8's full-corpus per-dim parameter pass and PQ's multi-pass
     * codebook k-means. No fixture export — serving-side refits
     * ([[graft.streaming.MrlLifecycle.reRotate]]) own their state. */
-  private[graft] def mrlRotationOf(data: DataFrame, r: Int): Array[(Array[Double], Double)] = {
-    val sample = data
-      .orderBy(col("vec_id")).limit(PcaSampleN)
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    fitPca(sample, r, whiten = false)
-  }
+  private[graft] def mrlRotationOf(data: DataFrame, r: Int): Array[(Array[Double], Double)] =
+    fitPca(pcaSample(data), r, whiten = false)
 
   private[graft] def fittedMrlRotation(spark: SparkSession, sfDir: String,
-      r: Int): Array[(Array[Double], Double)] = {
-    def fit(): Array[(Array[Double], Double)] =
-      mrlRotationOf(Tables.embeddings(spark, sfDir), r)
-    val comps = pcaCache.synchronized {
-      pcaCache.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"mrlrot:$r:$sfDir", fit())
-    }
-    graft.FixtureExport.ensure(s"mrlrot:$r:$sfDir", MrlRotExportPath) {
-      import spark.implicits._
-      comps.zipWithIndex.map { case ((w, b), rr) => (rr, w.toSeq, b) }.toSeq
-        .toDF("r", "w", "b")
-        .coalesce(1).write.mode("overwrite").parquet(MrlRotExportPath)
-    }
-    comps
-  }
+      r: Int): Array[(Array[Double], Double)] =
+    fittedComps(spark, s"mrlrot:$r:$sfDir", MrlRotExportPath)(
+      mrlRotationOf(Tables.embeddings(spark, sfDir), r))
 
   def embedPca(spark: SparkSession, sfDir: String): DataFrame = {
     val comps = fittedPca(spark, sfDir)

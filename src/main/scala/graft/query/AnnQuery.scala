@@ -11,6 +11,7 @@ import graft.config.StabilizationConfig
 import graft.functions.VectorFunctions.vec_l2
 import graft.index.LshIndex
 import graft.lsh.{HammingExpr, Lsh, LshModel, LshParams}
+import graft.util.SessionMemo
 
 /**
  * ANN query paths (re-expression of fspann
@@ -495,44 +496,31 @@ object AnnQuery {
    * holds the broadcastable model and the two index DataFrames (lazy
    * plans + a cached membership), not data copies.
    */
-  // weak keys: cached DataFrames are bound to the session that built
-  // them; when a session is garbage-collected its entry (and the pinned
-  // plans) go with it, and distinct live sessions can never collide
-  private val setupCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, (LshModel, LshIndex.Built)]]()
-
-  private def setup(spark: SparkSession, sfDir: String): (LshModel, LshIndex.Built) =
-    setupCache.synchronized {
-      val perSession = setupCache.computeIfAbsent(spark,
-        _ => scala.collection.mutable.Map.empty)
-      val entry = perSession.getOrElseUpdate(sfDir, {
-        val data = emb(spark, sfDir)
-        val model = Lsh.fit(data, "embedding", cfg.lsh)
-        // spread: the coding map stage must not serialize on a
-        // few-split source (no-op at scale, LshIndex.spread scaladoc)
-        val built = LshIndex.build(
-          LshIndex.codes(LshIndex.spread(data), "vec_id", "embedding", model),
-          model.params.blockSize)
-        (model, LshIndex.Built(built.membership.cache(), built.summaries.cache()))
-      })
-      // oracle fixture checked OUTSIDE the memo (cheap key compare):
-      // after another corpus overwrote the shared path, a memo-hit here
-      // must still restore THIS corpus's model before its oracle replays
-      graft.FixtureExport.ensure(sfDir, ModelExportPath) {
-        exportModel(spark, entry._1)
-      }
-      entry
-    }
-
-  private def fitModel(spark: SparkSession, sfDir: String): LshModel =
-    setup(spark, sfDir)._1
-
-  /** The memoized fitted model for a corpus (shared with the token path). */
-  def setupModel(spark: SparkSession, sfDir: String): LshModel = fitModel(spark, sfDir)
+  private val setups = new SessionMemo[String, (LshModel, LshIndex.Built)]
 
   /** The memoized built index for a corpus (shared with the token path). */
-  def setupIndex(spark: SparkSession, sfDir: String): (LshModel, LshIndex.Built) =
-    setup(spark, sfDir)
+  def setupIndex(spark: SparkSession, sfDir: String): (LshModel, LshIndex.Built) = {
+    val entry = setups(spark, sfDir) {
+      val data = emb(spark, sfDir)
+      val model = Lsh.fit(data, "embedding", cfg.lsh)
+      // spread: the coding map stage must not serialize on a
+      // few-split source (no-op at scale, LshIndex.spread scaladoc)
+      val built = LshIndex.build(
+        LshIndex.codes(LshIndex.spread(data), "vec_id", "embedding", model),
+        model.params.blockSize)
+      (model, LshIndex.Built(built.membership.cache(), built.summaries.cache()))
+    }
+    // oracle fixture checked OUTSIDE the memo (cheap key compare):
+    // after another corpus overwrote the shared path, a memo-hit here
+    // must still restore THIS corpus's model before its oracle replays
+    graft.FixtureExport.ensure(sfDir, ModelExportPath) {
+      exportModel(spark, entry._1)
+    }
+    entry
+  }
+
+  /** The memoized fitted model for a corpus (shared with the token path). */
+  def setupModel(spark: SparkSession, sfDir: String): LshModel = setupIndex(spark, sfDir)._1
 
   /**
    * Materialize the resident index state for a corpus (reference
@@ -545,15 +533,9 @@ object AnnQuery {
    * re-indexing.
    */
   def ensureResident(spark: SparkSession, sfDir: String): Unit = {
-    val (_, built) = setup(spark, sfDir)
-    if (built.membership.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      built.membership.cache()
-    if (built.summaries.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      built.summaries.cache()
-    built.membership.count()
-    built.summaries.count()
+    val (_, built) = setupIndex(spark, sfDir)
+    built.ensureResident()
     built.summaryCount
-    built.collected
     groundTruth(spark, sfDir, cfg.eval.kVariants.max)
     if (cfg.audit.enabled) groundTruth(spark, sfDir, auditK(spark, sfDir))
     ()
@@ -561,15 +543,12 @@ object AnnQuery {
 
   // corpus row counts, memoized like the model fit (sizing decisions
   // should not re-pay a count job per query over the same corpus)
-  private val countCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]]()
+  private val counts = new SessionMemo[String, Long]
 
-  /** Memoized corpus size for a sf directory. */
+  /** Memoized size of a corpus's embeddings table — the one count the
+    * ANN, IVF and tier-report sizing rules share. */
   def corpusCount(spark: SparkSession, sfDir: String): Long =
-    countCache.synchronized {
-      countCache.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir, emb(spark, sfDir).count())
-    }
+    counts(spark, sfDir)(emb(spark, sfDir).count())
 
   /** The audit's effective k: `audit.k` bounded by the corpus. */
   def auditK(spark: SparkSession, sfDir: String): Int =
@@ -585,8 +564,7 @@ object AnnQuery {
    * (diagnostics, recall, GT export) stop re-paying the exact scan and
    * the memo survives external cache clears.
    */
-  private val gtCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[(String, Int), Seq[(Long, Long, Double, Int)]]]()
+  private val groundTruths = new SessionMemo[(String, Int), Seq[(Long, Long, Double, Int)]]
 
   def groundTruth(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
     val rows = groundTruthRows(spark, sfDir, k)
@@ -597,14 +575,11 @@ object AnnQuery {
   /** The memoized GT as in-hand rows (query_id, vec_id, dist, rnk) —
     * the eval entries aggregate these driver-side. */
   def groundTruthRows(spark: SparkSession, sfDir: String, k: Int): Seq[(Long, Long, Double, Int)] =
-    gtCache.synchronized {
-      gtCache.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate((sfDir, k), {
-          bruteTopK(emb(spark, sfDir), queryVecs(spark, sfDir), k)
-            .collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-            .toSeq
-        })
+    groundTruths(spark, (sfDir, k)) {
+      bruteTopK(emb(spark, sfDir), queryVecs(spark, sfDir), k)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .toSeq
     }
 
   /**
@@ -709,13 +684,13 @@ object AnnQuery {
 
   /** Full MSANNP pipeline end-to-end (rows oracle + recall spec). */
   def annLshTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val (model, built) = setup(spark, sfDir)
+    val (model, built) = setupIndex(spark, sfDir)
     lshTopKAdaptive(spark, emb(spark, sfDir), queryVecs(spark, sfDir), DefaultK, model, built)
   }
 
   /** Same pipeline on the join-based probe (the summaries-too-big-to-broadcast path). */
   def annLshTopKDistJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val (model, built) = setup(spark, sfDir)
+    val (model, built) = setupIndex(spark, sfDir)
     lshTopK(spark, emb(spark, sfDir), queryVecs(spark, sfDir), DefaultK, model, built,
       distributedProbe = true)
   }
@@ -782,7 +757,7 @@ object AnnQuery {
 
   /** LSH same-label top-k over the standard batch (rows; spec-verified). */
   def annLshFilteredTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val (model, built) = setup(spark, sfDir)
+    val (model, built) = setupIndex(spark, sfDir)
     lshTopKSameLabel(spark, emb(spark, sfDir), queryVecs(spark, sfDir), DefaultK, model, built)
   }
 
@@ -867,7 +842,7 @@ object AnnQuery {
     val data = emb(spark, sfDir)
     val queries = queryVecs(spark, sfDir)
     val maxK = kVariants.max
-    val (model, built) = setup(spark, sfDir)
+    val (model, built) = setupIndex(spark, sfDir)
     // ONE probe pass feeds the top-k refine and the search-cost ratio;
     // both products are bounded (numQueries x maxK / numQueries rows),
     // so they come back as rows and the metric aggregation runs
@@ -971,7 +946,7 @@ object AnnQuery {
   }
 
   /** The LAZY eval plan of [[annRecallEval]], for plan review
-    * (ExplainMain): the production entry localizes the result, whose
+    * (PlanDump): the production entry localizes the result, whose
     * explain is just a LocalTableScan. This twin skips the cache marks
     * (nothing materializes it), so the printed plan shows the raw
     * three-branch shape the production pass executes. */
@@ -980,7 +955,7 @@ object AnnQuery {
     val data = emb(spark, sfDir)
     val queries = queryVecs(spark, sfDir)
     val maxK = kVariants.max
-    val (model, built) = setup(spark, sfDir)
+    val (model, built) = setupIndex(spark, sfDir)
     val probed = probeBlocks(spark, queries, model, built)
     val ratios = candidateCounts(probed, built)
       .select(explode(array(kVariants.map(lit): _*)).as("k"), col("n_candidates"))
@@ -1056,7 +1031,7 @@ object AnnQuery {
     * recomputes `floor((alpha.v + r) / omega)`, the sign-flip, and the
     * MSB-first interleaved 63-bit key from the exported model. */
   def lshCode(spark: SparkSession, sfDir: String): DataFrame = {
-    val model = fitModel(spark, sfDir) // setup exports the model fixture
+    val model = setupModel(spark, sfDir) // setup exports the model fixture
     LshIndex.codes(emb(spark, sfDir).filter(col("vec_id") < 50), "vec_id", "embedding", model)
       .select(col("id").as("vec_id"), col("t"), col("d"), col("key"))
       .orderBy("vec_id", "t", "d")
@@ -1129,7 +1104,7 @@ object AnnQuery {
    * the layout itself).
    */
   def lshBlocks(spark: SparkSession, sfDir: String): DataFrame = {
-    val (_, built) = setup(spark, sfDir) // setup exports the model fixture
+    val (_, built) = setupIndex(spark, sfDir) // setup exports the model fixture
     built.summaries.select(col("t"), col("d"), col("block"),
       col("min_key"), col("max_key"), col("n"))
   }
@@ -1445,7 +1420,7 @@ object AnnQuery {
     * refine after the cap + refinement bound ([[boundedCandidates]]
     * with the serving k — the same stage [[annLshTopK]] pays). */
   private[graft] def lshTierCounts(spark: SparkSession, sfDir: String): (Long, Long) = {
-    val (model, built) = setup(spark, sfDir)
+    val (model, built) = setupIndex(spark, sfDir)
     val probed = probeBlocks(spark, queryVecs(spark, sfDir), model, built).cache()
     val cand = candidateCounts(probed, built)
       .agg(sum(col("n_candidates"))).head().getLong(0)
@@ -1467,7 +1442,7 @@ object AnnQuery {
 
   /** Partition-build structural invariants, SQL-checkable from row counts alone. */
   def lshPartitionBuild(spark: SparkSession, sfDir: String): DataFrame = {
-    val (_, built) = setup(spark, sfDir)
+    val (_, built) = setupIndex(spark, sfDir)
     built.summaries.groupBy("t", "d")
       .agg(
         count(lit(1)).as("n_partitions"),

@@ -75,24 +75,18 @@ object BqSearch {
       .collect()
       .map(_.getDouble(1))
 
-  private val thrCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Array[Double]]]()
+  private val thresholds = new graft.util.SessionMemo[String, Array[Double]]
 
-  def fittedThresholds(spark: SparkSession, sfDir: String): Array[Double] =
-    thrCache.synchronized {
-      var m = thrCache.get(spark)
-      if (m == null) { m = scala.collection.mutable.Map.empty; thrCache.put(spark, m) }
-      m.getOrElseUpdate(sfDir, {
-        val t = fitThresholds(Tables.embeddings(spark, sfDir))
-        graft.FixtureExport.ensure(sfDir, ThresholdsExportPath) {
-          import spark.implicits._
-          t.zipWithIndex.map { case (v, d) => (d, v) }.toSeq.toDF("d", "thr")
-            .coalesce(1).write.mode("overwrite").parquet(ThresholdsExportPath)
-        }
-        t
-      })
+  def fittedThresholds(spark: SparkSession, sfDir: String): Array[Double] = {
+    val t = thresholds(spark, sfDir)(fitThresholds(Tables.embeddings(spark, sfDir)))
+    // fixture checked outside the memo (the SqSearch.fittedParams rule)
+    graft.FixtureExport.ensure(sfDir, ThresholdsExportPath) {
+      import spark.implicits._
+      t.zipWithIndex.map { case (v, d) => (d, v) }.toSeq.toDF("d", "thr")
+        .coalesce(1).write.mode("overwrite").parquet(ThresholdsExportPath)
     }
+    t
+  }
 
   /** Map-only encode: `ceil(dim/32)` BIGINT words, bit j of word w set
     * iff dimension `32w + j` exceeds its threshold (strict `>`; a

@@ -61,7 +61,7 @@ object DimRegistry {
   }
 
   /** One fitted model + built index per distinct dimension in `data`.
-    * Index DataFrames are cache-marked like `AnnQuery.setup`'s: the
+    * Index DataFrames are cache-marked like `AnnQuery.setupIndex`'s: the
     * registry is SETUP-phase state the server holds resident. With a
     * `storeKey`, per-dim slices come partition-pruned from the
     * [[dimStore]] layout; without one (ad-hoc/spec use) they are plain
@@ -154,43 +154,32 @@ object DimRegistry {
       .coalesce(1).write.mode("overwrite").parquet(MultidimModelExportPath)
   }
 
-  // registry memo per (session, corpus), same pattern as AnnQuery.setup:
+  // registry memo per (session, corpus), same pattern as AnnQuery.setupIndex:
   // SETUP once, serve every query entry from the resident registry
-  private val registryCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Map[Int, Entry]]]()
+  private val registries = new graft.util.SessionMemo[String, Map[Int, Entry]]
 
-  private[graft] def setupTwoDim(spark: SparkSession, sfDir: String): Map[Int, Entry] =
-    registryCache.synchronized {
-      val r = registryCache.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir, {
-          // the dim-partitioned layout rides SETUP too: written once,
-          // every serving entry reads pruned slices
-          build(twoDimCorpus(spark, sfDir), "vec_id", "embedding",
-            graft.config.GraftConfig.active.lsh, storeKey = Some(s"twodim_$sfDir"))
-        })
-      // fixture guard keyed on path content, outside the memo (the
-      // AnnQuery.setup discipline): a memo-hit after another corpus
-      // overwrote the shared path re-exports this corpus's models
-      graft.FixtureExport.ensure(sfDir, MultidimModelExportPath) {
-        exportModels(spark, r)
-      }
-      r
+  private[graft] def setupTwoDim(spark: SparkSession, sfDir: String): Map[Int, Entry] = {
+    val r = registries(spark, sfDir) {
+      // the dim-partitioned layout rides SETUP too: written once,
+      // every serving entry reads pruned slices
+      build(twoDimCorpus(spark, sfDir), "vec_id", "embedding",
+        graft.config.GraftConfig.active.lsh, storeKey = Some(s"twodim_$sfDir"))
     }
+    // fixture guard keyed on path content, outside the memo (the
+    // AnnQuery.setupIndex discipline): a memo-hit after another corpus
+    // overwrote the shared path re-exports this corpus's models
+    graft.FixtureExport.ensure(sfDir, MultidimModelExportPath) {
+      exportModels(spark, r)
+    }
+    r
+  }
 
   /** Re-materialize the resident registry after an external cache
     * clear (the multi-dim twin of `AnnQuery.ensureResident`): query
     * entries then pay only QUERY-phase work, like the reference's
     * always-resident per-dim indexes. */
   def ensureResidentTwoDim(spark: SparkSession, sfDir: String): Unit =
-    setupTwoDim(spark, sfDir).values.foreach { e =>
-      if (e.built.membership.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        e.built.membership.cache()
-      if (e.built.summaries.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        e.built.summaries.cache()
-      e.built.membership.count()
-      e.built.summaries.count()
-      e.built.collected
-    }
+    setupTwoDim(spark, sfDir).values.foreach(_.built.ensureResident())
 
   /** Registry-routed LSH top-k over the 2-dim demo corpus (rows
     * oracle; own-dim parity and no-cross-dim guarantees spec'd in

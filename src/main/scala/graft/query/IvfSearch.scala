@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.SessionMemo
 import graft.functions.VectorFunctions.vec_l2
 
 /**
@@ -24,7 +25,7 @@ import graft.functions.VectorFunctions.vec_l2
  * centroid-scan work C meet) instead of a hardcoded constant — at 1e9
  * vectors a fixed C=16 would make every probe scan a quarter of the
  * corpus. The fit is memoized per (session, corpus key) like
- * `AnnQuery.setup`, so repeated queries don't re-collect the sample
+ * `AnnQuery.setupIndex`, so repeated queries don't re-collect the sample
  * or re-run Lloyd iterations.
  */
 object IvfSearch {
@@ -86,22 +87,15 @@ object IvfSearch {
     centroids.map(_.map(_.toFloat))
   }
 
-  // weak keys: fitted centroids die with the session that collected
-  // their sample; distinct live sessions never collide
-  private val centroidCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[(String, Int), Array[Array[Float]]]]()
+  private val centroids = new SessionMemo[(String, Int), Array[Array[Float]]]
 
-  // corpus counts memoized alongside: the sqrt-N sizing should not pay
-  // a count job on every repeated query over the same corpus
-  private val countCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]]()
+  // counts of frames other than the embeddings table (that one is
+  // AnnQuery.corpusCount): sizing should not pay a count job on every
+  // repeated query over the same corpus
+  private val counts = new SessionMemo[String, Long]
 
   private[graft] def memoCount(data: DataFrame, key: String): Long =
-    countCache.synchronized {
-      countCache.computeIfAbsent(data.sparkSession,
-        _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(key, data.count())
-    }
+    counts(data.sparkSession, key)(data.count())
 
   /**
    * Fit C centroids from a bounded, `vec_id`-pinned sample (run-stable
@@ -119,11 +113,7 @@ object IvfSearch {
     }
     memoKey match {
       case None => fit()
-      case Some(key) => centroidCache.synchronized {
-        centroidCache.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-          .getOrElseUpdate((key, c), fit())
-      }
+      case Some(key) => centroids(spark, (key, c))(fit())
     }
   }
 
@@ -210,7 +200,7 @@ object IvfSearch {
       data: DataFrame): Array[Array[Float]] = {
     // config override wins; otherwise size cells from the corpus
     val c = if (cfg.ivf.cells > 0) cfg.ivf.cells
-      else scaledCells(memoCount(data, s"ivf:$sfDir"))
+      else scaledCells(AnnQuery.corpusCount(spark, sfDir))
     val cents = fitCentroids(data, c, Some(s"ivf:$sfDir"))
     exportCentroids(spark, sfDir, cents)
     cents
@@ -952,10 +942,9 @@ object IvfSearch {
     * its budget where the tail is). */
   val RebalanceShare = 0.1
 
-  // rebalance plans memoized per session+corpus, the centroidCache
+  // rebalance plans memoized per session+corpus, the centroid memo
   // discipline: bench reps time the reassignment plan, not the split fit
-  private val rebalCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Array[(Array[Float], String, Int)]]]()
+  private val rebalancePlans = new SessionMemo[String, Array[(Array[Float], String, Int)]]
 
   /**
    * Split the `budget` heaviest cells into two children each (Lloyd
@@ -1033,11 +1022,7 @@ object IvfSearch {
     val data = Tables.embeddings(spark, sfDir)
     val cents = fittedCorpusCentroids(spark, sfDir, data)
     val budget = math.ceil(cents.length * RebalanceShare).toInt
-    val plan = rebalCache.synchronized {
-      rebalCache.computeIfAbsent(spark,
-        _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"ivfreb:$sfDir", rebalancePlan(data, cents, budget))
-    }
+    val plan = rebalancePlans(spark, sfDir)(rebalancePlan(data, cents, budget))
     import spark.implicits._
     val planDf = plan.zipWithIndex.map { case ((cv, status, parent), cell) =>
       (cell, cv.toSeq, status, parent)
@@ -1075,9 +1060,7 @@ object IvfSearch {
     * bench prep so timed runs measure the query, not model fitting). */
   def ensureFitted(spark: SparkSession, sfDir: String): Unit = {
     val data = Tables.embeddings(spark, sfDir)
-    val c = if (cfg.ivf.cells > 0) cfg.ivf.cells
-      else scaledCells(memoCount(data, s"ivf:$sfDir"))
-    fitCentroids(data, c, Some(s"ivf:$sfDir"))
+    fittedCorpusCentroids(spark, sfDir, data)
     fitCentroids(data.select(col("vec_id"), col("embedding")),
       graft.config.GraftConfig.active.neardup.cells, Some(s"neardup:$sfDir"))
     ()

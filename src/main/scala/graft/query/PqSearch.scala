@@ -63,9 +63,7 @@ object PqSearch {
 
   val CodebookExportPath = graft.FixturePaths.fixture("pq_codebook.parquet")
 
-  // fitted codebooks die with their session (the IvfSearch memo shape)
-  private val codebookCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Array[Array[Array[Float]]]]]()
+  private val codebooks = new graft.util.SessionMemo[String, Array[Array[Array[Float]]]]
 
   /** [m][k][subDim] codebook from a bounded, `vec_id`-pinned sample:
     * per-subspace deterministic Lloyd k-means ([[IvfSearch.kmeans]]). */
@@ -90,11 +88,7 @@ object PqSearch {
         IvfSearch.kmeans(subSample, math.min(Kc, subSample.length), IvfSearch.KmeansIters)
       }
     }
-    codebookCache.synchronized {
-      codebookCache.computeIfAbsent(spark,
-        _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(memoKey, fit())
-    }
+    codebooks(spark, memoKey)(fit())
   }
 
   /** (m, code, cv) fixture rows for the DuckDB oracle. */

@@ -59,24 +59,19 @@ object SqSearch {
     (vmin, delta)
   }
 
-  private val paramsCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, (Array[Double], Array[Double])]]()
+  private val params = new graft.util.SessionMemo[String, (Array[Double], Array[Double])]
 
-  def fittedParams(spark: SparkSession, sfDir: String): (Array[Double], Array[Double]) =
-    paramsCache.synchronized {
-      var m = paramsCache.get(spark)
-      if (m == null) { m = scala.collection.mutable.Map.empty; paramsCache.put(spark, m) }
-      m.getOrElseUpdate(sfDir, {
-        val p = fitParams(Tables.embeddings(spark, sfDir))
-        graft.FixtureExport.ensure(sfDir, ParamsExportPath) {
-          import spark.implicits._
-          p._1.indices.map(d => (d, p._1(d), p._2(d))).toDF("d", "vmin", "delta")
-            .coalesce(1).write.mode("overwrite").parquet(ParamsExportPath)
-        }
-        p
-      })
+  def fittedParams(spark: SparkSession, sfDir: String): (Array[Double], Array[Double]) = {
+    val p = params(spark, sfDir)(fitParams(Tables.embeddings(spark, sfDir)))
+    // fixture checked outside the memo: a memo hit after another
+    // corpus overwrote the shared path must restore this corpus's fit
+    graft.FixtureExport.ensure(sfDir, ParamsExportPath) {
+      import spark.implicits._
+      p._1.indices.map(d => (d, p._1(d), p._2(d))).toDF("d", "vmin", "delta")
+        .coalesce(1).write.mode("overwrite").parquet(ParamsExportPath)
     }
+    p
+  }
 
   /** Map-only encode: one byte-range int per dimension, clamped to
     * [0, 255] on BOTH ends — (x - vmin) >= 0 holds only for the corpus

@@ -64,7 +64,7 @@ object TierReport {
     // corpus size/dim memoized per (session, corpus) — the sqrt-N
     // sizing-count rule; repeated report/autotune invocations should
     // not pay a count job + head job each (r16)
-    val nVecs = IvfSearch.memoCount(data, s"tier-report:$sfDir")
+    val nVecs = AnnQuery.corpusCount(spark, sfDir)
     val dim = embDim(spark, sfDir, data)
     val nq = NumQueries.toLong
 
@@ -306,7 +306,7 @@ object TierReport {
    */
   def annProbeCurve(spark: SparkSession, sfDir: String): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
-    val nVecs = IvfSearch.memoCount(data, s"tier-report:$sfDir")
+    val nVecs = AnnQuery.corpusCount(spark, sfDir)
     val nq = NumQueries.toLong
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val queries = data.filter(col("vec_id") < NumQueries)
@@ -682,23 +682,19 @@ object TierReport {
     tierPickRows(spark, sfDir, tiers)
   }
 
+  /** Embedding width memoized per (session, corpus) — one head() job
+    * per session instead of one per board invocation. */
+  private val dims = new graft.util.SessionMemo[String, Int]
+  private def embDim(spark: SparkSession, sfDir: String, data: DataFrame): Int =
+    dims(spark, sfDir)(data.select(size(col("embedding"))).head().getInt(0))
+
   /** The pick itself over measured (tier, recall@k, scan_bytes) rows —
     * shared by the in-plan and staged autotunes so the policy cannot
     * drift between them. */
-  /** Embedding width memoized per (session, corpus) — one head() job
-    * per JVM instead of one per board invocation. */
-  private val dimCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Int]]()
-  private def embDim(spark: SparkSession, sfDir: String, data: DataFrame): Int =
-    dimCache.synchronized {
-      dimCache.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(sfDir, data.select(size(col("embedding"))).head().getInt(0))
-    }
-
   private def tierPickRows(spark: SparkSession, sfDir: String,
       tiers: Array[(String, Double, Long)]): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
-    val nVecs = IvfSearch.memoCount(data, s"tier-report:$sfDir")
+    val nVecs = AnnQuery.corpusCount(spark, sfDir)
     val dim = embDim(spark, sfDir, data)
     val brute = nVecs * NumQueries.toLong * dim * 4L
     def share(b: Long): Double = math.floor(b.toDouble / brute * 10000) / 10000

@@ -129,15 +129,12 @@ object Bpe {
     BpeModel(merges.toArray)
   }
 
-  // models are pure data keyed by the (immutable) corpus directory —
-  // unlike the session-bound index memo, no Spark state is retained
-  private val fitCache = scala.collection.mutable.Map.empty[String, BpeModel]
+  // corpus fits keyed by corpus dir, imported vocabs by "file:" + path
+  private val models = new graft.util.SessionMemo[String, BpeModel]
 
   /** Memoized fit over a corpus directory's `documents` table. */
-  def fitFor(spark: SparkSession, sfDir: String): BpeModel = fitCache.synchronized {
-    fitCache.getOrElseUpdate(sfDir,
-      fit(Tables.documents(spark, sfDir), "text"))
-  }
+  def fitFor(spark: SparkSession, sfDir: String): BpeModel =
+    models(spark, sfDir)(fit(Tables.documents(spark, sfDir), "text"))
 
   /**
    * Import a PUBLISHED tokenizer's merge table (HF `merges.txt`
@@ -170,10 +167,9 @@ object Bpe {
     * `bpe.vocabPath` is configured, else the memoized corpus fit. */
   def modelFor(spark: SparkSession, sfDir: String,
       cfg: graft.config.GraftConfig = graft.config.GraftConfig.active): BpeModel =
-    if (cfg.bpe.vocabPath.nonEmpty) fitCache.synchronized {
-      fitCache.getOrElseUpdate("file:" + cfg.bpe.vocabPath,
-        loadMerges(cfg.bpe.vocabPath))
-    } else fitFor(spark, sfDir)
+    if (cfg.bpe.vocabPath.nonEmpty)
+      models(spark, "file:" + cfg.bpe.vocabPath)(loadMerges(cfg.bpe.vocabPath))
+    else fitFor(spark, sfDir)
 
   /** Subword token count of `text` under `model` — map-only, codegen'd. */
   def bpe_count(text: Column, model: BpeModel): Column =

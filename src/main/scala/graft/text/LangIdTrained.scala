@@ -133,12 +133,10 @@ object LangIdTrained {
     LangIdModel(classes, w, pr)
   }
 
-  private val fitCache = scala.collection.mutable.Map.empty[String, LangIdModel]
+  private val fits = new graft.util.SessionMemo[String, LangIdModel]
 
-  def fitFor(spark: SparkSession, sfDir: String): LangIdModel = fitCache.synchronized {
-    fitCache.getOrElseUpdate(sfDir,
-      fit(plantedDocs(Tables.documents(spark, sfDir))))
-  }
+  def fitFor(spark: SparkSession, sfDir: String): LangIdModel =
+    fits(spark, sfDir)(fit(plantedDocs(Tables.documents(spark, sfDir))))
 
   /** Map-only scoring: integer class scores, argmax with first-class
     * tie-break (classes are sorted, so ties resolve to the

@@ -130,14 +130,11 @@ object QualityClassifier {
   /** Label: 1 = clean (keep), 0 = planted spam. */
   def plantedLabel: Column = col("doc_id") % 3 =!= 0
 
-  // pure fitted data keyed by the immutable corpus dir (Bpe.fitCache
-  // discipline) — bench reps time serving, not refits
-  private val fitCache = scala.collection.mutable.Map.empty[String, QcModel]
+  // fitted once per (session, corpus) — bench reps time serving, not refits
+  private val fits = new graft.util.SessionMemo[String, QcModel]
 
-  def fitFor(spark: SparkSession, sfDir: String): QcModel = fitCache.synchronized {
-    fitCache.getOrElseUpdate(sfDir,
-      fit(plantedDocs(Tables.documents(spark, sfDir)), "text", plantedLabel))
-  }
+  def fitFor(spark: SparkSession, sfDir: String): QcModel =
+    fits(spark, sfDir)(fit(plantedDocs(Tables.documents(spark, sfDir)), "text", plantedLabel))
 
   /** Map-only scoring with an already-fitted model: integer-exact
     * columns only (see object doc). */

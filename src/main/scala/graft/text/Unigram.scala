@@ -233,22 +233,21 @@ object Unigram {
     UnigramModel(pieces.toArray, spmStyle = true, bytePieces.toArray)
   }
 
-  private val fitCache = scala.collection.mutable.Map.empty[String, UnigramModel]
+  // corpus fits keyed by corpus dir, imported vocabs by "file:" + path
+  private val models = new graft.util.SessionMemo[String, UnigramModel]
 
   /** Memoized corpus fit over a directory's `documents` table. */
-  def fitFor(spark: SparkSession, sfDir: String): UnigramModel = fitCache.synchronized {
-    fitCache.getOrElseUpdate(sfDir, fit(Tables.documents(spark, sfDir), "text"))
-  }
+  def fitFor(spark: SparkSession, sfDir: String): UnigramModel =
+    models(spark, sfDir)(fit(Tables.documents(spark, sfDir), "text"))
 
   /** The model the counters use: the imported SPM vocab when
     * `bpe.unigramVocabPath` is configured, else the memoized corpus
     * fit (the [[Bpe.modelFor]] contract). */
   def modelFor(spark: SparkSession, sfDir: String,
       cfg: graft.config.GraftConfig = graft.config.GraftConfig.active): UnigramModel =
-    if (cfg.bpe.unigramVocabPath.nonEmpty) fitCache.synchronized {
-      fitCache.getOrElseUpdate("file:" + cfg.bpe.unigramVocabPath,
-        loadVocab(cfg.bpe.unigramVocabPath))
-    } else fitFor(spark, sfDir)
+    if (cfg.bpe.unigramVocabPath.nonEmpty)
+      models(spark, "file:" + cfg.bpe.unigramVocabPath)(loadVocab(cfg.bpe.unigramVocabPath))
+    else fitFor(spark, sfDir)
 
   /** Viterbi piece count of `text` under `model` — map-only, codegen'd. */
   def unigram_count(text: Column, model: UnigramModel): Column =
