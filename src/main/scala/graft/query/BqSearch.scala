@@ -1,11 +1,9 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorFunctions.vec_l2
 
 /**
  * Binary (1-bit) quantization search — the fourth and cheapest point
@@ -164,8 +162,7 @@ object BqSearch {
     * engine pays the encode once, each trigger pays only its own
     * queries' Hamming scan + refine. */
   def buildIndex(data: DataFrame, thr: Array[Double]): BqIndex = {
-    val idx = BqIndex(
-      data.select(col("vec_id"), bqWords(col("embedding"), thr).as("words")).cache(),
+    val idx = BqIndex(wordsOf(data, thr).cache(),
       data.select(col("vec_id"), col("embedding")), thr)
     idx.codes.count()
     idx
@@ -174,9 +171,8 @@ object BqSearch {
   /** Frame-level core of [[annBqTopK]] (corpus and query frames
     * injectable — the spec's degenerate-case handle). */
   def bqTopKOn(data: DataFrame, queries: DataFrame, thr: Array[Double]): DataFrame =
-    topKForQueries(queries, BqIndex(
-      data.select(col("vec_id"), bqWords(col("embedding"), thr).as("words")),
-      data.select(col("vec_id"), col("embedding")), thr))
+    topKForQueries(queries,
+      BqIndex(wordsOf(data, thr), data.select(col("vec_id"), col("embedding")), thr))
 
   /** The Hamming-shortlist + exact-refine chain for a (vec_id,
     * embedding) query batch against a resident [[BqIndex]] — the
@@ -185,29 +181,19 @@ object BqSearch {
     * config K; threaded so QuantTier.serve honors its caller's k on
     * every tier, not just PQ — the r10 ADVICE alignment). */
   def topKForQueries(queries: DataFrame, idx: BqIndex,
-      deletedIds: Option[DataFrame] = None, k: Int = K): DataFrame = {
-    val spark = queries.sparkSession
-    val prep = queries
-      .select(col("vec_id").as("query_id"),
-        bqWords(col("embedding"), idx.thr).as("qwords"),
-        col("embedding").as("qraw"))
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val wHam = Window.partitionBy("query_id").orderBy(col("hamming"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    // tombstones before the Hamming rank (never eat HamKeep budget)
-    val liveCodes = deletedIds.fold(idx.codes)(del =>
-      idx.codes.join(broadcast(del.select(col("id").as("vec_id"))), Seq("vec_id"), "left_anti"))
-    liveCodes.crossJoin(broadcast(probeSide))
-      .withColumn("hamming", hamming(col("qwords"), col("words")))
-      .withColumn("ham_rank", row_number().over(wHam))
-      .filter(col("ham_rank") <= HamKeep)
-      .join(idx.fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
-  }
+      deletedIds: Option[DataFrame] = None, k: Int = K): DataFrame =
+    TwoStage.topK(queries, codec(idx.codes, idx.thr), TwoStage.AllRows, idx.fetch,
+      HamKeep, k, deletedIds)
+
+  /** (vec_id, words): the packed sign-bit codes, the BQ candidate table. */
+  private[graft] def wordsOf(data: DataFrame, thr: Array[Double]): DataFrame =
+    data.select(col("vec_id"), bqWords(col("embedding"), thr).as("words"))
+
+  /** The BQ [[TwoStage.Codec]]: integer Hamming distance between the
+    * query's packed words and each candidate's. */
+  private[graft] def codec(words: DataFrame, thr: Array[Double]): TwoStage.Codec =
+    TwoStage.Codec(words, _.withColumn("qwords", bqWords(col("qraw"), thr)),
+      hamming(col("qwords"), col("words")))
 
   def NumProbes: Int = PqSearch.NumProbes
 
@@ -226,30 +212,9 @@ object BqSearch {
     val data = Tables.embeddings(spark, sfDir)
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val thr = fittedThresholds(spark, sfDir)
-    val cells = IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents))
-    val codes = data.select(col("vec_id"), bqWords(col("embedding"), thr).as("words"))
-    val prep = data.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"),
-        bqWords(col("embedding"), thr).as("qwords"),
-        col("embedding").as("qraw"),
-        PqSearch.topProbeCells(col("embedding"), cents, NumProbes).as("pcells"))
-      .withColumn("cell", explode(col("pcells"))).drop("pcells")
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val fetch = data.select(col("vec_id"), col("embedding"))
-    val wHam = Window.partitionBy("query_id").orderBy(col("hamming"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    cells
-      .join(broadcast(probeSide), Seq("cell"))
-      .join(codes, Seq("vec_id"))
-      .withColumn("hamming", hamming(col("qwords"), col("words")))
-      .withColumn("ham_rank", row_number().over(wHam))
-      .filter(col("ham_rank") <= HamKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+    TwoStage.topK(data.filter(col("vec_id") < NumQueries), codec(wordsOf(data, thr), thr),
+      TwoStage.Cells(IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents)), cents),
+      data.select(col("vec_id"), col("embedding")), HamKeep, K, None)
   }
 
   /**
@@ -263,34 +228,10 @@ object BqSearch {
     val data = Tables.embeddings(spark, sfDir)
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val thr = fittedThresholds(spark, sfDir)
-    val cells = IvfSearch.assignCellsWith(data,
-      IvfSearch.centroidsDf(spark, cents), Seq("label"))
-    val codes = data.select(col("vec_id"), bqWords(col("embedding"), thr).as("words"))
-    val nProbe = NumProbes * IvfSearch.FilterOverProbe
-    val prep = data.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"),
-        bqWords(col("embedding"), thr).as("qwords"),
-        col("embedding").as("qraw"),
-        col("label").as("qlabel"),
-        PqSearch.topProbeCells(col("embedding"), cents, nProbe).as("pcells"))
-      .withColumn("cell", explode(col("pcells"))).drop("pcells")
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val fetch = data.select(col("vec_id"), col("embedding"))
-    val wHam = Window.partitionBy("query_id").orderBy(col("hamming"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    cells
-      .join(broadcast(probeSide), Seq("cell"))
-      .filter(col("label") === col("qlabel")) // BEFORE the Hamming scan
-      .join(codes, Seq("vec_id"))
-      .withColumn("hamming", hamming(col("qwords"), col("words")))
-      .withColumn("ham_rank", row_number().over(wHam))
-      .filter(col("ham_rank") <= HamKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+    TwoStage.topK(data.filter(col("vec_id") < NumQueries), codec(wordsOf(data, thr), thr),
+      TwoStage.LabeledCells(IvfSearch.assignCellsWith(data,
+        IvfSearch.centroidsDf(spark, cents), Seq("label")), cents),
+      data.select(col("vec_id"), col("embedding")), HamKeep, K, None)
   }
 
   /** The [[annIvfbqTopKSql]] chain with the label threaded through —

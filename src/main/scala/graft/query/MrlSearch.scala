@@ -1,11 +1,9 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorFunctions.vec_l2
 
 /**
  * `ann_mrl_topk`: progressive prefix-dimension search — the
@@ -60,39 +58,32 @@ object MrlSearch {
   /** Frame-level core of [[annMrlTopK]] (corpus/query frames, prefix
     * length, and shortlist budget injectable — the spec's handle for
     * the keep ≥ N ⇒ exact-equality degenerate case). */
-  def mrlTopKOn(data: DataFrame, queries: DataFrame, pd: Int, keep: Int): DataFrame = {
-    val pvecs = data.select(col("vec_id"),
-      slice(col("embedding"), 1, pd).cast("array<double>").as("pvec"))
-    val prep = queries
-      .select(col("vec_id").as("query_id"),
-        slice(col("embedding"), 1, pd).cast("array<double>").as("qp"),
-        col("embedding").as("qraw"))
-    prefixTopKOn(pvecs, prep, data.select(col("vec_id"), col("embedding")), keep)
-  }
+  def mrlTopKOn(data: DataFrame, queries: DataFrame, pd: Int, keep: Int): DataFrame =
+    TwoStage.topK(queries,
+      codec(data.select(col("vec_id"), slice(col("embedding"), 1, pd).cast("array<double>").as("pvec")),
+        _.withColumn("qp", slice(col("qraw"), 1, pd).cast("array<double>"))),
+      TwoStage.AllRows, data.select(col("vec_id"), col("embedding")), keep, K, None)
 
   /** The exhaustive prefix-shortlist chain over ANY (vec_id, pvec)
-    * representation and (query_id, qp, qraw) batch — shared by the
-    * raw-coordinate form above and the spec's rotated exhaustive twin
-    * (which measures the rotation front's recall contribution apart
-    * from the cell routing). */
+    * representation and (query_id, qp, qraw) batch — the spec's rotated
+    * exhaustive twin (which measures the rotation front's recall
+    * contribution apart from the cell routing). */
   private[graft] def prefixTopKOn(pvecs: DataFrame, prep: DataFrame,
-      fetch: DataFrame, keep: Int): DataFrame = {
-    val spark = pvecs.sparkSession
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val wp = Window.partitionBy("query_id").orderBy(col("pdist"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    pvecs.crossJoin(broadcast(probeSide))
-      .withColumn("pdist",
-        floor(vec_l2(col("qp"), col("pvec")) * vec_l2(col("qp"), col("pvec")) * 10000) / 10000)
-      .withColumn("p_rank", row_number().over(wp))
-      .filter(col("p_rank") <= keep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
-  }
+      fetch: DataFrame, keep: Int): DataFrame =
+    TwoStage.topK(prep.select(col("query_id").as("vec_id"), col("qraw").as("embedding")),
+      codec(pvecs, _.join(prep.select("query_id", "qp"), Seq("query_id"))),
+      TwoStage.AllRows, fetch, keep, K, None)
+
+  /** The MRL [[TwoStage.Codec]]: floored squared distance between the
+    * query prefix `qp` that `prep` adds and each candidate's `pvec`. */
+  private def codec(pvecs: DataFrame, prep: DataFrame => DataFrame): TwoStage.Codec =
+    TwoStage.Codec(pvecs, prep, TwoStage.flooredSq(col("qp"), col("pvec")))
+
+  /** `prep` for the rotated prefix: the queries' own rotation, by id. */
+  private def rotatedQp(queries: DataFrame,
+      comps: Array[(Array[Double], Double)]): DataFrame => DataFrame =
+    _.join(rotatedPrefix(queries, comps)
+      .select(col("vec_id").as("query_id"), col("pvec").as("qp")), Seq("query_id"))
 
   def NumProbes: Int = PqSearch.NumProbes
 
@@ -142,10 +133,9 @@ object MrlSearch {
    */
   def annIvfmrlTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
-    val dim = data.select(size(col("embedding"))).head().getInt(0)
-    val pd = dim / PrefixShare
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
-    val comps = graft.operators.Embeddings.fittedMrlRotation(spark, sfDir, pd)
+    val comps = graft.operators.Embeddings.fittedMrlRotation(spark, sfDir,
+      cents.head.length / PrefixShare)
     val idx = buildIndexOn(spark, data, cents, comps)
     ivfmrlTopKForQueries(spark, data.filter(col("vec_id") < NumQueries),
       idx.cells, idx.pvecs, idx.fetch, cents, comps)
@@ -188,33 +178,9 @@ object MrlSearch {
   def ivfmrlTopKForQueries(spark: SparkSession, queries: DataFrame,
       cells: DataFrame, pvecs: DataFrame, fetch: DataFrame,
       cents: Array[Array[Float]], comps: Array[(Array[Double], Double)],
-      deletedIds: Option[DataFrame] = None, k: Int = K): DataFrame = {
-    val prep = rotatedPrefix(queries, comps)
-      .select(col("vec_id").as("query_id"), col("pvec").as("qp"))
-      .join(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qraw"),
-        PqSearch.topProbeCells(col("embedding"), cents, NumProbes).as("pcells")),
-        Seq("query_id"))
-      .withColumn("cell", explode(col("pcells"))).drop("pcells")
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val wp = Window.partitionBy("query_id").orderBy(col("pdist"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    val liveCells = deletedIds.fold(cells)(del =>
-      cells.join(broadcast(del.select(col("id").as("vec_id"))), Seq("vec_id"), "left_anti"))
-    liveCells
-      .join(broadcast(probeSide), Seq("cell"))
-      .join(pvecs, Seq("vec_id"))
-      .withColumn("pdist",
-        floor(vec_l2(col("qp"), col("pvec")) * vec_l2(col("qp"), col("pvec")) * 10000) / 10000)
-      .withColumn("p_rank", row_number().over(wp))
-      .filter(col("p_rank") <= AdcKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
-  }
+      deletedIds: Option[DataFrame] = None, k: Int = K): DataFrame =
+    TwoStage.topK(queries, codec(pvecs, rotatedQp(queries, comps)),
+      TwoStage.Cells(cells, cents), fetch, AdcKeep, k, deletedIds)
 
   /**
    * `ann_ivfmrl_filtered_topk`: metadata-filtered search on the
@@ -235,40 +201,14 @@ object MrlSearch {
    */
   def annIvfmrlFilteredTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
-    val dim = data.select(size(col("embedding"))).head().getInt(0)
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
-    val comps = graft.operators.Embeddings.fittedMrlRotation(spark, sfDir, dim / PrefixShare)
-    val cells = IvfSearch.assignCellsWith(data,
-      IvfSearch.centroidsDf(spark, cents), Seq("label"))
-    val pvecs = rotatedPrefix(data, comps)
-    val nProbe = NumProbes * IvfSearch.FilterOverProbe
+    val comps = graft.operators.Embeddings.fittedMrlRotation(spark, sfDir,
+      cents.head.length / PrefixShare)
     val queries = data.filter(col("vec_id") < NumQueries)
-    val prep = rotatedPrefix(queries, comps)
-      .select(col("vec_id").as("query_id"), col("pvec").as("qp"))
-      .join(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qraw"),
-        col("label").as("qlabel"),
-        PqSearch.topProbeCells(col("embedding"), cents, nProbe).as("pcells")),
-        Seq("query_id"))
-      .withColumn("cell", explode(col("pcells"))).drop("pcells")
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val fetch = data.select(col("vec_id"), col("embedding"))
-    val wp = Window.partitionBy("query_id").orderBy(col("pdist"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    cells
-      .join(broadcast(probeSide), Seq("cell"))
-      .filter(col("label") === col("qlabel")) // BEFORE any distance work
-      .join(pvecs, Seq("vec_id"))
-      .withColumn("pdist",
-        floor(vec_l2(col("qp"), col("pvec")) * vec_l2(col("qp"), col("pvec")) * 10000) / 10000)
-      .withColumn("p_rank", row_number().over(wp))
-      .filter(col("p_rank") <= AdcKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+    TwoStage.topK(queries, codec(rotatedPrefix(data, comps), rotatedQp(queries, comps)),
+      TwoStage.LabeledCells(IvfSearch.assignCellsWith(data,
+        IvfSearch.centroidsDf(spark, cents), Seq("label")), cents),
+      data.select(col("vec_id"), col("embedding")), AdcKeep, K, None)
   }
 
   /** DuckDB twin of the celled rotated-prefix chain: rotate via the

@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -229,36 +228,14 @@ object PqSearch {
   def topKForQueries(spark: SparkSession, queries: DataFrame,
       cells: DataFrame, codes: DataFrame, fetch: DataFrame,
       cents: Array[Array[Float]], cb: Array[Array[Array[Float]]],
-      k: Int, deletedIds: Option[DataFrame] = None): DataFrame = {
-    val prep = queries
-      .select(col("query_id"), col("qv"),
-        adcLuts(col("qv"), cb).as("luts"),
-        topProbeCells(col("qv"), cents, NumProbes).as("pcells"))
-      .withColumn("cell", explode(col("pcells"))).drop("pcells")
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
+      k: Int, deletedIds: Option[DataFrame] = None): DataFrame =
+    TwoStage.topK(queries.select(col("query_id").as("vec_id"), col("qv").as("embedding")),
+      codec(codes, cb), TwoStage.Cells(cells, cents), fetch, AdcKeep, k, deletedIds)
 
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    // tombstones anti-join BEFORE the ADC work and the AdcKeep cap
-    // (the IndexMaintenance discipline: a post-top-k anti-join would
-    // let deleted ids consume shortlist budget and leave rnk holes);
-    // with frozen models this makes tombstone serving EQUAL to serving
-    // an index physically rebuilt without the deleted rows
-    val liveCells = deletedIds.fold(cells)(del =>
-      cells.join(broadcast(del.select(col("id").as("vec_id"))), Seq("vec_id"), "left_anti"))
-    liveCells
-      .join(broadcast(probeSide), Seq("cell"))
-      .join(codes, Seq("vec_id"))
-      .withColumn("adc", adcCol)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= AdcKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qv")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
-  }
+  /** The PQ [[TwoStage.Codec]]: per-query ADC tables over `cb`, summed
+    * by each candidate's codes ([[adcCol]]). */
+  private[graft] def codec(codes: DataFrame, cb: Array[Array[Array[Float]]]): TwoStage.Codec =
+    TwoStage.Codec(codes, _.withColumn("luts", adcLuts(col("qraw"), cb)), adcCol)
 
   /**
    * `ann_ivfpq_filtered_topk`: metadata-filtered IVF-PQ — the
@@ -288,31 +265,9 @@ object PqSearch {
     * (vec_id, embedding, label) query batch (the ScaleRamp handle). */
   def ivfpqFilteredTopKForQueries(spark: SparkSession, queries: DataFrame,
       cells: DataFrame, codes: DataFrame, fetch: DataFrame,
-      cents: Array[Array[Float]], cb: Array[Array[Array[Float]]]): DataFrame = {
-    val nProbe = NumProbes * IvfSearch.FilterOverProbe
-    val prep = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("label").as("qlabel"),
-        adcLuts(col("embedding"), cb).as("luts"),
-        topProbeCells(col("embedding"), cents, nProbe).as("pcells"))
-      .withColumn("cell", explode(col("pcells"))).drop("pcells")
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    cells
-      .join(broadcast(probeSide), Seq("cell"))
-      .filter(col("label") === col("qlabel")) // BEFORE the ADC lookup
-      .join(codes, Seq("vec_id"))
-      .withColumn("adc", adcCol)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= AdcKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qv")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
-  }
+      cents: Array[Array[Float]], cb: Array[Array[Array[Float]]]): DataFrame =
+    TwoStage.topK(queries, codec(codes, cb), TwoStage.LabeledCells(cells, cents), fetch,
+      AdcKeep, K, None)
 
   /** Resident IVF-PQ index for a corpus: cell routing + codes (cached
     * — together ~13 bytes/vector, the point of PQ), the full-precision
@@ -401,25 +356,12 @@ object PqSearch {
     * the rotation's contribution against a raw-space twin. */
   private[graft] def exhaustiveAdcTopK(spark: SparkSession, data: DataFrame,
       rot: DataFrame, cb: Array[Array[Array[Float]]]): DataFrame = {
-    val codes = rot.select(col("vec_id"), pqCodes(col("re"), cb).as("codes"))
-    val prep = rot.filter(col("vec_id") < NumQueries)
+    val luts = rot.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), adcLuts(col("re"), cb).as("luts"))
-      .join(data.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv")), Seq("query_id"))
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val fetch = data.select(col("vec_id"), col("embedding"))
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    codes.crossJoin(broadcast(probeSide))
-      .withColumn("adc", adcCol)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= AdcKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qv")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+    TwoStage.topK(data.filter(col("vec_id") < NumQueries),
+      TwoStage.Codec(rot.select(col("vec_id"), pqCodes(col("re"), cb).as("codes")),
+        _.join(luts, Seq("query_id")), adcCol),
+      TwoStage.AllRows, data.select(col("vec_id"), col("embedding")), AdcKeep, K, None)
   }
 
   /** DuckDB twin of the whitened chain: rotate via the PCA fixture

@@ -1,11 +1,9 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorFunctions.vec_l2
 
 /**
  * Scalar (SQ8) quantization search — the third point in the library's
@@ -132,28 +130,20 @@ object SqSearch {
   def annSqTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val (vmin, delta) = fittedParams(spark, sfDir)
     val data = Tables.embeddings(spark, sfDir)
-    val codes = data.select(col("vec_id"),
-      sqRecon(sqCodes(col("embedding"), vmin, delta), vmin, delta).as("dvec"))
-    val prep = data.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"),
-        col("embedding").as("qraw"))
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val fetch = data.select(col("vec_id"), col("embedding"))
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    codes.crossJoin(broadcast(probeSide))
-      .withColumn("adc",
-        floor(vec_l2(col("qv"), col("dvec")) * vec_l2(col("qv"), col("dvec")) * 10000) / 10000)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= AdcKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+    TwoStage.topK(data.filter(col("vec_id") < NumQueries), codec(dvecsOf(data, vmin, delta)),
+      TwoStage.AllRows, data.select(col("vec_id"), col("embedding")), AdcKeep, K, None)
   }
+
+  /** (vec_id, dvec): the dequantized codes, the SQ8 candidate table. */
+  private[graft] def dvecsOf(data: DataFrame, vmin: Array[Double], delta: Array[Double]): DataFrame =
+    data.select(col("vec_id"),
+      sqRecon(sqCodes(col("embedding"), vmin, delta), vmin, delta).as("dvec"))
+
+  /** The SQ8 [[TwoStage.Codec]]: floored squared distance from the
+    * double-cast query to each dequantized code row. */
+  private[graft] def codec(dvecs: DataFrame): TwoStage.Codec = TwoStage.Codec(dvecs,
+    _.withColumn("qv", col("qraw").cast("array<double>")),
+    TwoStage.flooredSq(col("qv"), col("dvec")))
 
   def NumProbes: Int = PqSearch.NumProbes
 
@@ -174,11 +164,8 @@ object SqSearch {
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val (vmin, delta) = fittedParams(spark, sfDir)
     val cells = IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents))
-    val dvecs = data.select(col("vec_id"),
-      sqRecon(sqCodes(col("embedding"), vmin, delta), vmin, delta).as("dvec"))
-    val fetch = data.select(col("vec_id"), col("embedding"))
     ivfsqTopKForQueries(spark, data.filter(col("vec_id") < NumQueries),
-      cells, dvecs, fetch, cents)
+      cells, dvecsOf(data, vmin, delta), data.select(col("vec_id"), col("embedding")), cents)
   }
 
   /** Resident IVF-SQ8 index: cell routing + dequantized codes (the
@@ -199,9 +186,7 @@ object SqSearch {
     val d = data.select(col("vec_id"), col("embedding"))
     SqIndex(
       IvfSearch.assignCells(d, IvfSearch.centroidsDf(spark, cents)),
-      d.select(col("vec_id"),
-        sqRecon(sqCodes(col("embedding"), vmin, delta), vmin, delta).as("dvec")),
-      d, cents, vmin, delta)
+      dvecsOf(d, vmin, delta), d, cents, vmin, delta)
   }
 
   /** The IVF+SQ8 serving chain for a (vec_id, embedding) query batch
@@ -217,32 +202,9 @@ object SqSearch {
   def ivfsqTopKForQueries(spark: SparkSession, queries: DataFrame,
       cells: DataFrame, dvecs: DataFrame, fetch: DataFrame,
       cents: Array[Array[Float]], deletedIds: Option[DataFrame] = None,
-      k: Int = K): DataFrame = {
-    val prep = queries
-      .select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"),
-        col("embedding").as("qraw"),
-        PqSearch.topProbeCells(col("embedding"), cents, NumProbes).as("pcells"))
-      .withColumn("cell", explode(col("pcells"))).drop("pcells")
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    val liveCells = deletedIds.fold(cells)(del =>
-      cells.join(broadcast(del.select(col("id").as("vec_id"))), Seq("vec_id"), "left_anti"))
-    liveCells
-      .join(broadcast(probeSide), Seq("cell"))
-      .join(dvecs, Seq("vec_id"))
-      .withColumn("adc",
-        floor(vec_l2(col("qv"), col("dvec")) * vec_l2(col("qv"), col("dvec")) * 10000) / 10000)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= AdcKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
-  }
+      k: Int = K): DataFrame =
+    TwoStage.topK(queries, codec(dvecs), TwoStage.Cells(cells, cents), fetch,
+      AdcKeep, k, deletedIds)
 
   /**
    * `ann_ivfsq_filtered_topk`: metadata-filtered search on the
@@ -269,36 +231,10 @@ object SqSearch {
     val data = Tables.embeddings(spark, sfDir)
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val (vmin, delta) = fittedParams(spark, sfDir)
-    val cells = IvfSearch.assignCellsWith(data,
-      IvfSearch.centroidsDf(spark, cents), Seq("label"))
-    val dvecs = data.select(col("vec_id"),
-      sqRecon(sqCodes(col("embedding"), vmin, delta), vmin, delta).as("dvec"))
-    val nProbe = NumProbes * IvfSearch.FilterOverProbe
-    val prep = data.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"),
-        col("embedding").as("qraw"),
-        col("label").as("qlabel"),
-        PqSearch.topProbeCells(col("embedding"), cents, nProbe).as("pcells"))
-      .withColumn("cell", explode(col("pcells"))).drop("pcells")
-    val probeSide = spark.createDataFrame(
-      java.util.Arrays.asList(prep.collect(): _*), prep.schema)
-    val fetch = data.select(col("vec_id"), col("embedding"))
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    cells
-      .join(broadcast(probeSide), Seq("cell"))
-      .filter(col("label") === col("qlabel")) // BEFORE any distance work
-      .join(dvecs, Seq("vec_id"))
-      .withColumn("adc",
-        floor(vec_l2(col("qv"), col("dvec")) * vec_l2(col("qv"), col("dvec")) * 10000) / 10000)
-      .withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= AdcKeep)
-      .join(fetch, Seq("vec_id"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qraw")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+    TwoStage.topK(data.filter(col("vec_id") < NumQueries), codec(dvecsOf(data, vmin, delta)),
+      TwoStage.LabeledCells(IvfSearch.assignCellsWith(data,
+        IvfSearch.centroidsDf(spark, cents), Seq("label")), cents),
+      data.select(col("vec_id"), col("embedding")), AdcKeep, K, None)
   }
 
   def annIvfsqTopKSql: String =

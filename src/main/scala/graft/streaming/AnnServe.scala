@@ -115,23 +115,6 @@ object AnnServe {
     }
 
   /**
-   * Serve a MIXED-DIMENSION query stream: each micro-batch routes its
-   * queries through the per-dimension registry
-   * ([[graft.query.DimRegistry.topK]]) — the streaming form of the
-   * reference's per-dim `tokenFactories.get(dim)` lookup on its query
-   * loop. The registry (fitted models + cached per-dim indexes) stays
-   * resident across triggers; a batch containing an unregistered
-   * dimension fails that trigger loudly rather than dropping queries.
-   */
-  /**
-   * Serve a query stream through the IVF-PQ engine: each micro-batch's
-   * (vec_id, embedding) queries run [[graft.query.PqSearch.topKForQueries]]
-   * against a resident [[graft.query.PqSearch.PqIndex]] — cached cell
-   * routing + 8-byte codes, exact refine only on the ADC shortlist.
-   * The third serving engine next to LSH ([[serve]]) and the per-dim
-   * registry ([[serveMultidim]]), with the same idempotent sink.
-   */
-  /**
    * Mutable tombstone handle for LIVE deletion propagation to the
    * quantized serving engines — the deletion twin of [[IvfLayoutRef]]:
    * the serving closure reads the current deleted-id set at each
@@ -145,6 +128,14 @@ object AnnServe {
    */
   final class TombstoneRef(@volatile var deleted: Option[DataFrame] = None)
 
+  /**
+   * Serve a query stream through the IVF-PQ engine: each micro-batch's
+   * (vec_id, embedding) queries run [[graft.query.PqSearch.topKForQueries]]
+   * against a resident [[graft.query.PqSearch.PqIndex]] — cached cell
+   * routing + 8-byte codes, exact refine only on the ADC shortlist.
+   * The third serving engine next to LSH ([[serve]]) and the per-dim
+   * registry ([[serveMultidim]]), with the same idempotent sink.
+   */
   def servePq(
       queries: DataFrame,
       idx: graft.query.PqSearch.PqIndex,
@@ -269,6 +260,15 @@ object AnnServe {
         batch.sparkSession, data, batch, model, built, candidates, k)
     }
 
+  /**
+   * Serve a MIXED-DIMENSION query stream: each micro-batch routes its
+   * queries through the per-dimension registry
+   * ([[graft.query.DimRegistry.topK]]) — the streaming form of the
+   * reference's per-dim `tokenFactories.get(dim)` lookup on its query
+   * loop. The registry (fitted models + cached per-dim indexes) stays
+   * resident across triggers; a batch containing an unregistered
+   * dimension fails that trigger loudly rather than dropping queries.
+   */
   def serveMultidim(
       queries: DataFrame,
       data: DataFrame,
