@@ -23,9 +23,16 @@ import graft.query.AnnQuery
  * and the current key version.
  *
  * Driver-side mutability is deliberate and mirrors the reference: the
- * reference is a single-node stateful server; on Spark the state
- * worth holding is just plan handles (DataFrames are lazy) plus two
- * ints. Everything data-sized stays distributed.
+ * reference is a single-node stateful server that FINALIZEs its
+ * partition list once and serves every query from it. The facade owns
+ * the same state with a lifetime: [[GraftSystem.setup]],
+ * [[GraftSystem.load]], [[restore]] and [[compactNow]] code the corpus
+ * into one cached code table and materialize the main index from it
+ * (cached membership and summaries plus the probe map), and a
+ * compaction releases the table and index it replaces. A query codes
+ * only its own batch. The staged delta is driver-local (see
+ * [[currentDelta]]); the serving view and the encrypted store stay
+ * lazy distributed plans.
  */
 final class GraftSystem private (
     val spark: SparkSession,
@@ -49,13 +56,12 @@ final class GraftSystem private (
   /** The encrypted versioned store (id, kv, iv, ct, dim). */
   def encryptedStore: DataFrame = store
 
-  /** The delta index over the CURRENT staged set, built lazily at
-    * first use after an insert: [[graft.index.LshIndex.build]] runs an
-    * eager count-table collect, so building inside [[insert]] made k
-    * tiny inserts cost O(k²) cumulative staged scans — deferring to
-    * query time pays one build per (insert…, query) run, amortized
-    * linear, while keeping the same serving semantics (fresh inserts
-    * still searchable immediately). */
+  /** The delta index over the CURRENT staged set, built at first use
+    * after an insert, so [[insert]] itself runs no job and k tiny
+    * inserts before a query pay one build, not k. The build is one job:
+    * it collects the staged codes and numbers them on the driver
+    * ([[IndexMaintenance.buildDelta]]), holding tables x divisions code
+    * rows per staged vector until [[compactNow]] folds them in. */
   private def currentDelta: Option[LshIndex.Built] = stagedCodes.map { sc =>
     if (delta.isEmpty) delta = Some(IndexMaintenance.buildDelta(sc, blockSize))
     delta.get
@@ -89,10 +95,15 @@ final class GraftSystem private (
   }
 
   /** FINALIZE of the staged state (`finalizeForSearch`): fold the
-    * delta into the main index — provably the from-scratch build. */
+    * delta into the main index — provably the from-scratch build —
+    * materialized before it replaces the old one, which is released. */
   def compactNow(): Unit = stagedCodes.foreach { sc =>
-    mainCodes = mainCodes.unionByName(sc)
-    main = LshIndex.build(mainCodes, blockSize)
+    val codes = mainCodes.unionByName(sc).cache()
+    val built = LshIndex.build(codes, blockSize).materialize()
+    main.release()
+    mainCodes.unpersist()
+    mainCodes = codes
+    main = built
     serving = serving.unionByName(stagedData.get)
     stagedCodes = None; stagedData = None; delta = None
   }
@@ -191,14 +202,23 @@ object GraftSystem {
       version: Int = 1): GraftSystem = {
     val d = data.select(col("vec_id"), col("embedding"))
     val model = Lsh.fit(d, "embedding", params)
-    val codes = LshIndex.codes(d, "vec_id", "embedding", model)
-    new GraftSystem(spark, model, blockSize, codes,
-      LshIndex.build(codes, blockSize), d,
+    finalized(spark, model, blockSize, d,
       VersionedCrypto.encrypt(d, "vec_id", "embedding", version), version)
   }
 
+  /** INDEX + FINALIZE over a plaintext serving view: one cached code
+    * table (spread, so coding never serializes on a few-split source),
+    * and the main index built from it and materialized. */
+  private def finalized(spark: SparkSession, model: LshModel, blockSize: Int,
+      vecs: DataFrame, store: DataFrame, version: Int): GraftSystem = {
+    val codes = LshIndex.codes(LshIndex.spread(vecs), "vec_id", "embedding", model).cache()
+    new GraftSystem(spark, model, blockSize, codes,
+      LshIndex.build(codes, blockSize).materialize(), vecs, store, version)
+  }
+
   /** Serving state rebuilt from an encrypted store: every present key
-    * version decrypted under its own key, then the standard code+build. */
+    * version decrypted under its own key, then the same finalize as
+    * [[setup]]. */
   private def fromStore(spark: SparkSession, model: LshModel, blockSize: Int,
       store: DataFrame, version: Int): GraftSystem = {
     val versions = store.select(col("kv")).distinct()
@@ -207,9 +227,7 @@ object GraftSystem {
       VersionedCrypto.decrypt(store.filter(col("kv") === v), v)
         .select(col("id").as("vec_id"), col("vec").as("embedding"))
     }.reduce(_ unionByName _)
-    val codes = LshIndex.codes(vecs, "vec_id", "embedding", model)
-    new GraftSystem(spark, model, blockSize, codes,
-      LshIndex.build(codes, blockSize), vecs, store, version)
+    finalized(spark, model, blockSize, vecs, store, version)
   }
 
   /**

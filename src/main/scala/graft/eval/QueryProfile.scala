@@ -37,7 +37,7 @@ object QueryProfile {
     val probes = probed.groupBy(col("qid").as("query_id"))
       .agg(count(lit(1)).as("n_probes"))
     val cands = AnnQuery.candidateCounts(probed, built)
-    val fanout = probed.join(built.membership, Seq("t", "d", "block"))
+    val fanout = AnnQuery.probedMembers(probed, built)
       .groupBy(col("qid").as("query_id"), col("t"))
       .agg(countDistinct("id").as("n"))
       .groupBy("query_id")

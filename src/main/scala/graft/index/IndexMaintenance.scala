@@ -45,9 +45,13 @@ object IndexMaintenance {
       model: LshModel): DataFrame =
     LshIndex.codes(staged, idCol, vecCol, model)
 
-  /** Greedy-build a staged batch into its own delta partition list. */
+  /** Greedy-build a staged batch into its own delta partition list: a
+    * staged batch is small (bounded by the compaction cadence), so its
+    * codes are collected in one job and numbered on the driver
+    * ([[LshIndex.buildLocal]]) — the same rows as [[LshIndex.build]]
+    * without the distributed build's count, shuffle and probe-map jobs. */
   def buildDelta(stagedCodes: DataFrame, blockSize: Int): LshIndex.Built =
-    LshIndex.build(stagedCodes, blockSize)
+    LshIndex.buildLocal(stagedCodes.sparkSession, LshIndex.collectCodes(stagedCodes), blockSize)
 
   /** The combined (main + delta) index: memberships and summaries
     * unioned with delta block ids offset. Candidate joins against it
@@ -62,27 +66,29 @@ object IndexMaintenance {
   /**
    * Top-k over main + staged delta: each side is probed as its own
    * partition list (best-first, budget maxProbes each — the delta is
-   * small, so its probes are nearly free), then ONE candidate union,
-   * Hamming bound, and exact refine over the combined membership.
-   * Fresh inserts are searchable immediately; results for vectors in
-   * the main index are unchanged (their probes are identical).
+   * small, so its probes are nearly free) and joined against its own
+   * membership, then ONE candidate union (delta block ids offset as in
+   * [[combined]]), Hamming bound, and exact refine. Joining per side
+   * keeps a resident main membership un-shuffled. Fresh inserts are
+   * searchable immediately; results for vectors in the main index are
+   * unchanged (their probes are identical).
    */
   def lshTopKWithDelta(spark: SparkSession, mainData: DataFrame, deltaData: DataFrame,
       queries: DataFrame, k: Int, model: LshModel,
       main: LshIndex.Built, delta: LshIndex.Built,
       deletedIds: Option[DataFrame] = None): DataFrame = {
     val codes = AnnQuery.queryCodes(queries, model)
-    val probed = AnnQuery.probeBlocksCoded(spark, codes, model, main)
-      .unionByName(
-        AnnQuery.probeBlocksCoded(spark, codes, model, delta)
-          .withColumn("block", col("block") + DeltaBlockOffset))
+    def members(side: LshIndex.Built) =
+      AnnQuery.probedMembers(AnnQuery.probeBlocksCoded(spark, codes, model, side), side)
     // deletions filter BEFORE the candidate cap and rank (inside
     // boundedCandidates), matching the non-delta path and the
     // reference's loadPointIfActive skip-during-collection — an
     // anti-join after top-k would let deleted ids consume cap budget
     // and leave holes in rnk
-    AnnQuery.refineFromProbes(probed, mainData.unionByName(deltaData), queries, k,
-      model, combined(main, delta), deletedIds)
+    AnnQuery.refineMembers(
+      members(main).unionByName(
+        members(delta).withColumn("block", col("block") + DeltaBlockOffset)),
+      mainData.unionByName(deltaData), queries, k, model.params, deletedIds)
   }
 
   /** Merge a staged batch into the main index: one standard build over
@@ -149,22 +155,18 @@ object IndexMaintenance {
       val emb = Tables.embeddings(spark, sfDir)
       val model = AnnQuery.setupModel(spark, sfDir)
       val blockSize = model.params.blockSize
-      def cached(b: LshIndex.Built) =
-        LshIndex.Built(b.membership.cache(), b.summaries.cache())
-      (cached(LshIndex.build(stageCodes(
+      (LshIndex.build(stageCodes(
           LshIndex.spread(emb.filter(col("vec_id") >= 100)),
-          "vec_id", "embedding", model), blockSize)),
-        cached(buildDelta(stageCodes(emb.filter(col("vec_id") < 100),
-          "vec_id", "embedding", model), blockSize)))
+          "vec_id", "embedding", model), blockSize).materialize(),
+        buildDelta(stageCodes(emb.filter(col("vec_id") < 100),
+          "vec_id", "embedding", model), blockSize))
     }
 
-  /** Re-materialize the split-scenario indexes after an external cache
-    * clear (bench prep; same contract as `AnnQuery.ensureResident`). */
-  def ensureResidentDelta(spark: SparkSession, sfDir: String): Unit = {
-    val (main, delta) = setupDelta(spark, sfDir)
-    main.ensureResident()
-    delta.ensureResident()
-  }
+  /** Re-materialize the split-scenario main index after an external
+    * cache clear (bench prep; same contract as `AnnQuery.ensureResident`);
+    * the delta is driver-local relations, which no cache clear drops. */
+  def ensureResidentDelta(spark: SparkSession, sfDir: String): Unit =
+    setupDelta(spark, sfDir)._1.ensureResident()
 
   /**
    * Insert lifecycle over the embeddings table: the corpus minus the

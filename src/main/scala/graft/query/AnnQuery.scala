@@ -24,15 +24,17 @@ import graft.util.SessionMemo
  * + exact-L2 refine) becomes a join pipeline:
  *
  *   query codes (small)  x broadcast block summaries -> probed blocks
- *   probed blocks        ⋈ membership (t,d,block)    -> candidates
+ *   broadcast probed blocks ⋈ membership (t,d,block) -> candidates
  *   candidates top-refinementLimit by Hamming        -> bounded set
  *   ⋈ vectors (by id) + broadcast query vectors      -> exact L2
  *   window row_number per query                      -> top-k
  *
- * Work is O(queries x probe budget x blockSize), independent of
- * corpus size; only block summaries (rows/blockSize, no ids) are
- * broadcast. At 100 TB membership is bucketed by (t, d, block) so the
- * candidate join prunes to probed blocks.
+ * Candidate and refine work is O(queries x probe budget x blockSize);
+ * only block summaries (rows/blockSize, no ids) and query-batch-sized
+ * sides (probed blocks, query vectors) are broadcast. The membership
+ * is streamed through the probe hash table, never shuffled, so a
+ * resident index ([[LshIndex.Built.materialize]]) costs one scan of
+ * its cached membership per query.
  */
 object AnnQuery {
 
@@ -320,7 +322,23 @@ object AnnQuery {
       built: LshIndex.Built,
       p: LshParams,
       deletedIds: Option[DataFrame] = None,
-      search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame = {
+      search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame =
+    cappedMembers(probedMembers(probed, built), p, deletedIds, search)
+
+  /** Probed blocks joined to the ids they hold (t, d, block, qid, score,
+    * id, key). The probe set is query-batch sized (queries x tables x
+    * divisions x maxProbes rows), so it is the broadcast side and the
+    * membership streams past it: no query shuffles the index. */
+  private[graft] def probedMembers(probed: DataFrame, built: LshIndex.Built): DataFrame =
+    broadcast(probed).join(built.membership, Seq("t", "d", "block"))
+
+  /** [[cappedCandidates]] over already-joined probe members
+    * ([[probedMembers]], possibly a union over several indexes). */
+  private def cappedMembers(
+      members: DataFrame,
+      p: LshParams,
+      deletedIds: Option[DataFrame],
+      search: graft.config.SearchConfig): DataFrame = {
     // candidate union: min Hamming across (table, division) probes.
     // Soft deletes (reference metadata.isDeleted / loadPointIfActive)
     // drop out here via anti-join — the index itself is not touched;
@@ -341,8 +359,7 @@ object AnnQuery {
         shiftleft(least(col("d").cast("long"), lit(63L)), 49) +
         shiftleft(least(col("score").cast("long"), lit((1L << 13) - 1)), 36) +
         least(col("block").cast("long"), lit((1L << 36) - 1))
-    val candidatesAll = probed
-      .join(built.membership, Seq("t", "d", "block"))
+    val candidatesAll = members
       .groupBy(col("qid"), col("id"))
       .agg(
         min(col("score")).as("hamming"),
@@ -391,8 +408,17 @@ object AnnQuery {
       deletedIds: Option[DataFrame] = None,
       k: Int = 0,
       stab: StabilizationConfig = graft.config.GraftConfig.active.stabilization,
-      search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame = {
-    val candidates = cappedCandidates(probed, built, p, deletedIds, search)
+      search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame =
+    boundedMembers(probedMembers(probed, built), p, deletedIds, k, stab, search)
+
+  private def boundedMembers(
+      members: DataFrame,
+      p: LshParams,
+      deletedIds: Option[DataFrame],
+      k: Int,
+      stab: StabilizationConfig,
+      search: graft.config.SearchConfig): DataFrame = {
+    val candidates = cappedMembers(members, p, deletedIds, search)
     // PAPER_BASELINE: no ranked-Hamming refinement bound and no
     // stabilization — the full candidate union is exactly refined
     if (search.paperBaseline)
@@ -422,9 +448,21 @@ object AnnQuery {
       model: LshModel,
       built: LshIndex.Built,
       deletedIds: Option[DataFrame] = None,
+      search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame =
+    refineMembers(probedMembers(probed, built), data, queries, k, model.params, deletedIds, search)
+
+  /** [[refineFromProbes]] over already-joined probe members
+    * ([[probedMembers]], possibly a union over several indexes). */
+  private[graft] def refineMembers(
+      members: DataFrame,
+      data: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      p: LshParams,
+      deletedIds: Option[DataFrame],
       search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame = {
-    val p = model.params
-    val bounded = boundedCandidates(probed, built, p, deletedIds, k, search = search)
+    val bounded = boundedMembers(members, p, deletedIds, k,
+      graft.config.GraftConfig.active.stabilization, search)
 
     val wK = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
     bounded
@@ -493,8 +531,8 @@ object AnnQuery {
    * SETUP-once memo (reference builds its index once, then serves
    * queries): model fit + index build are cached per corpus directory
    * so the query entries don't re-pay the build. The memo only ever
-   * holds the broadcastable model and the two index DataFrames (lazy
-   * plans + a cached membership), not data copies.
+   * holds the broadcastable model and the materialized index (cached
+   * membership and summaries plus the probe map), not data copies.
    */
   private val setups = new SessionMemo[String, (LshModel, LshIndex.Built)]
 
@@ -505,10 +543,9 @@ object AnnQuery {
       val model = Lsh.fit(data, "embedding", cfg.lsh)
       // spread: the coding map stage must not serialize on a
       // few-split source (no-op at scale, LshIndex.spread scaladoc)
-      val built = LshIndex.build(
+      (model, LshIndex.build(
         LshIndex.codes(LshIndex.spread(data), "vec_id", "embedding", model),
-        model.params.blockSize)
-      (model, LshIndex.Built(built.membership.cache(), built.summaries.cache()))
+        model.params.blockSize).materialize())
     }
     // oracle fixture checked OUTSIDE the memo (cheap key compare):
     // after another corpus overwrote the shared path, a memo-hit here
@@ -987,8 +1024,7 @@ object AnnQuery {
 
   /** Unique candidates per query surfaced by a probe set (ratio numerator). */
   def candidateCounts(probed: DataFrame, built: LshIndex.Built): DataFrame =
-    probed
-      .join(built.membership, Seq("t", "d", "block"))
+    probedMembers(probed, built)
       .groupBy("qid").agg(countDistinct("id").as("n_candidates"))
       .select(col("qid").as("query_id"), col("n_candidates"))
 
@@ -1000,8 +1036,7 @@ object AnnQuery {
    */
   def touchedIds(spark: SparkSession, queries: DataFrame,
       model: LshModel, built: LshIndex.Built): DataFrame =
-    probeBlocks(spark, queries, model, built)
-      .join(built.membership, Seq("t", "d", "block"))
+    probedMembers(probeBlocks(spark, queries, model, built), built)
       .select(col("id")).distinct()
 
   /** Where [[lshCode]] exports the fitted model for the DuckDB oracle. */

@@ -61,7 +61,7 @@ object DimRegistry {
   }
 
   /** One fitted model + built index per distinct dimension in `data`.
-    * Index DataFrames are cache-marked like `AnnQuery.setupIndex`'s: the
+    * Each index is materialized like `AnnQuery.setupIndex`'s: the
     * registry is SETUP-phase state the server holds resident. With a
     * `storeKey`, per-dim slices come partition-pruned from the
     * [[dimStore]] layout; without one (ad-hoc/spec use) they are plain
@@ -81,11 +81,9 @@ object DimRegistry {
     dims.map { d =>
       val slice = sliceOf(d)
       val model = Lsh.fit(slice, vecCol, params, orderCol = idCol)
-      val built = LshIndex.build(
+      d -> Entry(d, model, LshIndex.build(
         LshIndex.codes(LshIndex.spread(slice), idCol, vecCol, model),
-        params.blockSize)
-      d -> Entry(d, model,
-        LshIndex.Built(built.membership.cache(), built.summaries.cache()), slice)
+        params.blockSize).materialize(), slice)
     }.toMap
   }
 

@@ -25,9 +25,11 @@ import graft.query.AnnQuery
  * already-compacted batch is simply ignored by the staged listing.
  *
  * Scale posture: ingest cost per batch is one small parquet write plus
- * one count over the staged dirs; delta builds are lazy plans over
- * those dirs, realized only when served; compaction is the standard
- * one-shuffle range-repartition build over the code union.
+ * one count over the staged dirs; a delta is built only when served,
+ * by collecting the staged codes (bounded by `compactEveryVectors`)
+ * and numbering them on the driver; compaction is the standard
+ * one-shuffle range-repartition build over the code union, made
+ * resident before it replaces (and releases) the previous main index.
  */
 final class InsertLifecycle(
     spark: SparkSession,
@@ -37,12 +39,10 @@ final class InsertLifecycle(
     compactEveryVectors: Long) {
 
   private val p = model.params
-  private def cached(b: LshIndex.Built): LshIndex.Built =
-    LshIndex.Built(b.membership.cache(), b.summaries.cache())
 
   @volatile private var mainCodes: DataFrame = initialMainCodes
   @volatile private var mainBuilt: LshIndex.Built =
-    cached(LshIndex.build(initialMainCodes, p.blockSize))
+    LshIndex.build(initialMainCodes, p.blockSize).materialize()
   @volatile private var compactedThrough: Long = -1L
   @volatile private var maxSeen: Long = -1L
   @volatile private var nCompactions: Int = 0
@@ -81,17 +81,14 @@ final class InsertLifecycle(
     * the reference's explicit finalize). */
   def compactNow(): Unit = synchronized {
     stagedCodes.foreach { staged =>
-      val newCodes = mainCodes.unionByName(staged)
-      val built = cached(IndexMaintenance.compact(mainCodes, staged, p.blockSize))
-      built.membership.count() // materialize before swapping the serving index
-      built.summaries.count()
+      // materialized before the swap: serving never sees a cold index
+      val built = IndexMaintenance.compact(mainCodes, staged, p.blockSize).materialize()
       val old = mainBuilt
-      mainCodes = newCodes
+      mainCodes = mainCodes.unionByName(staged)
       mainBuilt = built
       compactedThrough = maxSeen
       nCompactions += 1
-      old.membership.unpersist()
-      old.summaries.unpersist()
+      old.release()
     }
   }
 
