@@ -26,25 +26,27 @@ import graft.query.AnnQuery
  * reference is a single-node stateful server that FINALIZEs its
  * partition list once and serves every query from it. The facade owns
  * the same state with a lifetime: [[GraftSystem.setup]],
- * [[GraftSystem.load]], [[restore]] and [[compactNow]] code the corpus
- * into one cached code table and materialize the main index from it
- * (cached membership and summaries plus the probe map), and a
- * compaction releases the table and index it replaces. A query codes
- * only its own batch. The staged delta is driver-local (see
+ * [[GraftSystem.load]], [[restore]] and [[compactNow]] build the main
+ * index and materialize it over the serving view — the numbered code
+ * table, the block summaries and the by-vector table (one row per
+ * served vector: id, vector, (t, d, block) memberships) resident, the
+ * probe map on the driver — and a compaction releases the index it
+ * replaces; [[release]] drops it all. A query is one job that codes
+ * its own batch, driver-side probing, and one pass over the resident
+ * by-vector table with one shuffle by query: it never joins, scans or
+ * shuffles the serving view. The staged delta is driver-local (see
  * [[currentDelta]]); the serving view and the encrypted store stay
- * lazy distributed plans.
+ * lazy distributed plans, read only when an index is (re)built.
  */
 final class GraftSystem private (
     val spark: SparkSession,
     val model: LshModel,
     val blockSize: Int,
-    private var mainCodes: DataFrame,
     private var main: LshIndex.Built,
     private var serving: DataFrame,
     private var store: DataFrame,
     private var version: Int) {
 
-  private var stagedCodes: Option[DataFrame] = None
   private var stagedData: Option[DataFrame] = None
   private var delta: Option[LshIndex.Built] = None
   private var deletedIds: Option[DataFrame] = None
@@ -59,35 +61,34 @@ final class GraftSystem private (
   /** The delta index over the CURRENT staged set, built at first use
     * after an insert, so [[insert]] itself runs no job and k tiny
     * inserts before a query pay one build, not k. The build is one job:
-    * it collects the staged codes and numbers them on the driver
-    * ([[IndexMaintenance.buildDelta]]), holding tables x divisions code
-    * rows per staged vector until [[compactNow]] folds them in. */
-  private def currentDelta: Option[LshIndex.Built] = stagedCodes.map { sc =>
-    if (delta.isEmpty) delta = Some(IndexMaintenance.buildDelta(sc, blockSize))
+    * it collects the staged (id, vector) rows, codes and numbers them
+    * on the driver, and keeps them as the delta's by-vector table
+    * ([[IndexMaintenance.stagedDelta]]) — tables x divisions code rows
+    * and one vector per staged vector, until [[compactNow]] folds them
+    * in. */
+  private def currentDelta: Option[LshIndex.Built] = stagedData.map { sd =>
+    if (delta.isEmpty) delta = Some(IndexMaintenance.stagedDelta(sd, serving, model, blockSize))
     delta.get
   }
 
   /** QUERY: top-k per query over main + staged delta, honoring soft
     * deletes (reference `loadPointIfActive`). */
-  def query(queries: DataFrame, k: Int): DataFrame = (currentDelta, stagedData) match {
-    case (Some(d), Some(sd)) =>
-      // deletions thread through to refineFromProbes so they filter
-      // before the candidate cap/rank — both paths return identical
-      // results for identical state (reference loadPointIfActive)
+  def query(queries: DataFrame, k: Int): DataFrame = currentDelta match {
+    case Some(d) =>
+      // deletions filter before the candidate cap/rank on both paths —
+      // identical results for identical state (reference loadPointIfActive)
       IndexMaintenance.lshTopKWithDelta(
-        spark, serving, sd, queries, k, model, main, d, deletedIds)
-    case _ =>
+        spark, serving, stagedData.get, queries, k, model, main, d, deletedIds)
+    case None =>
       AnnQuery.lshTopK(spark, serving, queries, k, model, main, deletedIds)
   }
 
-  /** Staged INSERT (PartitionedIndexService.insert): code the batch,
-    * append it to the staged set and the encrypted store under the
-    * current key — searchable immediately via [[query]], which
-    * (re)builds the delta index on demand. */
+  /** Staged INSERT (PartitionedIndexService.insert): append the batch to
+    * the staged set and the encrypted store under the current key —
+    * searchable immediately via [[query]], which (re)builds the delta
+    * index on demand. Runs no job. */
   def insert(points: DataFrame): Unit = {
     val pts = points.select(col("vec_id"), col("embedding"))
-    val codes = IndexMaintenance.stageCodes(pts, "vec_id", "embedding", model)
-    stagedCodes = Some(stagedCodes.fold(codes)(_.unionByName(codes)))
     stagedData = Some(stagedData.fold(pts)(_.unionByName(pts)))
     delta = None // invalidate: rebuilt lazily over the new staged set
     store = store.unionByName(
@@ -95,17 +96,30 @@ final class GraftSystem private (
   }
 
   /** FINALIZE of the staged state (`finalizeForSearch`): fold the
-    * delta into the main index — provably the from-scratch build —
-    * materialized before it replaces the old one, which is released. */
-  def compactNow(): Unit = stagedCodes.foreach { sc =>
-    val codes = mainCodes.unionByName(sc).cache()
-    val built = LshIndex.build(codes, blockSize).materialize()
+    * delta into the main index — one build over the resident code
+    * columns plus the staged codes, provably the from-scratch build —
+    * materialized over the grown serving view before it replaces the
+    * old index, which is released. */
+  def compactNow(): Unit = currentDelta.foreach { d =>
+    val grown = serving.unionByName(stagedData.get)
+    val built = LshIndex.build(main.indexedCodes.unionByName(d.indexedCodes), blockSize)
+      .materialize(grown)
     main.release()
-    mainCodes.unpersist()
-    mainCodes = codes
     main = built
-    serving = serving.unionByName(stagedData.get)
-    stagedCodes = None; stagedData = None; delta = None
+    serving = grown
+    stagedData = None; delta = None
+  }
+
+  /** Drop everything this facade holds resident: the main index's
+    * numbered table, summaries, by-vector table and probe-map
+    * broadcast, and the staged delta's rows. The system stays usable
+    * (a later query re-derives what it needs); call it when the system
+    * is dropped, or its index stays cached for the rest of the
+    * session. */
+  def release(): Unit = {
+    main.release()
+    delta.foreach(_.release())
+    delta = None
   }
 
   /** Soft delete (reference metadata.isDeleted): drops from every
@@ -206,14 +220,17 @@ object GraftSystem {
       VersionedCrypto.encrypt(d, "vec_id", "embedding", version), version)
   }
 
-  /** INDEX + FINALIZE over a plaintext serving view: one cached code
-    * table (spread, so coding never serializes on a few-split source),
-    * and the main index built from it and materialized. */
+  /** INDEX + FINALIZE over a plaintext serving view: the corpus coded
+    * (spread, so coding never serializes on a few-split source) into
+    * the main index, materialized over the view. The codes are cached
+    * only while the build counts and numbers them (coding is the
+    * build's costliest step); the numbered table holds them after. */
   private def finalized(spark: SparkSession, model: LshModel, blockSize: Int,
       vecs: DataFrame, store: DataFrame, version: Int): GraftSystem = {
     val codes = LshIndex.codes(LshIndex.spread(vecs), "vec_id", "embedding", model).cache()
-    new GraftSystem(spark, model, blockSize, codes,
-      LshIndex.build(codes, blockSize).materialize(), vecs, store, version)
+    val main = LshIndex.build(codes, blockSize).materialize(vecs)
+    codes.unpersist()
+    new GraftSystem(spark, model, blockSize, main, vecs, store, version)
   }
 
   /** Serving state rebuilt from an encrypted store: every present key

@@ -1,10 +1,12 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.Tables
-import graft.lsh.LshModel
+import graft.lsh.{LshCodesExpr, LshModel}
 import graft.query.AnnQuery
 
 /**
@@ -66,29 +68,63 @@ object IndexMaintenance {
   /**
    * Top-k over main + staged delta: each side is probed as its own
    * partition list (best-first, budget maxProbes each — the delta is
-   * small, so its probes are nearly free) and joined against its own
-   * membership, then ONE candidate union (delta block ids offset as in
-   * [[combined]]), Hamming bound, and exact refine. Joining per side
-   * keeps a resident main membership un-shuffled. Fresh inserts are
-   * searchable immediately; results for vectors in the main index are
-   * unchanged (their probes are identical).
+   * small, so its probes are nearly free) and both sides' by-vector
+   * tables are served by ONE kernel pass (AnnQuery.serve), delta block
+   * ids offset by [[DeltaBlockOffset]] as in [[combined]]: one
+   * candidate union, Hamming bound and exact refine, and no query joins
+   * or shuffles the serving views. Fresh inserts are searchable
+   * immediately; results for vectors in the main index are unchanged
+   * (their probes are identical). Deletions drop before the candidate
+   * cap, matching the non-delta path and the reference's
+   * loadPointIfActive skip-during-collection.
+   *
+   * Main-index ids take their vectors from `mainData`; staged ids from
+   * `deltaData`, else `mainData` (a caller may keep staged vectors in
+   * its one serving view and pass an empty `deltaData`). Preconditions:
+   * ids are unique in `mainData` and `deltaData` together, and the main
+   * index's ids and the staged ids are disjoint.
    */
   def lshTopKWithDelta(spark: SparkSession, mainData: DataFrame, deltaData: DataFrame,
       queries: DataFrame, k: Int, model: LshModel,
       main: LshIndex.Built, delta: LshIndex.Built,
       deletedIds: Option[DataFrame] = None): DataFrame = {
-    val codes = AnnQuery.queryCodes(queries, model)
-    def members(side: LshIndex.Built) =
-      AnnQuery.probedMembers(AnnQuery.probeBlocksCoded(spark, codes, model, side), side)
-    // deletions filter BEFORE the candidate cap and rank (inside
-    // boundedCandidates), matching the non-delta path and the
-    // reference's loadPointIfActive skip-during-collection — an
-    // anti-join after top-k would let deleted ids consume cap budget
-    // and leave holes in rnk
-    AnnQuery.refineMembers(
-      members(main).unionByName(
-        members(delta).withColumn("block", col("block") + DeltaBlockOffset)),
-      mainData.unionByName(deltaData), queries, k, model.params, deletedIds)
+    val batch = AnnQuery.collectBatch(queries, model)
+    def side(b: LshIndex.Built, source: DataFrame, offset: Int) =
+      AnnQuery.Side(b, batch.probe(b, model.params.maxProbes), source, offset)
+    val cfg = graft.config.GraftConfig.active
+    AnnQuery.serve(spark, batch.vecs,
+      Seq(side(main, mainData, 0), side(delta, deltaSource(mainData, deltaData), DeltaBlockOffset)),
+      k, model.params, deletedIds, cfg.stabilization, cfg.search)
+  }
+
+  /** The serving view a delta's by-vector table reads: the staged rows,
+    * then the main view (see [[lshTopKWithDelta]]). */
+  private[graft] def deltaSource(mainData: DataFrame, deltaData: DataFrame): DataFrame =
+    deltaData.select("vec_id", "embedding").unionByName(mainData.select("vec_id", "embedding"))
+
+  /** The delta index of a staged vector batch, built from the vectors
+    * themselves in ONE job: the staged (id, vector) rows are collected,
+    * coded on the driver (`LshCodesExpr.codeAll`, the kernel the coding
+    * expression runs) and numbered by [[LshIndex.buildLocal]]; the rows
+    * in hand become the delta's by-vector table for the serving view
+    * [[deltaSource]]`(mainData, staged)`, so serving it derives nothing. */
+  private[graft] def stagedDelta(staged: DataFrame, mainData: DataFrame, model: LshModel,
+      blockSize: Int): LshIndex.Built = {
+    val spark = staged.sparkSession
+    import spark.implicits._
+    val rows = staged.select(col("vec_id").cast("long").as("id"),
+        col("embedding").cast(ArrayType(FloatType)).as("vec"))
+      .filter(col("vec").isNotNull)
+      .as[(Long, Array[Float])].collect().toSeq
+    val codes = rows.flatMap { case (id, v) =>
+      val tdc = LshCodesExpr.codeAll(UnsafeArrayData.fromPrimitiveArray(v), model)
+      (0 until tdc.numElements()).map { i =>
+        val c = tdc.getStruct(i, 4)
+        LshIndex.Code(id, c.getInt(0), c.getInt(1), c.getLong(2), c.getArray(3).toLongArray())
+      }
+    }
+    LshIndex.buildLocal(spark, codes, blockSize)
+      .byVectorFrom(deltaSource(mainData, staged), rows)
   }
 
   /** Merge a staged batch into the main index: one standard build over
@@ -163,10 +199,16 @@ object IndexMaintenance {
     }
 
   /** Re-materialize the split-scenario main index after an external
-    * cache clear (bench prep; same contract as `AnnQuery.ensureResident`);
-    * the delta is driver-local relations, which no cache clear drops. */
-  def ensureResidentDelta(spark: SparkSession, sfDir: String): Unit =
-    setupDelta(spark, sfDir)._1.ensureResident()
+    * cache clear (bench prep; same contract as `AnnQuery.ensureResident`)
+    * and fill both sides' by-vector tables; the delta is driver-local
+    * relations, which no cache clear drops. */
+  def ensureResidentDelta(spark: SparkSession, sfDir: String): Unit = {
+    val emb = Tables.embeddings(spark, sfDir)
+    val (main, delta) = setupDelta(spark, sfDir)
+    val mainData = emb.filter(col("vec_id") >= 100)
+    main.materialize(mainData)
+    delta.byVector(deltaSource(mainData, emb.filter(col("vec_id") < 100)))
+  }
 
   /**
    * Insert lifecycle over the embeddings table: the corpus minus the

@@ -1,9 +1,14 @@
 package graft.index
 
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.lsh.{Lsh, LshModel}
@@ -16,18 +21,25 @@ import graft.lsh.{Lsh, LshModel}
  * of the middle member, member count).
  *
  * Spark posture: the build numbers the codes in one shuffle
- * (hash-partitioned by (t, d, key-range bucket), sorted by key)
- * producing two DataFrames —
- *  - `membership` (id, t, d, block, key): the big side. Query-time
- *    candidate joins broadcast the query-batch-sized probe set and
- *    stream the membership, so no query shuffles it;
+ * (hash-partitioned by (t, d, key-range bucket), sorted by key) into
+ * ONE numbered table (id, t, d, key, code, block, rep); everything
+ * else is a projection or an aggregate of it —
+ *  - `membership` (id, t, d, block, key) and the code columns
+ *    ([[Built.indexedCodes]], what a compaction re-reads): projections;
  *  - `summaries` (t, d, block, min_key, max_key, n, rep_code): 1/64th
- *    of the rows with ids dropped — the only state that is ever
- *    collected/broadcast (KBs-MBs at 100 TB).
+ *    of the rows with ids dropped, aggregated from the numbered rows —
+ *    each block's representative is flagged during numbering from the
+ *    per-(t, d) totals the driver already holds, so no window runs;
+ *    the only state that is ever collected (KBs-MBs at 100 TB);
+ *  - the by-vector table ([[Built.byVector]]): one row per served
+ *    vector, `(id, vec, tdb)` with its (t, d, block) memberships —
+ *    the relation a query streams past its probes (AnnQuery.serve).
  *
- * A served index is FINALIZED once ([[Built.materialize]]) and then
- * resident until [[Built.release]]; a small staged batch skips the
- * distributed build entirely ([[buildLocal]]).
+ * A served index is FINALIZED once ([[Built.materialize]]: the
+ * numbered table, the summaries and the by-vector table resident, the
+ * probe map on the driver) and then resident until [[Built.release]];
+ * a small staged batch skips the distributed build entirely
+ * ([[buildLocal]]).
  *
  * Two numbering strategies produce identical results:
  *  - [[build]] (default): deterministic key-range buckets + a
@@ -63,6 +75,20 @@ object LshIndex {
       .select(col("id"), col("c.t").as("t"), col("c.d").as("d"),
         col("c.key").as("key"), col("c.code").as("code"))
 
+  /** One served vector of a by-vector table: its id, its vector (null
+    * when the serving view lacks the id) and its (t, d, block)
+    * memberships, each packed by [[packTdb]]. */
+  final case class VecRow(id: Long, vec: Array[Float], tdb: Array[Long])
+
+  /** (t, d, block) as one long: t and d fit 8 and 6 bits (LshParams
+    * bounds them), the block 32 (staged-delta blocks sit at 2^30 and
+    * above, IndexMaintenance.DeltaBlockOffset). */
+  def packTdb(t: Int, d: Int, block: Int): Long =
+    (t.toLong << 40) | (d.toLong << 32) | (block.toLong & 0xFFFFFFFFL)
+  def tdbT(x: Long): Int = (x >>> 40).toInt
+  def tdbD(x: Long): Int = ((x >>> 32) & 0xFF).toInt
+  def tdbBlock(x: Long): Int = x.toInt
+
   final case class Built(membership: DataFrame, summaries: DataFrame) {
     /** Total block count, computed once per built index (used to size
       * the key-range buckets of the distributed center lookup; a Long
@@ -74,9 +100,26 @@ object LshIndex {
       * resident in the server for the system's lifetime — re-collecting
       * it per query batch would re-pay a job every call). Deterministic
       * re-derivable state, so surviving cache eviction is safe. */
-    lazy val collected: Map[(Int, Int), TdSummary] = collectSummaries(summaries)
+    def collected: Map[(Int, Int), TdSummary] = synchronized {
+      if (probeMap == null) probeMap = collectSummaries(summaries)
+      probeMap
+    }
+    @transient private var probeMap: Map[(Int, Int), TdSummary] = null
 
     @transient private var probeMapBc: Broadcast[Map[(Int, Int), TdSummary]] = null
+
+    // what the relations above project: the numbered table of [[build]],
+    // or the driver-side code rows and memberships of [[buildLocal]]
+    @transient private var numbered: Option[DataFrame] = None
+    @transient private var localCodes: Option[(Seq[Code], Map[Long, Array[Long]])] = None
+    @transient private var resident = false
+    // the by-vector tables, one per serving view
+    @transient private val tables = mutable.ArrayBuffer.empty[(DataFrame, Dataset[VecRow])]
+
+    private[index] def numberedBy(df: DataFrame): Built = { numbered = Some(df); this }
+    private[index] def localBy(codes: Seq[Code], tdb: Map[Long, Array[Long]]): Built = {
+      localCodes = Some((codes, tdb)); this
+    }
 
     /** The probe map's broadcast handle, created once per built index —
       * repeated probe calls must not re-serialize and re-ship the map. */
@@ -86,16 +129,103 @@ object LshIndex {
       probeMapBc
     }
 
-    /** FINALIZE (`finalizeForSearch`): cache both relations, fill them,
-      * and collect the probe map, so every later query serves from
-      * resident state instead of re-deriving the index. Idempotent;
-      * returns this index. */
-    def materialize(): Built = {
-      Seq(membership, summaries).foreach { df =>
-        if (df.storageLevel == StorageLevel.NONE) df.cache()
-        df.count()
+    /** The code rows this index numbers (id, t, d, key, code): the code
+      * columns of the numbered table (or the staged batch's driver
+      * rows), so a compaction re-reads resident codes instead of
+      * re-coding the corpus. */
+    def indexedCodes: DataFrame = numbered.map(_.select("id", "t", "d", "key", "code"))
+      .orElse(localCodes.map { case (codes, _) =>
+        val spark = membership.sparkSession
+        import spark.implicits._
+        codes.toDF()
+      })
+      .getOrElse(throw new IllegalStateException(
+        "indexedCodes needs an index from LshIndex.build or buildLocal"))
+
+    /**
+     * The by-vector table over a serving view `source` (vec_id,
+     * embedding): one [[VecRow]] per indexed id with its vector — null
+     * when `source` lacks the id — and its memberships. Memoized per
+     * serving view (a same-result plan) and cached while the index is
+     * resident. A distributed index derives it by one id co-group of
+     * its membership with `source`; a driver-side one ([[buildLocal]])
+     * by collecting its ids' rows of `source`.
+     */
+    private[graft] def byVector(source: DataFrame): RDD[VecRow] = synchronized {
+      val table = tables.collectFirst { case (s, t) if s.sameSemantics(source) => t }
+        .getOrElse {
+          val t = deriveTable(source)
+          tables += source -> t
+          t
+        }
+      if (resident && table.storageLevel == StorageLevel.NONE) table.cache()
+      table.rdd
+    }
+
+    /** Serve `source` from rows already in hand (a staged batch collected
+      * with its vectors): no job derives the table. */
+    private[graft] def byVectorFrom(source: DataFrame, vecs: Seq[(Long, Array[Float])]): Built =
+      synchronized {
+        val spark = membership.sparkSession
+        import spark.implicits._
+        val tdb = localCodes.map(_._2).getOrElse(Map.empty[Long, Array[Long]])
+        tables += source -> vecs.flatMap { case (id, v) => tdb.get(id).map(VecRow(id, v, _)) }.toDS()
+        this
       }
-      collected
+
+    private def deriveTable(source: DataFrame): Dataset[VecRow] = {
+      val spark = membership.sparkSession
+      import spark.implicits._
+      val vecs = source.select(col("vec_id").cast("long").as("id"),
+        col("embedding").cast(ArrayType(FloatType)).as("vec"))
+      localCodes match {
+        case Some((_, tdb)) =>
+          val got: Map[Long, Array[Float]] =
+            if (tdb.isEmpty) Map.empty
+            else vecs.filter(col("id").isin(tdb.keys.toSeq: _*))
+              .as[(Long, Array[Float])].collect().toMap
+          tdb.toSeq.map { case (id, t) => VecRow(id, got.getOrElse(id, null), t) }.toDS()
+        case None =>
+          // one shuffle: memberships and vectors co-grouped by id (the
+          // left join of the memberships with the view), straight into
+          // defaultParallelism partitions
+          val packed = shiftleft(col("t").cast("long"), 40)
+            .bitwiseOR(shiftleft(col("d").cast("long"), 32))
+            .bitwiseOR(col("block").cast("long"))
+          spark.createDataset(membership.select(col("id"), packed).as[(Long, Long)].rdd
+            .cogroup(vecs.as[(Long, Array[Float])].rdd,
+              new HashPartitioner(spark.sparkContext.defaultParallelism))
+            .flatMap { case (id, (tdb, vs)) =>
+              if (tdb.isEmpty) Nil
+              else if (vs.isEmpty) Seq(VecRow(id, null, tdb.toArray))
+              else vs.map(VecRow(id, _, tdb.toArray))
+            })
+      }
+    }
+
+    /** FINALIZE (`finalizeForSearch`): cache the numbered table (or the
+      * membership) and the summaries, fill them, collect the probe map,
+      * and keep every by-vector table resident, so every later query
+      * serves from resident state instead of re-deriving the index.
+      * Idempotent; returns this index. */
+    def materialize(): Built = synchronized {
+      val rel = numbered.getOrElse(membership)
+      if (rel.storageLevel == StorageLevel.NONE) rel.cache()
+      rel.count()
+      if (summaries.storageLevel == StorageLevel.NONE) summaries.cache()
+      // the probe map's collect fills the summaries cache; a re-fill
+      // (after a cache clear or a release) counts instead
+      if (probeMap == null) collected else summaries.count()
+      resident = true
+      tables.map(_._1).toList.foreach(byVector(_).count())
+      this
+    }
+
+    /** [[materialize]] plus the by-vector table of the serving view
+      * `data`, so the first query over `data` finds it resident. */
+    def materialize(data: DataFrame): Built = synchronized {
+      materialize()
+      byVector(data).count()
       this
     }
 
@@ -103,16 +233,19 @@ object LshIndex {
       * (bench prep, so query timings measure serving, not re-indexing). */
     def ensureResident(): Unit = materialize()
 
-    /** Drop what [[materialize]] and the probe path hold: both caches and
-      * the probe map's executor copies. The index stays usable (it
-      * re-derives on demand); call it on an index that is superseded. */
-    def release(): Unit = {
+    /** Drop what [[materialize]] and the probe path hold: the caches, the
+      * by-vector tables and the probe map's executor copies. The index
+      * stays usable (it re-derives on demand); call it on an index that
+      * is superseded. */
+    def release(): Unit = synchronized {
+      numbered.foreach(_.unpersist())
       membership.unpersist()
       summaries.unpersist()
-      synchronized {
-        if (probeMapBc != null) probeMapBc.unpersist()
-        probeMapBc = null
-      }
+      tables.foreach(_._2.unpersist())
+      tables.clear()
+      resident = false
+      if (probeMapBc != null) probeMapBc.unpersist()
+      probeMapBc = null
     }
   }
 
@@ -139,12 +272,14 @@ object LshIndex {
     val nRanges = spark.sparkContext.defaultParallelism
     val withBkt = codesDf.select(col("id"), col("t"), col("d"), col("key"), col("code"),
       bucketCol.as("bkt"))
-    // tiny count table -> per-(t, d, bucket) starting offsets
+    // tiny count table -> per-(t, d, bucket) starting offsets and
+    // per-(t, d) totals (which size each (t, d)'s last block)
     val counts = withBkt.groupBy("t", "d", "bkt").count()
       .collect()
       .map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)), r.getLong(3)))
+    val byTd = counts.groupBy { case ((t, d, _), _) => (t, d) }
     val offsets: Map[(Int, Int, Int), Long] =
-      counts.groupBy { case ((t, d, _), _) => (t, d) }.flatMap { case (_, rows) =>
+      byTd.flatMap { case (_, rows) =>
         var acc = 0L
         rows.sortBy { case ((_, _, bkt), _) => bkt }.map { case (k, n) =>
           val o = (k, acc)
@@ -152,22 +287,34 @@ object LshIndex {
           o
         }
       }
-    val offsetsB = spark.sparkContext.broadcast(offsets)
+    val totals: Map[(Int, Int), Long] = byTd.map { case (td, rows) => td -> rows.map(_._2).sum }
+    val sizesB = spark.sparkContext.broadcast((offsets, totals))
     val numbered = withBkt.as[CodeRow]
       .repartition(nRanges, col("t"), col("d"), col("bkt"))
       .sortWithinPartitions("t", "d", "key", "id")
       .mapPartitions { it =>
+        val (offs, tots) = sizesB.value
         val local = scala.collection.mutable.Map.empty[(Int, Int, Int), Long]
         it.map { r =>
           val k = (r.t, r.d, r.bkt)
           val i = local.getOrElse(k, 0L)
           local(k) = i + 1
-          (r.id, r.t, r.d, r.key, r.code, offsetsB.value(k) + i)
+          val rn = offs(k) + i
+          val block = rn / blockSize
+          // the reference's representative is the block's middle member
+          // (GreedyPartitioner.java:66-71); only a (t, d)'s last block
+          // can run short of blockSize
+          val n = math.min(blockSize.toLong, tots((r.t, r.d)) - block * blockSize)
+          (r.id, r.t, r.d, r.key, r.code, block.toInt, rn % blockSize == (n - 1) / 2)
         }
-      }.toDF("id", "t", "d", "key", "code", "rn")
-      .withColumn("block", (col("rn") / blockSize).cast("int"))
-      .withColumn("local", col("rn") % blockSize)
-    finish(numbered)
+      }.toDF("id", "t", "d", "key", "code", "block", "rep")
+    val summaries = numbered.groupBy("t", "d", "block")
+      .agg(
+        min("key").as("min_key"),
+        max("key").as("max_key"),
+        count(lit(1)).as("n"),
+        first(when(col("rep"), col("code")), ignoreNulls = true).as("rep_code"))
+    Built(numbered.select("id", "t", "d", "block", "key"), summaries).numberedBy(numbered)
   }
 
   /** One collected code row: the [[codes]] columns on the driver. */
@@ -191,16 +338,21 @@ object LshIndex {
     import spark.implicits._
     val members = Seq.newBuilder[(Long, Int, Int, Int, Long)]
     val blocks = Seq.newBuilder[(Int, Int, Int, Long, Long, Long, Array[Long])]
+    val tdb = mutable.HashMap.empty[Long, mutable.ArrayBuilder.ofLong]
     codes.groupBy(c => (c.t, c.d)).foreach { case ((t, d), rows) =>
       rows.sortBy(c => (c.key, c.id)).grouped(blockSize).zipWithIndex.foreach {
         case (blk, b) =>
-          blk.foreach(c => members += ((c.id, t, d, b, c.key)))
+          blk.foreach { c =>
+            members += ((c.id, t, d, b, c.key))
+            tdb.getOrElseUpdate(c.id, new mutable.ArrayBuilder.ofLong) += packTdb(t, d, b)
+          }
           blocks += ((t, d, b, blk.head.key, blk.last.key, blk.size.toLong,
             blk((blk.size - 1) / 2).code))
       }
     }
     Built(members.result().toDF("id", "t", "d", "block", "key"),
       blocks.result().toDF("t", "d", "block", "min_key", "max_key", "n", "rep_code"))
+      .localBy(codes, tdb.map { case (id, b) => id -> b.result() }.toMap)
   }
 
   /** Window-based numbering (one reducer per (t, d)); oracle for [[build]]. */
@@ -210,13 +362,8 @@ object LshIndex {
       .withColumn("rn", (row_number().over(w) - 1).cast("long"))
       .withColumn("block", (col("rn") / blockSize).cast("int"))
       .withColumn("local", col("rn") % blockSize)
-    finish(numbered)
-  }
-
-  private def finish(numbered: DataFrame): Built = {
-    val wb = Window.partitionBy("t", "d", "block")
     val withRep = numbered
-      .withColumn("bn", count(lit(1)).over(wb))
+      .withColumn("bn", count(lit(1)).over(Window.partitionBy("t", "d", "block")))
       // reference picks the middle member as representative (GreedyPartitioner.java:66-71)
       .withColumn("rep", when(col("local") === expr("(bn - 1) div 2"), col("code")))
     val summaries = withRep.groupBy("t", "d", "block")

@@ -2,13 +2,16 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.Tables
 import graft.config.StabilizationConfig
 import graft.functions.VectorFunctions.vec_l2
+import graft.functions.VectorKernels
 import graft.index.LshIndex
 import graft.lsh.{HammingExpr, Lsh, LshModel, LshParams}
 import graft.util.SessionMemo
@@ -19,22 +22,32 @@ import graft.util.SessionMemo
  * PartitionedIndexService.java:592-715, and
  * `query/service/QueryServiceImpl` refine).
  *
- * The reference's per-query driver loop (binary-search the partition
- * list, best-first expand by Hamming on representative codes, decrypt
- * + exact-L2 refine) becomes a join pipeline:
+ * The reference keeps its partition lists in server memory and runs a
+ * per-query loop: binary-search the partition list, best-first expand
+ * by Hamming on representative codes, decrypt + exact-L2 refine of
+ * the bounded candidates. graft serves the same loop from a resident
+ * BY-VECTOR table (one row per served vector: id, vector, its
+ * (t, d, block) memberships — [[LshIndex.Built.byVector]]) in one
+ * kernel ([[serve]]):
  *
- *   query codes (small)  x broadcast block summaries -> probed blocks
- *   broadcast probed blocks ⋈ membership (t,d,block) -> candidates
- *   candidates top-refinementLimit by Hamming        -> bounded set
- *   ⋈ vectors (by id) + broadcast query vectors      -> exact L2
- *   window row_number per query                      -> top-k
+ *   1. one job collects the batch's ids, vectors and LSH codes (coded
+ *      in that plan, over the batch only); probing runs on the driver
+ *      over the resident probe map ([[bestFirst]]);
+ *   2. one mapPartitions pass over the table emits
+ *      (qid, id, hamming, first_ord, dist) per matched (vector, query),
+ *      dist by [[graft.functions.VectorKernels.l2]];
+ *   3. one shuffle by qid;
+ *   4. a per-query cut: hard cap on (first_ord, id), refinement bound
+ *      on (hamming, id) with the stabilization limiter, top-k on
+ *      (dist, id) ([[boundHits]], [[rankHits]]).
  *
- * Candidate and refine work is O(queries x probe budget x blockSize);
- * only block summaries (rows/blockSize, no ids) and query-batch-sized
- * sides (probed blocks, query vectors) are broadcast. The membership
- * is streamed through the probe hash table, never shuffled, so a
- * resident index ([[LshIndex.Built.materialize]]) costs one scan of
- * its cached membership per query.
+ * No query joins, broadcasts or shuffles the serving view: probes and
+ * query vectors are query-batch sized and ride in the task closure,
+ * the pass streams the table once, and only matched pairs reach the
+ * shuffle. The window forms of the cap and bound
+ * ([[cappedCandidates]], [[boundedCandidates]]) stay for the
+ * codes-only token path and the profiles; a spec pins them to the
+ * kernel's cut on the same probes.
  */
 object AnnQuery {
 
@@ -74,45 +87,48 @@ object AnnQuery {
       model: LshModel,
       built: LshIndex.Built): DataFrame = {
     import spark.implicits._
-    val p = model.params
-
+    val maxProbes = model.params.maxProbes
     val summB = built.collectedBc
-
-    val qCodes = codes.select(col("qid"), col("t"), col("d"), col("key"), col("code"))
+    codes.select(col("qid"), col("t"), col("d"), col("key"), col("code"))
       .as[QueryCode]
+      .mapPartitions(_.flatMap(qc => probeCode(summB.value, qc, maxProbes)))
+      .toDF()
+  }
 
-    qCodes.mapPartitions { it =>
-      it.flatMap { qc =>
-        summB.value.get((qc.t, qc.d)) match {
-          case None => Iterator.empty
-          case Some(s) =>
-            val center = LshIndex.findNearestBlock(s, qc.key)
-            val pq = mutable.PriorityQueue.empty[(Long, Int)](
-              Ordering.by[(Long, Int), (Long, Int)](x => (-x._1, -x._2)))
-            val visited = new Array[Boolean](s.size)
-            pq.enqueue((Lsh.hamming(qc.code, s.rep(center)), center))
-            visited(center) = true
-            val out = mutable.ArrayBuffer.empty[ProbedBlock]
-            var probes = 0
-            while (pq.nonEmpty && probes < p.maxProbes) {
-              val (score, idx) = pq.dequeue()
-              probes += 1
-              out += ProbedBlock(qc.qid, qc.t, qc.d, idx, score)
-              val left = idx - 1
-              if (left >= 0 && !visited(left)) {
-                visited(left) = true
-                pq.enqueue((Lsh.hamming(qc.code, s.rep(left)), left))
-              }
-              val right = idx + 1
-              if (right < s.size && !visited(right)) {
-                visited(right) = true
-                pq.enqueue((Lsh.hamming(qc.code, s.rep(right)), right))
-              }
-            }
-            out.iterator
+  /** One query code's probes against a probe map (none when the index
+    * has no blocks for its (t, d)). */
+  private def probeCode(summ: Map[(Int, Int), LshIndex.TdSummary], qc: QueryCode,
+      maxProbes: Int): Seq[ProbedBlock] =
+    summ.get((qc.t, qc.d)).fold(Seq.empty[ProbedBlock])(s =>
+      bestFirst(s, qc.key, qc.code, maxProbes).map { case (block, score) =>
+        ProbedBlock(qc.qid, qc.t, qc.d, block, score)
+      })
+
+  /** Best-first block expansion over one (t, d) partition list (the
+    * reference's `lookupCandidatesWithScores` walk): start at the
+    * nearest block by key, then repeatedly take the frontier block with
+    * the least (Hamming to its representative code, block id), up to
+    * `maxProbes`. Returns (block, score) in probe order. */
+  private[graft] def bestFirst(s: LshIndex.TdSummary, key: Long, code: Array[Long],
+      maxProbes: Int): Seq[(Int, Long)] = {
+    val center = LshIndex.findNearestBlock(s, key)
+    val pq = mutable.PriorityQueue.empty[(Long, Int)](
+      Ordering.by[(Long, Int), (Long, Int)](x => (-x._1, -x._2)))
+    val visited = new Array[Boolean](s.size)
+    pq.enqueue((Lsh.hamming(code, s.rep(center)), center))
+    visited(center) = true
+    val out = mutable.ArrayBuffer.empty[(Int, Long)]
+    while (pq.nonEmpty && out.size < maxProbes) {
+      val (score, idx) = pq.dequeue()
+      out += ((idx, score))
+      Seq(idx - 1, idx + 1).foreach { n =>
+        if (n >= 0 && n < s.size && !visited(n)) {
+          visited(n) = true
+          pq.enqueue((Lsh.hamming(code, s.rep(n)), n))
         }
       }
-    }.toDF()
+    }
+    out.toSeq
   }
 
   /**
@@ -283,9 +299,11 @@ object AnnQuery {
   }
 
   /**
-   * Multi-probe LSH top-k. Best-first block expansion runs
-   * distributed on the (small) query side with broadcast summaries;
-   * everything row-heavy is joins + windows.
+   * Multi-probe LSH top-k, served by [[serve]]: the batch is coded and
+   * probed best-first on the driver (or, with `distributedProbe`, by
+   * the join-based probe), and the index's resident by-vector table
+   * over `data` is refined in one pass. Preconditions: ids are unique
+   * in `data` and in `queries`.
    */
   def lshTopK(
       spark: SparkSession,
@@ -300,10 +318,14 @@ object AnnQuery {
     // baseline mode pins the probe budget to the paper default before
     // anything else reads it
     val m = model.copy(params = search.pinParams(model.params))
-    val probed =
-      if (distributedProbe) probeBlocksDistributed(spark, queries, m, built)
-      else probeBlocks(spark, queries, m, built)
-    refineFromProbes(probed, data, queries, k, m, built, deletedIds, search)
+    if (distributedProbe)
+      refineFromProbes(probeBlocksDistributed(spark, queries, m, built),
+        data, queries, k, m, built, deletedIds, search)
+    else {
+      val batch = collectBatch(queries, m)
+      serve(spark, batch.vecs, Seq(Side(built, batch.probe(built, m.params.maxProbes), data, 0)),
+        k, m.params, deletedIds, graft.config.GraftConfig.active.stabilization, search)
+    }
   }
 
   /**
@@ -439,7 +461,9 @@ object AnnQuery {
       .select(col("qid"), col("id"), col("hamming"))
   }
 
-  /** Candidate union + bounded Hamming refine + exact-L2 top-k over a probe set. */
+  /** Candidate union + bounded Hamming refine + exact-L2 top-k over a
+    * probe set: the probe frame and the query vectors are collected
+    * (both query-batch sized) and served by [[serve]]. */
   def refineFromProbes(
       probed: DataFrame,
       data: DataFrame,
@@ -448,32 +472,198 @@ object AnnQuery {
       model: LshModel,
       built: LshIndex.Built,
       deletedIds: Option[DataFrame] = None,
-      search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame =
-    refineMembers(probedMembers(probed, built), data, queries, k, model.params, deletedIds, search)
+      search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame = {
+    val spark = probed.sparkSession
+    import spark.implicits._
+    val probes = probed.select(col("qid").cast("long"), col("t"), col("d"), col("block"),
+      col("score").cast("long")).as[ProbedBlock].collect().toSeq
+    serve(spark, collectBatch(queries, model).vecs, Seq(Side(built, probes, data, 0)), k,
+      model.params, deletedIds, graft.config.GraftConfig.active.stabilization, search)
+  }
 
-  /** [[refineFromProbes]] over already-joined probe members
-    * ([[probedMembers]], possibly a union over several indexes). */
-  private[graft] def refineMembers(
-      members: DataFrame,
-      data: DataFrame,
-      queries: DataFrame,
+  // ---- the serving kernel ----
+
+  /** A query batch on the driver: each query's vector and its
+    * (t, d, key, code) rows. */
+  private[graft] final case class Batch(vecs: Map[Long, Array[Float]], codes: Seq[QueryCode]) {
+    /** Driver-side probes of the batch against one index's probe map. */
+    def probe(built: LshIndex.Built, maxProbes: Int): Seq[ProbedBlock] = {
+      val summ = built.collected
+      codes.flatMap(probeCode(summ, _, maxProbes))
+    }
+  }
+
+  /** One job: the batch's ids, vectors and LSH codes, coded inside the
+    * plan over the batch only. A query whose vector is null has no
+    * codes and so no probes. */
+  private[graft] def collectBatch(queries: DataFrame, model: LshModel): Batch = {
+    val rows = queries.select(col("vec_id").cast("long"),
+        col("embedding").cast(ArrayType(FloatType)), Lsh.lshCodes(col("embedding"), model))
+      .collect()
+    val vecs = rows.collect { case r if !r.isNullAt(1) => r.getLong(0) -> r.getSeq[Float](1).toArray }
+    val codes = rows.toSeq.collect { case r if !r.isNullAt(2) =>
+      r.getSeq[Row](2).map(c => QueryCode(r.getLong(0), c.getInt(0), c.getInt(1),
+        c.getLong(2), c.getSeq[Long](3).toArray))
+    }.flatten
+    Batch(vecs.toMap, codes)
+  }
+
+  /** One index's part of a served batch: its probes, the serving view
+    * its by-vector table reads vectors from, and the offset that keeps
+    * its block ids apart from the other sides' (the staged delta's
+    * [[graft.index.IndexMaintenance.DeltaBlockOffset]]). */
+  private[graft] final case class Side(
+      built: LshIndex.Built, probes: Seq[ProbedBlock], source: DataFrame, blockOffset: Int)
+
+  /** One matched (query, vector) pair of the by-vector pass: the best
+    * probe Hamming, the probe-order stamp ([[firstOrd]]) and the exact
+    * distance — `found` is false when the serving view lacks the
+    * vector, which then drops after the cap and bound, before the
+    * top-k. */
+  final case class Hit(qid: Long, id: Long, hamming: Long, firstOrd: Long, dist: Double,
+      found: Boolean)
+  final case class Ranked(query_id: Long, vec_id: Long, dist: Double, rnk: Int)
+
+  /** The probe-order stamp of one probe appearance, bit-packed
+    * (t:8 | d:6 | score:13 | block:36, each clamped to its field) so its
+    * numeric min is the lexicographic min over (t, d, score, block) —
+    * the stamp [[cappedCandidates]] computes as a column. */
+  private[graft] def firstOrd(t: Int, d: Int, score: Long, block: Int): Long =
+    (math.min(t.toLong, 255L) << 55) + (math.min(d.toLong, 63L) << 49) +
+      (math.min(score, (1L << 13) - 1) << 36) + math.min(block.toLong, (1L << 36) - 1)
+
+  /**
+   * The serving kernel (steps 2-4 of the header): one mapPartitions
+   * pass over the sides' by-vector tables matches each vector's
+   * memberships against the probes, one shuffle by qid gathers each
+   * query's pairs, and [[boundHits]] + [[rankHits]] cut them. Soft
+   * deletes are collected (a driver-side id set) and skipped in the
+   * pass, so they never take cap budget.
+   *
+   * Preconditions: ids are unique
+   * in each serving view and in the query batch, and the sides' ids
+   * are disjoint (the main index's ids and the staged ids).
+   */
+  private[graft] def serve(
+      spark: SparkSession,
+      queryVecs: Map[Long, Array[Float]],
+      sides: Seq[Side],
       k: Int,
       p: LshParams,
       deletedIds: Option[DataFrame],
-      search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame = {
-    val bounded = boundedMembers(members, p, deletedIds, k,
-      graft.config.GraftConfig.active.stabilization, search)
-
-    val wK = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    bounded
-      .join(data.select(col("vec_id").as("id"), col("embedding")), Seq("id"))
-      .join(broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))), Seq("qid"))
-      .withColumn("dist", vec_l2(col("embedding"), col("qv")))
-      .select(col("qid").as("query_id"), col("id").as("vec_id"), col("dist"))
-      .withColumn("rnk", row_number().over(wK))
-      .filter(col("rnk") <= k)
+      stab: StabilizationConfig,
+      search: graft.config.SearchConfig): DataFrame =
+    cutPerQuery(spark, queryVecs, sides, deletedIds, Encoders.product[Ranked])(
+        hs => rankHits(boundHits(hs, k, p, stab, search), k))
       .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+
+  /** [[serve]] cut at the refinement bound: the (qid, id, hamming) rows
+    * that would enter the exact top-k, for pinning the window form
+    * ([[boundedCandidates]]) to the kernel. */
+  private[graft] def serveBounded(
+      spark: SparkSession,
+      queryVecs: Map[Long, Array[Float]],
+      sides: Seq[Side],
+      k: Int,
+      p: LshParams,
+      deletedIds: Option[DataFrame],
+      stab: StabilizationConfig,
+      search: graft.config.SearchConfig): DataFrame =
+    cutPerQuery(spark, queryVecs, sides, deletedIds, Encoders.product[Hit])(
+        boundHits(_, k, p, stab, search))
+      .select(col("qid"), col("id"), col("hamming"))
+
+  /** Steps 2-4: the by-vector pass, one shuffle by qid, and `cut` over
+    * each query's hits. */
+  private def cutPerQuery[U](spark: SparkSession, queryVecs: Map[Long, Array[Float]],
+      sides: Seq[Side], deletedIds: Option[DataFrame], enc: Encoder[U])(
+      cut: Seq[Hit] => Seq[U]): Dataset[U] =
+    spark.createDataset(matchTables(spark, queryVecs, sides, deletedIds))(Encoders.product[Hit])
+      .repartition(col("qid"))
+      .mapPartitions(perQuery(_).flatMap(cut))(enc)
+
+  /** Step 2: the by-vector pass, one [[Hit]] per matched (query, vector). */
+  private def matchTables(spark: SparkSession, queryVecs: Map[Long, Array[Float]],
+      sides: Seq[Side], deletedIds: Option[DataFrame]): org.apache.spark.rdd.RDD[Hit] = {
+    // (t, d, block + side offset) -> flattened (qid, score) pairs
+    val probes: Map[Long, Array[Long]] = sides.flatMap { s =>
+      s.probes.map(pb => LshIndex.packTdb(pb.t, pb.d, pb.block + s.blockOffset) -> pb)
+    }.groupBy(_._1).map { case (key, pbs) => key -> pbs.flatMap(x => Seq(x._2.qid, x._2.score)).toArray }
+    val deleted: Set[Long] = deletedIds.fold(Set.empty[Long])(
+      _.select(col("id").cast("long")).filter(col("id").isNotNull).collect().map(_.getLong(0)).toSet)
+    val tables = sides.map { s =>
+      val t = s.built.byVector(s.source)
+      val off = s.blockOffset.toLong
+      if (off == 0) t else t.map(r => r.copy(tdb = r.tdb.map(_ + off)))
+    }
+    val table = if (tables.size == 1) tables.head else spark.sparkContext.union(tables)
+    table.mapPartitions { rows =>
+      // the one L2 kernel vec_l2 runs, over the vectors as Catalyst arrays
+      val qv = queryVecs.map { case (q, v) => q -> UnsafeArrayData.fromPrimitiveArray(v) }
+      val acc = mutable.LongMap.empty[Array[Long]] // qid -> (hamming, first_ord)
+      rows.flatMap { r =>
+        acc.clear()
+        if (!deleted.contains(r.id)) r.tdb.foreach { x =>
+          probes.get(x).foreach { ps =>
+            var j = 0
+            while (j < ps.length) {
+              val (qid, score) = (ps(j), ps(j + 1))
+              if (queryVecs.contains(qid)) {
+                val ord = firstOrd(LshIndex.tdbT(x), LshIndex.tdbD(x), score, LshIndex.tdbBlock(x))
+                acc.get(qid) match {
+                  case Some(a) => a(0) = math.min(a(0), score); a(1) = math.min(a(1), ord)
+                  case None => acc(qid) = Array(score, ord)
+                }
+              }
+              j += 2
+            }
+          }
+        }
+        val vec = if (acc.isEmpty || r.vec == null) null else UnsafeArrayData.fromPrimitiveArray(r.vec)
+        acc.toArray.map { case (qid, a) =>
+          if (vec == null) Hit(qid, r.id, a(0), a(1), 0.0, found = false)
+          else Hit(qid, r.id, a(0), a(1), VectorKernels.l2(vec, qv(qid)), found = true)
+        }
+      }
+    }
   }
+
+  /** Step 3's reduce side: one partition's hits, grouped by query. */
+  private def perQuery(hits: Iterator[Hit]): Iterator[Seq[Hit]] = {
+    val byQ = mutable.LongMap.empty[mutable.ArrayBuffer[Hit]]
+    hits.foreach(h => byQ.getOrElseUpdate(h.qid, mutable.ArrayBuffer.empty[Hit]) += h)
+    byQ.valuesIterator.map(_.toSeq)
+  }
+
+  /**
+   * One query's cap and bound, in the reference's order: the HARD_CAP
+   * keeps the first `hardCap` candidates by (first_ord, id); the
+   * refinement bound keeps the first `limit` of those by (hamming, id),
+   * where `limit` is the D1 stabilization limiter
+   *   max(max(k, minCandidates), min(raw, ceil(k * targetRatio)))
+   * capped by refinementLimit (refinementLimit alone with the limiter
+   * disabled), `raw` being the capped count. PAPER_BASELINE skips both.
+   */
+  private[graft] def boundHits(hits: Seq[Hit], k: Int, p: LshParams,
+      stab: StabilizationConfig, search: graft.config.SearchConfig): Seq[Hit] =
+    if (search.paperBaseline) hits
+    else {
+      val capped = hits.sortBy(h => (h.firstOrd, h.id)).take(p.hardCap)
+      val limit =
+        if (!stab.enabled || k <= 0) p.refinementLimit.toLong
+        else math.min(p.refinementLimit.toLong,
+          math.max(math.max(k, stab.minCandidates).toLong,
+            math.min(capped.size.toLong, math.ceil(k * stab.targetRatio).toLong)))
+      capped.sortBy(h => (h.hamming, h.id)).take(limit.toInt)
+    }
+
+  /** One query's exact top-k over its bounded candidates: those with a
+    * vector, by (dist, id) — doubles ordered as Spark orders them. */
+  private[graft] def rankHits(bounded: Seq[Hit], k: Int): Seq[Ranked] =
+    bounded.filter(_.found)
+      .sortBy(h => (h.dist, h.id))(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .take(k).zipWithIndex
+      .map { case (h, i) => Ranked(h.qid, h.id, h.dist, i + 1) }
 
   /**
    * Recall@K of an ANN result against brute-force ground truth, per k
@@ -571,7 +761,7 @@ object AnnQuery {
    */
   def ensureResident(spark: SparkSession, sfDir: String): Unit = {
     val (_, built) = setupIndex(spark, sfDir)
-    built.ensureResident()
+    built.materialize(emb(spark, sfDir))
     built.summaryCount
     groundTruth(spark, sfDir, cfg.eval.kVariants.max)
     if (cfg.audit.enabled) groundTruth(spark, sfDir, auditK(spark, sfDir))

@@ -177,7 +177,7 @@ object DimRegistry {
     * entries then pay only QUERY-phase work, like the reference's
     * always-resident per-dim indexes. */
   def ensureResidentTwoDim(spark: SparkSession, sfDir: String): Unit =
-    setupTwoDim(spark, sfDir).values.foreach(_.built.ensureResident())
+    setupTwoDim(spark, sfDir).values.foreach(e => e.built.materialize(e.slice))
 
   /** Registry-routed LSH top-k over the 2-dim demo corpus (rows
     * oracle; own-dim parity and no-cross-dim guarantees spec'd in

@@ -13,8 +13,9 @@ import graft.query.AnnQuery
  * reference's online query server (`QueryServiceImpl.search` loop,
  * one request at a time): query vectors arrive on any streaming
  * source; every micro-batch runs the SAME batch top-k plan
- * (code -> probe -> refine -> window) via `foreachBatch` against the
- * resident index, appending results to the sink.
+ * (code the batch -> probe -> one pass over the resident by-vector
+ * table -> per-query cut) via `foreachBatch` against the resident
+ * index, appending results to the sink.
  *
  * Posture (SURVEY §6a): the model and built index stay
  * memoized/cached across triggers, so a trigger pays only its own
@@ -27,7 +28,7 @@ import graft.query.AnnQuery
  *
  * The token path composes the same way: stream token codes instead of
  * vectors and swap `lshTopK` for `QueryTokens.tokenTopK` — both are
- * per-micro-batch joins with no streaming state.
+ * per-micro-batch plans with no streaming state.
  */
 object AnnServe {
 

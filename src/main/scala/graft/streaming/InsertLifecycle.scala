@@ -27,9 +27,11 @@ import graft.query.AnnQuery
  * Scale posture: ingest cost per batch is one small parquet write plus
  * one count over the staged dirs; a delta is built only when served,
  * by collecting the staged codes (bounded by `compactEveryVectors`)
- * and numbering them on the driver; compaction is the standard
- * one-shuffle range-repartition build over the code union, made
- * resident before it replaces (and releases) the previous main index.
+ * and numbering them on the driver; its vectors are read from the
+ * serving view by id; compaction is the standard one-shuffle
+ * range-repartition build over the code union, made resident before
+ * it replaces (and releases) the previous main index, and a query over
+ * a view fills that index's by-vector table once.
  */
 final class InsertLifecycle(
     spark: SparkSession,

@@ -1,10 +1,16 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.index.{IndexMaintenance, LshIndex}
 import graft.lsh.LshCodesExpr
@@ -40,11 +46,45 @@ class ResidentIndexSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       case p if p.expressions.exists(_.exists(_.isInstanceOf[LshCodesExpr])) => p
     }
 
+  /** Every plan a `GraftSystem.query` runs: the ones it runs eagerly
+    * (their SQL execution starts inside `GraftSystem.query`) and the
+    * ones its result runs when collected. */
+  private object queryPlans {
+    private val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    // whether the latest SQL execution started inside GraftSystem.query
+    // (its call site); both listeners sit on the one shared listener
+    // queue, so an execution's start is seen before its QueryExecution
+    @volatile private var inQuery = false
+    @volatile private var collecting = false
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          inQuery = s.details.contains("graft.GraftSystem.query")
+        case _ =>
+      }
+    })
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (collecting || inQuery) qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    def of(served: DataFrame): Seq[SparkPlan] = {
+      collecting = true
+      try served.collect() finally {
+        SpecBus.drain(spark.sparkContext)
+        collecting = false
+      }
+      val plans = qes.asScala.map(_.executedPlan).toSeq
+      qes.clear()
+      plans
+    }
+  }
+  queryPlans
+
   private def assertCodesOnlyTheQueryBatch(served: DataFrame): Unit = {
-    served.collect()
-    val plan = served.queryExecution.executedPlan
-    val coding = codingNodes(plan)
-    assert(coding.nonEmpty, s"the query batch must be coded in the plan:\n$plan")
+    val plans = queryPlans.of(served)
+    val coding = plans.flatMap(codingNodes)
+    assert(coding.nonEmpty, s"the query batch must be coded in a plan the query runs:\n${plans.mkString("\n")}")
     coding.foreach { node =>
       val scans = node.collectLeaves().filter {
         case _: FileSourceScanExec | _: InMemoryTableScanExec => true
