@@ -111,8 +111,8 @@ final class GraftSystem private (
   }
 
   /** Drop everything this facade holds resident: the main index's
-    * numbered table, summaries, by-vector table and probe-map
-    * broadcast, and the staged delta's rows. The system stays usable
+    * numbered table, summaries and by-vector tables, and the staged
+    * delta's rows. The system stays usable
     * (a later query re-derives what it needs); call it when the system
     * is dropped, or its index stays cached for the rest of the
     * session. */

@@ -23,13 +23,15 @@ import graft.query.AnnQuery
  *    key version (reference `crypto.encryptQuery`), with
  *    (kv, dim, topK) metadata.
  *
- * The serving plan ([[AnnQuery.probeBlocksCoded]] /
- * [[AnnQuery.boundedCandidates]]) consumes ONLY the codes: probe
- * selection, candidate union, HARD_CAP, and the Hamming refinement
- * bound are all functions of codes and the index — no plaintext
- * vector exists server-side. The server returns encrypted candidate
- * records; the final exact-L2 top-k happens where the keys live
- * ([[tokenTopK]] decrypts candidates and the token's own ciphertext).
+ * The serving plan consumes ONLY the codes: [[AnnQuery.probeBlocksCoded]]
+ * collects them and walks the probe map on the driver, and
+ * [[AnnQuery.boundedCandidates]] runs the LSH serving kernel (candidate
+ * union, HARD_CAP, Hamming refinement bound) over the index's
+ * codes-only table, whose rows carry ids and block memberships and no
+ * vector — no plaintext vector exists server-side. The server returns
+ * encrypted candidate records; the final exact-L2 top-k happens where
+ * the keys live ([[tokenTopK]] decrypts candidates and the token's
+ * own ciphertext).
  *
  * TokenSpec asserts the token path returns exactly the plaintext
  * path's top-k (AES/pack roundtrips are bit-exact).

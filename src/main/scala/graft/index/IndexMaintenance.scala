@@ -31,9 +31,9 @@ import graft.query.AnnQuery
  *    (asserted in IndexMaintenanceSpec), so delta chains never
  *    degrade the steady-state layout.
  *
- * Delta block ids are offset by [[DeltaBlockOffset]] when the two
- * memberships union, so (t, d, block) stays a unique join key across
- * the combined index.
+ * Delta block ids are offset by [[DeltaBlockOffset]] when the kernel
+ * serves both sides in one pass, so a packed (t, d, block) key names
+ * one block across main and delta.
  */
 object IndexMaintenance {
 
@@ -55,24 +55,14 @@ object IndexMaintenance {
   def buildDelta(stagedCodes: DataFrame, blockSize: Int): LshIndex.Built =
     LshIndex.buildLocal(stagedCodes.sparkSession, LshIndex.collectCodes(stagedCodes), blockSize)
 
-  /** The combined (main + delta) index: memberships and summaries
-    * unioned with delta block ids offset. Candidate joins against it
-    * behave exactly like a single index. */
-  def combined(main: LshIndex.Built, delta: LshIndex.Built): LshIndex.Built =
-    LshIndex.Built(
-      main.membership.unionByName(
-        delta.membership.withColumn("block", col("block") + DeltaBlockOffset)),
-      main.summaries.unionByName(
-        delta.summaries.withColumn("block", col("block") + DeltaBlockOffset)))
-
   /**
    * Top-k over main + staged delta: each side is probed as its own
    * partition list (best-first, budget maxProbes each — the delta is
    * small, so its probes are nearly free) and both sides' by-vector
    * tables are served by ONE kernel pass (AnnQuery.serve), delta block
-   * ids offset by [[DeltaBlockOffset]] as in [[combined]]: one
-   * candidate union, Hamming bound and exact refine, and no query joins
-   * or shuffles the serving views. Fresh inserts are searchable
+   * ids offset by [[DeltaBlockOffset]]: one candidate union, Hamming
+   * bound and exact refine, and no query joins or shuffles the serving
+   * views. Fresh inserts are searchable
    * immediately; results for vectors in the main index are unchanged
    * (their probes are identical). Deletions drop before the candidate
    * cap, matching the non-delta path and the reference's
@@ -90,7 +80,7 @@ object IndexMaintenance {
       deletedIds: Option[DataFrame] = None): DataFrame = {
     val batch = AnnQuery.collectBatch(queries, model)
     def side(b: LshIndex.Built, source: DataFrame, offset: Int) =
-      AnnQuery.Side(b, batch.probe(b, model.params.maxProbes), source, offset)
+      AnnQuery.Side(b, batch.probe(b, model.params.maxProbes), Some(source), offset)
     val cfg = graft.config.GraftConfig.active
     AnnQuery.serve(spark, batch.vecs,
       Seq(side(main, mainData, 0), side(delta, deltaSource(mainData, deltaData), DeltaBlockOffset)),
@@ -207,7 +197,7 @@ object IndexMaintenance {
     val (main, delta) = setupDelta(spark, sfDir)
     val mainData = emb.filter(col("vec_id") >= 100)
     main.materialize(mainData)
-    delta.byVector(deltaSource(mainData, emb.filter(col("vec_id") < 100)))
+    delta.byVector(Some(deltaSource(mainData, emb.filter(col("vec_id") < 100))))
   }
 
   /**

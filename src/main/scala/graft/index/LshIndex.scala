@@ -3,7 +3,6 @@ package graft.index
 import scala.collection.mutable
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -33,7 +32,9 @@ import graft.lsh.{Lsh, LshModel}
  *    the only state that is ever collected (KBs-MBs at 100 TB);
  *  - the by-vector table ([[Built.byVector]]): one row per served
  *    vector, `(id, vec, tdb)` with its (t, d, block) memberships —
- *    the relation a query streams past its probes (AnnQuery.serve).
+ *    the relation a query streams past its probes (AnnQuery.serve);
+ *    its codes-only form (every `vec` null) serves the candidate cut
+ *    of a caller that holds no vectors.
  *
  * A served index is FINALIZED once ([[Built.materialize]]: the
  * numbered table, the summaries and the by-vector table resident, the
@@ -95,7 +96,7 @@ object LshIndex {
       * memo, so it survives cache eviction without re-counting). */
     lazy val summaryCount: Long = summaries.count()
 
-    /** Driver-side probe map for the broadcast probe path, collected
+    /** Driver-side probe map for the best-first probe, collected
       * once per built index (the reference keeps its partition list
       * resident in the server for the system's lifetime — re-collecting
       * it per query batch would re-pay a job every call). Deterministic
@@ -106,27 +107,19 @@ object LshIndex {
     }
     @transient private var probeMap: Map[(Int, Int), TdSummary] = null
 
-    @transient private var probeMapBc: Broadcast[Map[(Int, Int), TdSummary]] = null
-
     // what the relations above project: the numbered table of [[build]],
     // or the driver-side code rows and memberships of [[buildLocal]]
     @transient private var numbered: Option[DataFrame] = None
     @transient private var localCodes: Option[(Seq[Code], Map[Long, Array[Long]])] = None
     @transient private var resident = false
-    // the by-vector tables, one per serving view
-    @transient private val tables = mutable.ArrayBuffer.empty[(DataFrame, Dataset[VecRow])]
+    // the by-vector tables, one per serving view (None: the codes-only table)
+    @transient private val tables = mutable.ArrayBuffer.empty[(Option[DataFrame], Dataset[VecRow])]
+    // the distributed probe's cover table and its key-bucket width
+    @transient private var cover: Option[(DataFrame, Int)] = None
 
     private[index] def numberedBy(df: DataFrame): Built = { numbered = Some(df); this }
     private[index] def localBy(codes: Seq[Code], tdb: Map[Long, Array[Long]]): Built = {
       localCodes = Some((codes, tdb)); this
-    }
-
-    /** The probe map's broadcast handle, created once per built index —
-      * repeated probe calls must not re-serialize and re-ship the map. */
-    def collectedBc: Broadcast[Map[(Int, Int), TdSummary]] = synchronized {
-      if (probeMapBc == null)
-        probeMapBc = summaries.sparkSession.sparkContext.broadcast(collected)
-      probeMapBc
     }
 
     /** The code rows this index numbers (id, t, d, key, code): the code
@@ -145,14 +138,16 @@ object LshIndex {
     /**
      * The by-vector table over a serving view `source` (vec_id,
      * embedding): one [[VecRow]] per indexed id with its vector — null
-     * when `source` lacks the id — and its memberships. Memoized per
-     * serving view (a same-result plan) and cached while the index is
-     * resident. A distributed index derives it by one id co-group of
-     * its membership with `source`; a driver-side one ([[buildLocal]])
-     * by collecting its ids' rows of `source`.
+     * when `source` lacks the id — and its memberships. With no view it
+     * is the codes-only table: every vector null, what a server that
+     * holds no plaintext (the token path) serves its candidate cut from.
+     * Memoized per serving view (a same-result plan) and cached while
+     * the index is resident. A distributed index derives it by one id
+     * co-group of its membership with `source`; a driver-side one
+     * ([[buildLocal]]) by collecting its ids' rows of `source`.
      */
-    private[graft] def byVector(source: DataFrame): RDD[VecRow] = synchronized {
-      val table = tables.collectFirst { case (s, t) if s.sameSemantics(source) => t }
+    private[graft] def byVector(source: Option[DataFrame]): RDD[VecRow] = synchronized {
+      val table = tables.collectFirst { case (s, t) if sameView(s, source) => t }
         .getOrElse {
           val t = deriveTable(source)
           tables += source -> t
@@ -162,6 +157,11 @@ object LshIndex {
       table.rdd
     }
 
+    private def sameView(a: Option[DataFrame], b: Option[DataFrame]): Boolean = (a, b) match {
+      case (Some(x), Some(y)) => x.sameSemantics(y)
+      case _ => a.isEmpty && b.isEmpty
+    }
+
     /** Serve `source` from rows already in hand (a staged batch collected
       * with its vectors): no job derives the table. */
     private[graft] def byVectorFrom(source: DataFrame, vecs: Seq[(Long, Array[Float])]): Built =
@@ -169,21 +169,21 @@ object LshIndex {
         val spark = membership.sparkSession
         import spark.implicits._
         val tdb = localCodes.map(_._2).getOrElse(Map.empty[Long, Array[Long]])
-        tables += source -> vecs.flatMap { case (id, v) => tdb.get(id).map(VecRow(id, v, _)) }.toDS()
+        tables += Some(source) -> vecs.flatMap { case (id, v) => tdb.get(id).map(VecRow(id, v, _)) }.toDS()
         this
       }
 
-    private def deriveTable(source: DataFrame): Dataset[VecRow] = {
+    private def deriveTable(source: Option[DataFrame]): Dataset[VecRow] = {
       val spark = membership.sparkSession
       import spark.implicits._
-      val vecs = source.select(col("vec_id").cast("long").as("id"),
-        col("embedding").cast(ArrayType(FloatType)).as("vec"))
+      val vecs = source.map(_.select(col("vec_id").cast("long").as("id"),
+        col("embedding").cast(ArrayType(FloatType)).as("vec")).as[(Long, Array[Float])])
       localCodes match {
         case Some((_, tdb)) =>
-          val got: Map[Long, Array[Float]] =
-            if (tdb.isEmpty) Map.empty
-            else vecs.filter(col("id").isin(tdb.keys.toSeq: _*))
-              .as[(Long, Array[Float])].collect().toMap
+          val got: Map[Long, Array[Float]] = vecs match {
+            case Some(v) if tdb.nonEmpty => v.filter(col("id").isin(tdb.keys.toSeq: _*)).collect().toMap
+            case _ => Map.empty
+          }
           tdb.toSeq.map { case (id, t) => VecRow(id, got.getOrElse(id, null), t) }.toDS()
         case None =>
           // one shuffle: memberships and vectors co-grouped by id (the
@@ -193,7 +193,7 @@ object LshIndex {
             .bitwiseOR(shiftleft(col("d").cast("long"), 32))
             .bitwiseOR(col("block").cast("long"))
           spark.createDataset(membership.select(col("id"), packed).as[(Long, Long)].rdd
-            .cogroup(vecs.as[(Long, Array[Float])].rdd,
+            .cogroup(vecs.fold(spark.sparkContext.emptyRDD[(Long, Array[Float])])(_.rdd),
               new HashPartitioner(spark.sparkContext.defaultParallelism))
             .flatMap { case (id, (tdb, vs)) =>
               if (tdb.isEmpty) Nil
@@ -201,6 +201,17 @@ object LshIndex {
               else vs.map(VecRow(id, _, tdb.toArray))
             })
       }
+    }
+
+    /** The distributed probe's query-independent cover table and its
+      * key-bucket width (AnnQuery.probeBlocksDistributed), derived once
+      * by `derive` (the reference's FINALIZE: re-deriving the cover
+      * ranges per query batch would re-pay a window pass every call) and
+      * cached while the index is resident. */
+    private[graft] def coverTable(derive: => (DataFrame, Int)): (DataFrame, Int) = synchronized {
+      val c = cover.getOrElse { val v = derive; cover = Some(v); v }
+      if (resident && c._1.storageLevel == StorageLevel.NONE) c._1.cache()
+      c
     }
 
     /** FINALIZE (`finalizeForSearch`): cache the numbered table (or the
@@ -225,7 +236,7 @@ object LshIndex {
       * `data`, so the first query over `data` finds it resident. */
     def materialize(data: DataFrame): Built = synchronized {
       materialize()
-      byVector(data).count()
+      byVector(Some(data)).count()
       this
     }
 
@@ -233,19 +244,19 @@ object LshIndex {
       * (bench prep, so query timings measure serving, not re-indexing). */
     def ensureResident(): Unit = materialize()
 
-    /** Drop what [[materialize]] and the probe path hold: the caches, the
-      * by-vector tables and the probe map's executor copies. The index
-      * stays usable (it re-derives on demand); call it on an index that
-      * is superseded. */
+    /** Drop what [[materialize]] and the probe paths hold: the caches,
+      * the by-vector and codes-only tables and the distributed probe's
+      * cover table. The index stays usable (it re-derives on demand);
+      * call it on an index that is superseded. */
     def release(): Unit = synchronized {
       numbered.foreach(_.unpersist())
       membership.unpersist()
       summaries.unpersist()
       tables.foreach(_._2.unpersist())
       tables.clear()
+      cover.foreach(_._1.unpersist())
+      cover = None
       resident = false
-      if (probeMapBc != null) probeMapBc.unpersist()
-      probeMapBc = null
     }
   }
 
@@ -378,7 +389,7 @@ object LshIndex {
   /**
    * Driver-side probe map: per (t, d), block summaries sorted by
    * block id (== key order). Small by construction (rows / blockSize,
-   * ids dropped) — this is the broadcast state of the query path.
+   * ids dropped) — the driver-side state the best-first probe walks.
    */
   final case class TdSummary(
       minKey: Array[Long], maxKey: Array[Long], rep: Array[Array[Long]]) {

@@ -33,7 +33,7 @@ final case class LshParams(
     refinementLimit: Int = 20000,
     maxGlobalCandidates: Int = 20000) {
   require(m > 0 && lambda > 0 && tables > 0 && divisions > 0 && blockSize > 0)
-  // bit-pack field widths (AnnQuery.packedOrd: t:8 d:6 score:13 block:36
+  // bit-pack field widths (AnnQuery.firstOrd: t:8 d:6 score:13 block:36
   // bits): a config exceeding a field would silently reorder the
   // hard-cap cut instead of matching the reference's lexicographic
   // struct-min — fail loudly at construction instead

@@ -37,17 +37,20 @@ import graft.util.SessionMemo
  *      (qid, id, hamming, first_ord, dist) per matched (vector, query),
  *      dist by [[graft.functions.VectorKernels.l2]];
  *   3. one shuffle by qid;
- *   4. a per-query cut: hard cap on (first_ord, id), refinement bound
- *      on (hamming, id) with the stabilization limiter, top-k on
- *      (dist, id) ([[boundHits]], [[rankHits]]).
+ *   4. a per-query cut: hard cap on (first_ord, id) ([[capHits]]),
+ *      refinement bound on (hamming, id) with the stabilization limiter
+ *      ([[boundHits]]), top-k on (dist, id) ([[rankHits]]).
  *
  * No query joins, broadcasts or shuffles the serving view: probes and
  * query vectors are query-batch sized and ride in the task closure,
  * the pass streams the table once, and only matched pairs reach the
- * shuffle. The window forms of the cap and bound
- * ([[cappedCandidates]], [[boundedCandidates]]) stay for the
- * codes-only token path and the profiles; a spec pins them to the
- * kernel's cut on the same probes.
+ * shuffle. The kernel is the only cap and bound. A caller that holds
+ * no vectors — the token server, the filtered search, the tier counts
+ * and the profiles — takes [[cappedCandidates]] or [[boundedCandidates]]:
+ * the same pass and cut over the index's codes-only table. Every probe
+ * but one is the driver-side walk ([[probeBlocks]], [[probeBlocksCoded]]);
+ * the join-based [[probeBlocksDistributed]] is for summaries too large
+ * to collect.
  */
 object AnnQuery {
 
@@ -80,29 +83,19 @@ object AnnQuery {
     probeBlocksCoded(spark, queryCodes(queries, model), model, built)
 
   /** [[probeBlocks]] from precomputed query codes: the server-side half
-    * of the token path — consumes codes only, never a plaintext vector. */
+    * of the token path — consumes codes only, never a plaintext vector.
+    * One job collects the batch's codes; the walk runs on the driver
+    * ([[bestFirst]]) and the probes return as a local relation. */
   def probeBlocksCoded(
       spark: SparkSession,
       codes: DataFrame,
       model: LshModel,
       built: LshIndex.Built): DataFrame = {
     import spark.implicits._
-    val maxProbes = model.params.maxProbes
-    val summB = built.collectedBc
-    codes.select(col("qid"), col("t"), col("d"), col("key"), col("code"))
-      .as[QueryCode]
-      .mapPartitions(_.flatMap(qc => probeCode(summB.value, qc, maxProbes)))
-      .toDF()
+    val qcs = codes.select(col("qid"), col("t"), col("d"), col("key"), col("code"))
+      .as[QueryCode].collect().toSeq
+    Batch(Map.empty, qcs).probe(built, model.params.maxProbes).toDF()
   }
-
-  /** One query code's probes against a probe map (none when the index
-    * has no blocks for its (t, d)). */
-  private def probeCode(summ: Map[(Int, Int), LshIndex.TdSummary], qc: QueryCode,
-      maxProbes: Int): Seq[ProbedBlock] =
-    summ.get((qc.t, qc.d)).fold(Seq.empty[ProbedBlock])(s =>
-      bestFirst(s, qc.key, qc.code, maxProbes).map { case (block, score) =>
-        ProbedBlock(qc.qid, qc.t, qc.d, block, score)
-      })
 
   /** Best-first block expansion over one (t, d) partition list (the
     * reference's `lookupCandidatesWithScores` walk): start at the
@@ -166,38 +159,6 @@ object AnnQuery {
       built: LshIndex.Built): DataFrame =
     probeBlocksDistributedCoded(queryCodes(queries, model), model, built)
 
-  /**
-   * Query-independent probe-side tables of the distributed path,
-   * derived once per built index (the reference's FINALIZE step: the
-   * server finalizes its partition list before serving; re-deriving
-   * the cover ranges and block buckets per query batch would re-pay
-   * two window passes every call). Cached; a cleared cache re-marks
-   * on next access (the tables are deterministic re-derivable state).
-   */
-  private val finalizeCache =
-    new java.util.WeakHashMap[LshIndex.Built, (DataFrame, DataFrame, Int)]()
-
-  private def finalizedProbeSide(
-      built: LshIndex.Built, p: LshParams): (DataFrame, DataFrame, Int) = {
-    val (cover, bSumm, keyBits) = finalizeCache.synchronized {
-      var v = finalizeCache.get(built)
-      if (v == null) {
-        val summ = built.summaries.select(col("t"), col("d"), col("block"),
-          col("min_key"), col("max_key"), col("rep_code"))
-        val kb = keyBitsFor(built.summaryCount, p)
-        val bucketOf = (c: Column) => floor(c / p.maxProbes).cast("int")
-        v = (coverBucketedSummaries(summ, kb),
-          summ.withColumn("bucket", bucketOf(col("block"))), kb)
-        finalizeCache.put(built, v)
-      }
-      v
-    }
-    // re-mark after an external clearCache (e.g. the bench between queries)
-    if (cover.storageLevel == org.apache.spark.storage.StorageLevel.NONE) cover.cache()
-    if (bSumm.storageLevel == org.apache.spark.storage.StorageLevel.NONE) bSumm.cache()
-    (cover, bSumm, keyBits)
-  }
-
   /** [[probeBlocksDistributed]] from precomputed query codes (token path). */
   def probeBlocksDistributedCoded(
       codes: DataFrame,
@@ -207,7 +168,11 @@ object AnnQuery {
     val qCodes = codes
       .select(col("qid"), col("t"), col("d"), col("key"), col("code").as("qcode"))
 
-    val (cover, bSumm, keyBits) = finalizedProbeSide(built, p)
+    val (cover, keyBits) = built.coverTable {
+      val kb = keyBitsFor(built.summaryCount, p)
+      (coverBucketedSummaries(built.summaries.select(col("t"), col("d"), col("block"),
+        col("min_key"), col("max_key")), kb), kb)
+    }
     val centers = centerBlocksFromCover(qCodes, cover, keyBits)
 
     // candidate window around the center, ranked by Hamming on rep
@@ -217,6 +182,8 @@ object AnnQuery {
     // BEFORE shuffling, instead of fanning out over every block of the
     // (t, d) and filtering after.
     val bucketOf = (c: Column) => floor(c / p.maxProbes).cast("int")
+    val bSumm = built.summaries.select(col("t"), col("d"), col("block"), col("rep_code"),
+      bucketOf(col("block")).as("bucket"))
     val wProbe = Window.partitionBy("qid", "t", "d").orderBy(col("score"), col("block"))
     centers
       .select(col("qid"), col("t"), col("d"), col("qcode"), col("center"),
@@ -323,7 +290,7 @@ object AnnQuery {
         data, queries, k, m, built, deletedIds, search)
     else {
       val batch = collectBatch(queries, m)
-      serve(spark, batch.vecs, Seq(Side(built, batch.probe(built, m.params.maxProbes), data, 0)),
+      serve(spark, batch.vecs, Seq(Side(built, batch.probe(built, m.params.maxProbes), Some(data), 0)),
         k, m.params, deletedIds, graft.config.GraftConfig.active.stabilization, search)
     }
   }
@@ -331,13 +298,12 @@ object AnnQuery {
   /**
    * Candidate union bounded by the reference's HARD_CAP
    * (PartitionedIndexService.java:479,490: collection walks (t, d) in
-   * order, best-first within each, and stops at hardCap distinct ids).
-   * Re-expressed set-wise: each distinct (qid, id) is stamped with its
-   * FIRST probe-order appearance — min over (t, d, score, block, id),
-   * the lexicographic image of the reference's collection order — and
-   * ranked; ranks beyond hardCap drop. Caps a degenerate key region's
-   * blow-up of one query's candidate partition, exactly like the
-   * reference bounds its per-query HashMap.
+   * order, best-first within each, and stops at hardCap distinct ids):
+   * the kernel's cap ([[capHits]]) over the collected probes and the
+   * index's codes-only table, (qid, id, hamming) per kept candidate.
+   * Caps a degenerate key region's blow-up of one query's candidate
+   * set, exactly like the reference bounds its per-query HashMap; soft
+   * deletes never take cap budget.
    */
   private[graft] def cappedCandidates(
       probed: DataFrame,
@@ -345,7 +311,7 @@ object AnnQuery {
       p: LshParams,
       deletedIds: Option[DataFrame] = None,
       search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame =
-    cappedMembers(probedMembers(probed, built), p, deletedIds, search)
+    candidateCut(probed, built, deletedIds)(capHits(_, p, search))
 
   /** Probed blocks joined to the ids they hold (t, d, block, qid, score,
     * id, key). The probe set is query-batch sized (queries x tables x
@@ -354,67 +320,13 @@ object AnnQuery {
   private[graft] def probedMembers(probed: DataFrame, built: LshIndex.Built): DataFrame =
     broadcast(probed).join(built.membership, Seq("t", "d", "block"))
 
-  /** [[cappedCandidates]] over already-joined probe members
-    * ([[probedMembers]], possibly a union over several indexes). */
-  private def cappedMembers(
-      members: DataFrame,
-      p: LshParams,
-      deletedIds: Option[DataFrame],
-      search: graft.config.SearchConfig): DataFrame = {
-    // candidate union: min Hamming across (table, division) probes.
-    // Soft deletes (reference metadata.isDeleted / loadPointIfActive)
-    // drop out here via anti-join — the index itself is not touched;
-    // deleted ids never consume cap budget (reference skips them
-    // during collection).
-    // the probe-order stamp is BIT-PACKED into one long (t | d | score |
-    // block, 8+6+13+36 bits, each clamped to its field): its long min is
-    // the lexicographic min over (t, d, score, block) — id is constant
-    // within a (qid, id) group, so the old struct's trailing id field
-    // was inert INSIDE the min — and a numeric min keeps the aggregate
-    // hash-based with map-side partial combine (min over a struct
-    // forces a SortAggregate, which re-sorts the whole candidate union
-    // twice). The cap window below re-adds id as the explicit tiebreak:
-    // distinct ids sharing a (t, d, score, block) stamp must still rank
-    // in a TOTAL order, or the hardCap cut would be run-dependent.
-    val firstOrd =
-      shiftleft(least(col("t").cast("long"), lit(255L)), 55) +
-        shiftleft(least(col("d").cast("long"), lit(63L)), 49) +
-        shiftleft(least(col("score").cast("long"), lit((1L << 13) - 1)), 36) +
-        least(col("block").cast("long"), lit((1L << 36) - 1))
-    val candidatesAll = members
-      .groupBy(col("qid"), col("id"))
-      .agg(
-        min(col("score")).as("hamming"),
-        min(firstOrd).as("first_ord"))
-    val live = deletedIds.fold(candidatesAll)(del =>
-      candidatesAll.join(broadcast(del.select(col("id"))), Seq("id"), "left_anti"))
-    // PAPER_BASELINE: no collection cap — every probed candidate
-    // continues to the exact refine (SearchConfig scaladoc)
-    if (search.paperBaseline)
-      live.select(col("qid"), col("id"), col("hamming"))
-    else {
-      val wCap = Window.partitionBy("qid").orderBy(col("first_ord"), col("id"))
-      live
-        .withColumn("cap_rank", row_number().over(wCap))
-        .filter(col("cap_rank") <= p.hardCap)
-        .select(col("qid"), col("id"), col("hamming"))
-    }
-  }
-
   /**
    * Candidate union + Hamming bound, codes-only: everything the SERVER
    * side of the token path computes. Yields (qid, id, hamming) — the
    * per-query top candidate ids by Hamming, derived purely from probe
-   * scores over the index; no plaintext vector is touched.
-   *
-   * The per-query bound is the reference's D1 stabilization limiter
-   * (QueryServiceImpl "decrypts a limited prefix of candidates";
-   * formula documented in query/CandidatePipelineTest PATCH-6):
-   *   finalSize = max(max(k, minCandidates), min(raw, ceil(k * targetRatio)))
-   * capped by refinementLimit; with stabilization disabled the bound
-   * is refinementLimit alone. `raw` is the per-query candidate count —
-   * a count window over the same qid partition the rank window uses,
-   * so the limiter costs no extra shuffle.
+   * scores over the index; no plaintext vector is touched. It is the
+   * kernel's cap and bound ([[boundHits]]) over the collected probes
+   * and the index's codes-only table: the set [[serve]] refines.
    *
    * The reference's ranked-Hamming threshold pre-filter with fallback
    * fill (QueryServiceImpl.java:177-197) needs no code here: the
@@ -431,34 +343,21 @@ object AnnQuery {
       k: Int = 0,
       stab: StabilizationConfig = graft.config.GraftConfig.active.stabilization,
       search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame =
-    boundedMembers(probedMembers(probed, built), p, deletedIds, k, stab, search)
+    candidateCut(probed, built, deletedIds)(boundHits(_, k, p, stab, search))
 
-  private def boundedMembers(
-      members: DataFrame,
-      p: LshParams,
-      deletedIds: Option[DataFrame],
-      k: Int,
-      stab: StabilizationConfig,
-      search: graft.config.SearchConfig): DataFrame = {
-    val candidates = cappedMembers(members, p, deletedIds, search)
-    // PAPER_BASELINE: no ranked-Hamming refinement bound and no
-    // stabilization — the full candidate union is exactly refined
-    if (search.paperBaseline)
-      return candidates.select(col("qid"), col("id"), col("hamming"))
-    val wRefine = Window.partitionBy("qid").orderBy(col("hamming"), col("id"))
-    val limit: Column =
-      if (!stab.enabled || k <= 0) lit(p.refinementLimit.toLong)
-      else {
-        val raw = count(lit(1)).over(Window.partitionBy("qid"))
-        least(lit(p.refinementLimit.toLong),
-          greatest(lit(math.max(k, stab.minCandidates).toLong),
-            least(raw, lit(math.ceil(k * stab.targetRatio).toLong))))
-      }
-    candidates
-      .withColumn("h_rank", row_number().over(wRefine))
-      .withColumn("h_limit", limit)
-      .filter(col("h_rank") <= col("h_limit"))
+  /** The kernel over `built`'s codes-only table: `cut` of each query's
+    * hits from the collected probes, as (qid, id, hamming). */
+  private def candidateCut(probed: DataFrame, built: LshIndex.Built,
+      deletedIds: Option[DataFrame])(cut: Seq[Hit] => Seq[Hit]): DataFrame =
+    cutPerQuery(probed.sparkSession, Map.empty, Seq(Side(built, collectProbes(probed), None, 0)),
+        deletedIds, Encoders.product[Hit])(cut)
       .select(col("qid"), col("id"), col("hamming"))
+
+  /** A probe frame's rows on the driver (query-batch sized). */
+  private def collectProbes(probed: DataFrame): Seq[ProbedBlock] = {
+    import probed.sparkSession.implicits._
+    probed.select(col("qid").cast("long"), col("t"), col("d"), col("block"),
+      col("score").cast("long")).as[ProbedBlock].collect().toSeq
   }
 
   /** Candidate union + bounded Hamming refine + exact-L2 top-k over a
@@ -473,12 +372,9 @@ object AnnQuery {
       built: LshIndex.Built,
       deletedIds: Option[DataFrame] = None,
       search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame = {
-    val spark = probed.sparkSession
-    import spark.implicits._
-    val probes = probed.select(col("qid").cast("long"), col("t"), col("d"), col("block"),
-      col("score").cast("long")).as[ProbedBlock].collect().toSeq
-    serve(spark, collectBatch(queries, model).vecs, Seq(Side(built, probes, data, 0)), k,
-      model.params, deletedIds, graft.config.GraftConfig.active.stabilization, search)
+    val batch = collectBatch(queries, model)
+    serve(probed.sparkSession, batch.vecs, Seq(Side(built, collectProbes(probed), Some(data), 0)),
+      k, model.params, deletedIds, graft.config.GraftConfig.active.stabilization, search)
   }
 
   // ---- the serving kernel ----
@@ -486,10 +382,15 @@ object AnnQuery {
   /** A query batch on the driver: each query's vector and its
     * (t, d, key, code) rows. */
   private[graft] final case class Batch(vecs: Map[Long, Array[Float]], codes: Seq[QueryCode]) {
-    /** Driver-side probes of the batch against one index's probe map. */
+    /** Driver-side probes of the batch against one index's probe map
+      * (none for a (t, d) the index has no blocks for). */
     def probe(built: LshIndex.Built, maxProbes: Int): Seq[ProbedBlock] = {
       val summ = built.collected
-      codes.flatMap(probeCode(summ, _, maxProbes))
+      for {
+        qc <- codes
+        s <- summ.get((qc.t, qc.d)).toSeq
+        (block, score) <- bestFirst(s, qc.key, qc.code, maxProbes)
+      } yield ProbedBlock(qc.qid, qc.t, qc.d, block, score)
     }
   }
 
@@ -509,17 +410,20 @@ object AnnQuery {
   }
 
   /** One index's part of a served batch: its probes, the serving view
-    * its by-vector table reads vectors from, and the offset that keeps
-    * its block ids apart from the other sides' (the staged delta's
-    * [[graft.index.IndexMaintenance.DeltaBlockOffset]]). */
+    * its by-vector table reads vectors from (none: the codes-only
+    * table, whose hits feed only the cap and bound), and the offset
+    * that keeps its block ids apart from the other sides' (the staged
+    * delta's [[graft.index.IndexMaintenance.DeltaBlockOffset]]). */
   private[graft] final case class Side(
-      built: LshIndex.Built, probes: Seq[ProbedBlock], source: DataFrame, blockOffset: Int)
+      built: LshIndex.Built, probes: Seq[ProbedBlock], source: Option[DataFrame],
+      blockOffset: Int)
 
   /** One matched (query, vector) pair of the by-vector pass: the best
     * probe Hamming, the probe-order stamp ([[firstOrd]]) and the exact
-    * distance — `found` is false when the serving view lacks the
-    * vector, which then drops after the cap and bound, before the
-    * top-k. */
+    * distance — `found` is false when there is no vector to measure
+    * (the serving view lacks it, the side is codes-only, or the query
+    * has none); such a hit takes cap and bound budget, then drops
+    * before the top-k. */
   final case class Hit(qid: Long, id: Long, hamming: Long, firstOrd: Long, dist: Double,
       found: Boolean)
   final case class Ranked(query_id: Long, vec_id: Long, dist: Double, rnk: Int)
@@ -527,7 +431,8 @@ object AnnQuery {
   /** The probe-order stamp of one probe appearance, bit-packed
     * (t:8 | d:6 | score:13 | block:36, each clamped to its field) so its
     * numeric min is the lexicographic min over (t, d, score, block) —
-    * the stamp [[cappedCandidates]] computes as a column. */
+    * the image of the reference's collection order that the cap keeps
+    * (the oracle chain, [[annChainSqlOpt]], packs the same fields). */
   private[graft] def firstOrd(t: Int, d: Int, score: Long, block: Int): Long =
     (math.min(t.toLong, 255L) << 55) + (math.min(d.toLong, 63L) << 49) +
       (math.min(score, (1L << 13) - 1) << 36) + math.min(block.toLong, (1L << 36) - 1)
@@ -556,22 +461,6 @@ object AnnQuery {
     cutPerQuery(spark, queryVecs, sides, deletedIds, Encoders.product[Ranked])(
         hs => rankHits(boundHits(hs, k, p, stab, search), k))
       .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
-
-  /** [[serve]] cut at the refinement bound: the (qid, id, hamming) rows
-    * that would enter the exact top-k, for pinning the window form
-    * ([[boundedCandidates]]) to the kernel. */
-  private[graft] def serveBounded(
-      spark: SparkSession,
-      queryVecs: Map[Long, Array[Float]],
-      sides: Seq[Side],
-      k: Int,
-      p: LshParams,
-      deletedIds: Option[DataFrame],
-      stab: StabilizationConfig,
-      search: graft.config.SearchConfig): DataFrame =
-    cutPerQuery(spark, queryVecs, sides, deletedIds, Encoders.product[Hit])(
-        boundHits(_, k, p, stab, search))
-      .select(col("qid"), col("id"), col("hamming"))
 
   /** Steps 2-4: the by-vector pass, one shuffle by qid, and `cut` over
     * each query's hits. */
@@ -608,12 +497,10 @@ object AnnQuery {
             var j = 0
             while (j < ps.length) {
               val (qid, score) = (ps(j), ps(j + 1))
-              if (queryVecs.contains(qid)) {
-                val ord = firstOrd(LshIndex.tdbT(x), LshIndex.tdbD(x), score, LshIndex.tdbBlock(x))
-                acc.get(qid) match {
-                  case Some(a) => a(0) = math.min(a(0), score); a(1) = math.min(a(1), ord)
-                  case None => acc(qid) = Array(score, ord)
-                }
+              val ord = firstOrd(LshIndex.tdbT(x), LshIndex.tdbD(x), score, LshIndex.tdbBlock(x))
+              acc.get(qid) match {
+                case Some(a) => a(0) = math.min(a(0), score); a(1) = math.min(a(1), ord)
+                case None => acc(qid) = Array(score, ord)
               }
               j += 2
             }
@@ -621,8 +508,10 @@ object AnnQuery {
         }
         val vec = if (acc.isEmpty || r.vec == null) null else UnsafeArrayData.fromPrimitiveArray(r.vec)
         acc.toArray.map { case (qid, a) =>
-          if (vec == null) Hit(qid, r.id, a(0), a(1), 0.0, found = false)
-          else Hit(qid, r.id, a(0), a(1), VectorKernels.l2(vec, qv(qid)), found = true)
+          qv.get(qid) match {
+            case Some(q) if vec != null => Hit(qid, r.id, a(0), a(1), VectorKernels.l2(vec, q), found = true)
+            case _ => Hit(qid, r.id, a(0), a(1), 0.0, found = false)
+          }
         }
       }
     }
@@ -635,20 +524,28 @@ object AnnQuery {
     byQ.valuesIterator.map(_.toSeq)
   }
 
+  /** One query's HARD_CAP: the first `hardCap` candidates by
+    * (first_ord, id) — the reference's collection order, id breaking
+    * ties so the cut is total. PAPER_BASELINE keeps them all. */
+  private[graft] def capHits(hits: Seq[Hit], p: LshParams,
+      search: graft.config.SearchConfig): Seq[Hit] =
+    if (search.paperBaseline) hits else hits.sortBy(h => (h.firstOrd, h.id)).take(p.hardCap)
+
   /**
-   * One query's cap and bound, in the reference's order: the HARD_CAP
-   * keeps the first `hardCap` candidates by (first_ord, id); the
-   * refinement bound keeps the first `limit` of those by (hamming, id),
-   * where `limit` is the D1 stabilization limiter
+   * One query's cap and bound, in the reference's order: [[capHits]],
+   * then the refinement bound keeps the first `limit` of the capped
+   * candidates by (hamming, id), where `limit` is the D1 stabilization
+   * limiter (QueryServiceImpl "decrypts a limited prefix of
+   * candidates"; formula in query/CandidatePipelineTest PATCH-6)
    *   max(max(k, minCandidates), min(raw, ceil(k * targetRatio)))
    * capped by refinementLimit (refinementLimit alone with the limiter
    * disabled), `raw` being the capped count. PAPER_BASELINE skips both.
    */
   private[graft] def boundHits(hits: Seq[Hit], k: Int, p: LshParams,
-      stab: StabilizationConfig, search: graft.config.SearchConfig): Seq[Hit] =
-    if (search.paperBaseline) hits
+      stab: StabilizationConfig, search: graft.config.SearchConfig): Seq[Hit] = {
+    val capped = capHits(hits, p, search)
+    if (search.paperBaseline) capped
     else {
-      val capped = hits.sortBy(h => (h.firstOrd, h.id)).take(p.hardCap)
       val limit =
         if (!stab.enabled || k <= 0) p.refinementLimit.toLong
         else math.min(p.refinementLimit.toLong,
@@ -656,6 +553,7 @@ object AnnQuery {
             math.min(capped.size.toLong, math.ceil(k * stab.targetRatio).toLong)))
       capped.sortBy(h => (h.hamming, h.id)).take(limit.toInt)
     }
+  }
 
   /** One query's exact top-k over its bounded candidates: those with a
     * vector, by (dist, id) — doubles ordered as Spark orders them. */
@@ -1076,12 +974,11 @@ object AnnQuery {
     // driver-side (evalMetricsLocal — the reference's client-side
     // Evaluator posture). The DataFrame composition survives as
     // annRecallEvalPlan, cross-checked in DiagnosticsSpec.
-    val probed = probeBlocks(spark, queries, model, built).cache()
+    val probed = probeBlocks(spark, queries, model, built)
     val ann = refineFromProbes(probed, data, queries, maxK, model, built)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
     val counts = candidateCounts(probed, built)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    probed.unpersist()
     val gt = groundTruthRows(spark, sfDir, maxK)
     val gtForRatio =
       if (cfg.ratio.source == "base")
@@ -1386,8 +1283,8 @@ object AnnQuery {
   /** Main + staged-delta serving (`IndexMaintenance.lshTopKWithDelta`):
     * vectors split into two independently-built index layouts (idx 0 =
     * main, 1 = delta), each probed with its own budget; the candidate
-    * union's cap stamp offsets delta blocks by 2^30 exactly like
-    * `IndexMaintenance.combined`. */
+    * union's cap stamp offsets delta blocks by 2^30 exactly like the
+    * kernel's delta side (`IndexMaintenance.DeltaBlockOffset`). */
   def annLshTopKDeltaSqlOpt: Option[String] =
     annChainSqlOpt(cfg.lsh.maxProbes, bestFirst = true, sameLabel = false,
       splitAt = Some(100))
@@ -1526,7 +1423,7 @@ object AnnQuery {
       val qkIdx = if (multiDim)
         ", CASE WHEN vec_id % 2 = 0 THEN 0 ELSE 1 END AS qidx" else ""
       // the delta union offsets delta blocks by 2^30 in the cap stamp
-      // (IndexMaintenance.combined); per-dim runs keep raw block ids
+      // (IndexMaintenance.DeltaBlockOffset); per-dim runs keep raw block ids
       val blockStamp =
         if (splitAt.isDefined)
           "LEAST(CAST(p.block AS BIGINT) + CAST(p.idx AS BIGINT) * 1073741824, 68719476735)"
@@ -1646,12 +1543,10 @@ object AnnQuery {
     * with the serving k — the same stage [[annLshTopK]] pays). */
   private[graft] def lshTierCounts(spark: SparkSession, sfDir: String): (Long, Long) = {
     val (model, built) = setupIndex(spark, sfDir)
-    val probed = probeBlocks(spark, queryVecs(spark, sfDir), model, built).cache()
+    val probed = probeBlocks(spark, queryVecs(spark, sfDir), model, built)
     val cand = candidateCounts(probed, built)
       .agg(sum(col("n_candidates"))).head().getLong(0)
-    val refine = boundedCandidates(probed, built, model.params, None, DefaultK).count()
-    probed.unpersist()
-    (cand, refine)
+    (cand, boundedCandidates(probed, built, model.params, None, DefaultK).count())
   }
 
   /** Chain replay returning ONLY the tier-report cost counters — the

@@ -25,13 +25,15 @@ import graft.query.AnnQuery
  * already-compacted batch is simply ignored by the staged listing.
  *
  * Scale posture: ingest cost per batch is one small parquet write plus
- * one count over the staged dirs; a delta is built only when served,
- * by collecting the staged codes (bounded by `compactEveryVectors`)
- * and numbering them on the driver; its vectors are read from the
- * serving view by id; compaction is the standard one-shuffle
- * range-repartition build over the code union, made resident before
- * it replaces (and releases) the previous main index, and a query over
- * a view fills that index's by-vector table once.
+ * one count over the staged dirs; a delta is built at the first serve
+ * after an ingest, by collecting the staged codes (bounded by
+ * `compactEveryVectors`) and numbering them on the driver, and kept
+ * until the next ingest or compaction, so its vectors are read from a
+ * serving view by id once; compaction is the standard one-shuffle
+ * range-repartition build over the main index's resident code columns
+ * plus the staged codes, made resident before it replaces (and
+ * releases) the previous main index, and a query over a view fills
+ * that index's by-vector table once.
  */
 final class InsertLifecycle(
     spark: SparkSession,
@@ -42,9 +44,10 @@ final class InsertLifecycle(
 
   private val p = model.params
 
-  @volatile private var mainCodes: DataFrame = initialMainCodes
   @volatile private var mainBuilt: LshIndex.Built =
     LshIndex.build(initialMainCodes, p.blockSize).materialize()
+  // the delta over the current staged set, built at first serve
+  @volatile private var delta: Option[LshIndex.Built] = None
   @volatile private var compactedThrough: Long = -1L
   @volatile private var maxSeen: Long = -1L
   @volatile private var nCompactions: Int = 0
@@ -75,6 +78,7 @@ final class InsertLifecycle(
     * the staged set reached the threshold. */
   def ingest(batchCodes: DataFrame, batchId: Long): Unit = synchronized {
     batchCodes.write.mode("overwrite").parquet(s"$stagedRoot/batch=$batchId")
+    dropDelta()
     maxSeen = math.max(maxSeen, batchId)
     if (stagedVectors >= compactEveryVectors) compactNow()
   }
@@ -84,26 +88,34 @@ final class InsertLifecycle(
   def compactNow(): Unit = synchronized {
     stagedCodes.foreach { staged =>
       // materialized before the swap: serving never sees a cold index
-      val built = IndexMaintenance.compact(mainCodes, staged, p.blockSize).materialize()
+      val built = IndexMaintenance.compact(mainBuilt.indexedCodes, staged, p.blockSize)
+        .materialize()
       val old = mainBuilt
-      mainCodes = mainCodes.unionByName(staged)
       mainBuilt = built
       compactedThrough = maxSeen
       nCompactions += 1
       old.release()
+      dropDelta()
     }
+  }
+
+  private def dropDelta(): Unit = {
+    delta.foreach(_.release())
+    delta = None
   }
 
   /** Serve a query batch from the current state: main-only after a
     * compaction, main + staged delta between them. `data` must cover
     * every indexed id (it is only touched by the exact refine). */
-  def serve(data: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    stagedCodes match {
+  def serve(data: DataFrame, queries: DataFrame, k: Int): DataFrame = synchronized {
+    if (delta.isEmpty) delta = stagedCodes.map(IndexMaintenance.buildDelta(_, p.blockSize))
+    delta match {
       case None => AnnQuery.lshTopK(spark, data, queries, k, model, mainBuilt)
-      case Some(staged) =>
+      case Some(d) =>
         IndexMaintenance.lshTopKWithDelta(spark, data, data.limit(0), queries, k,
-          model, mainBuilt, IndexMaintenance.buildDelta(staged, p.blockSize))
+          model, mainBuilt, d)
     }
+  }
 
   /** Attach to a coded-vector stream ([[StreamingIngest.codedVectorStream]]). */
   def sink(codedStream: DataFrame, checkpointDir: String)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.index.{IndexMaintenance, LshIndex}
@@ -202,12 +204,47 @@ class IndexMaintenanceSpec extends SparkSpecBase {
   }
 
   test("combined membership keeps (t, d, block) unique across main and delta") {
+    // the kernel serves main and delta in one pass keyed by packed
+    // (t, d, block): the delta's keys, offset, must never name a main block
     val main = LshIndex.build(mainCodes, blockSize)
     val delta = IndexMaintenance.buildDelta(deltaCodes, blockSize)
-    val comb = IndexMaintenance.combined(main, delta)
-    val dupBlocks = comb.summaries.groupBy("t", "d", "block")
-      .count().filter(col("count") > 1).count()
-    assert(dupBlocks == 0)
-    assert(comb.membership.count() == emb.count() * 24)
+    def keys(b: LshIndex.Built, offset: Int): Set[Long] =
+      b.summaries.select("t", "d", "block").collect()
+        .map(r => LshIndex.packTdb(r.getInt(0), r.getInt(1), r.getInt(2) + offset)).toSet
+    val (mk, dk) = (keys(main, 0), keys(delta, IndexMaintenance.DeltaBlockOffset))
+    assert(mk.nonEmpty && dk.nonEmpty && mk.intersect(dk).isEmpty)
+    assert(dk.forall(k => LshIndex.tdbBlock(k) >= IndexMaintenance.DeltaBlockOffset))
+    assert(main.membership.count() + delta.membership.count() == emb.count() * 24)
+  }
+
+  test("InsertLifecycle keeps its staged delta between ingests") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val tmp = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target/tmp"))
+    val staged = java.nio.file.Files.createTempDirectory(tmp, "staged").toAbsolutePath.toString
+    val lc = new graft.streaming.InsertLifecycle(
+      spark, model, mainCodes, staged, compactEveryVectors = Long.MaxValue)
+    lc.ingest(deltaCodes, 0)
+    val q = emb.filter(col("vec_id") < 10)
+    def rows() = lc.serve(emb, q, 10).collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    val first = rows()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val second = try rows() finally {
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(first.nonEmpty && second == first)
+    assert(!plans.isEmpty, "the second serve ran no plan")
+    object scans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val stagedScans = plans.asScala.toSeq.flatMap(qe => scans.collect(qe.executedPlan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(staged)) => s
+    })
+    assert(stagedScans.isEmpty, s"the second serve re-read the staged codes:\n${stagedScans.mkString("\n")}")
   }
 }

@@ -17,8 +17,9 @@ import graft.query.AnnQuery
  * corner cases the chain defined — soft deletes, distance ties, an
  * indexed id missing from the serving view, an empty delta, a
  * delta-only hit and staged vectors served from the main view. The
- * window form of the bound (`boundedCandidates`) is pinned to the
- * kernel's bounded set on the same probes.
+ * codes-only cut (`cappedCandidates`, `boundedCandidates`) is pinned to
+ * the reference's cap and bound on the same probes, and `release()`
+ * drops the tables the probe paths cache.
  */
 class ServeKernelSpec extends SparkSpecBase {
 
@@ -30,8 +31,9 @@ class ServeKernelSpec extends SparkSpecBase {
       .join(built.membership, Seq("t", "d", "block"))
       .withColumn("block", col("block") + offset)
 
-  private def refBounded(members: DataFrame, p: LshParams, deletedIds: Option[DataFrame],
-      k: Int, stab: StabilizationConfig, search: SearchConfig): DataFrame = {
+  /** The candidate union under the hard cap, (qid, id, hamming). */
+  private def refCapped(members: DataFrame, p: LshParams, deletedIds: Option[DataFrame],
+      search: SearchConfig): DataFrame = {
     val firstOrd =
       shiftleft(least(col("t").cast("long"), lit(255L)), 55) +
         shiftleft(least(col("d").cast("long"), lit(63L)), 49) +
@@ -42,11 +44,18 @@ class ServeKernelSpec extends SparkSpecBase {
     val live = deletedIds.fold(all)(del =>
       all.join(broadcast(del.select(col("id"))), Seq("id"), "left_anti"))
     if (search.paperBaseline) live.select(col("qid"), col("id"), col("hamming"))
+    else live
+      .withColumn("cap_rank", row_number().over(
+        Window.partitionBy("qid").orderBy(col("first_ord"), col("id"))))
+      .filter(col("cap_rank") <= p.hardCap)
+      .select(col("qid"), col("id"), col("hamming"))
+  }
+
+  private def refBounded(members: DataFrame, p: LshParams, deletedIds: Option[DataFrame],
+      k: Int, stab: StabilizationConfig, search: SearchConfig): DataFrame = {
+    val capped = refCapped(members, p, deletedIds, search)
+    if (search.paperBaseline) capped
     else {
-      val capped = live
-        .withColumn("cap_rank", row_number().over(
-          Window.partitionBy("qid").orderBy(col("first_ord"), col("id"))))
-        .filter(col("cap_rank") <= p.hardCap)
       val limit: Column =
         if (!stab.enabled || k <= 0) lit(p.refinementLimit.toLong)
         else least(lit(p.refinementLimit.toLong),
@@ -113,11 +122,19 @@ class ServeKernelSpec extends SparkSpecBase {
 
   /** The kernel with an explicit stabilization config, over one index. */
   private def kernel(data: DataFrame, b: LshIndex.Built, deletedIds: Option[DataFrame],
-      stab: StabilizationConfig, search: SearchConfig, bounded: Boolean = false): DataFrame = {
+      stab: StabilizationConfig, search: SearchConfig): DataFrame = {
     val batch = AnnQuery.collectBatch(queries, model)
-    val sides = Seq(AnnQuery.Side(b, batch.probe(b, small.maxProbes), data, 0))
-    if (bounded) AnnQuery.serveBounded(spark, batch.vecs, sides, K, small, deletedIds, stab, search)
-    else AnnQuery.serve(spark, batch.vecs, sides, K, small, deletedIds, stab, search)
+    val sides = Seq(AnnQuery.Side(b, batch.probe(b, small.maxProbes), Some(data), 0))
+    AnnQuery.serve(spark, batch.vecs, sides, K, small, deletedIds, stab, search)
+  }
+
+  private def triples(df: DataFrame): Set[(Long, Long, Long)] =
+    df.select(col("qid"), col("id"), col("hamming")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  private def assertSameSet(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val (g, w) = (triples(got), triples(want))
+    assert(w.nonEmpty && g == w, s"$what: kernel-only ${(g -- w).take(5)} reference-only ${(w -- g).take(5)}")
   }
 
   test("the fixture binds: more candidates than the cap, the cap above the bound") {
@@ -180,17 +197,53 @@ class ServeKernelSpec extends SparkSpecBase {
   }
 
   test("boundedCandidates is the kernel's bounded set on the same probes") {
-    def set(df: DataFrame) = df.select(col("qid"), col("id"), col("hamming")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     for ((stab, search) <- Seq((off, optimized),
         (StabilizationConfig(enabled = true, minCandidates = 12, targetRatio = 1.5), optimized),
-        (off, baseline))) {
-      val window = set(AnnQuery.boundedCandidates(probed, built, small, Some(deleted), K, stab,
-        search))
-      val kern = set(kernel(tied, built, Some(deleted), stab, search, bounded = true))
-      assert(window.nonEmpty && window == kern, s"$stab $search: " +
-        s"window-only ${(window -- kern).take(5)} kernel-only ${(kern -- window).take(5)}")
-    }
+        (off, baseline)))
+      assertSameSet(AnnQuery.boundedCandidates(probed, built, small, Some(deleted), K, stab, search),
+        refBounded(refMembers(probed, built, 0), small, Some(deleted), K, stab, search),
+        s"$stab $search")
+  }
+
+  test("cappedCandidates is the reference's hard cap on the same probes") {
+    for (search <- Seq(optimized, baseline))
+      assertSameSet(AnnQuery.cappedCandidates(probed, built, small, Some(deleted), search),
+        refCapped(refMembers(probed, built, 0), small, Some(deleted), search), s"$search")
+  }
+
+  test("the codes-only cut serves a delta index and the distributed probe") {
+    val qc = AnnQuery.queryCodes(queries, model)
+    val dp = AnnQuery.probeBlocksCoded(spark, qc, model, delta)
+    assertSameSet(AnnQuery.boundedCandidates(dp, delta, small, None, K),
+      refBounded(refMembers(dp, delta, 0), small, None, K, off, optimized), "delta")
+    val dist = AnnQuery.probeBlocksDistributed(spark, queries, model, built)
+    assertSameSet(AnnQuery.boundedCandidates(dist, built, small, Some(deleted), K),
+      refBounded(refMembers(dist, built, 0), small, Some(deleted), K, off, optimized),
+      "distributed probe")
+  }
+
+  test("the distributed probe reads each call's probe budget on a reused index") {
+    val wide = model.copy(params = small.copy(maxProbes = small.maxProbes * 3))
+    def blocks(b: LshIndex.Built) = AnnQuery.probeBlocksDistributed(spark, queries, wide, b)
+      .select("qid", "t", "d", "block", "score").collect().map(_.toSeq).toSet
+    val reused = build(tied).materialize()
+    AnnQuery.probeBlocksDistributed(spark, queries, model, reused).collect()
+    assert(blocks(reused) == blocks(build(tied)))
+    reused.release()
+  }
+
+  test("release() drops the codes-only and cover tables the probe paths cache") {
+    val b = build(tied)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    b.materialize()
+    AnnQuery.probeBlocksDistributed(spark, queries, model, b).collect()
+    AnnQuery.boundedCandidates(AnnQuery.probeBlocks(spark, queries, model, b), b, small,
+      None, K).collect()
+    val codesOnly = b.byVector(None).collect()
+    assert(codesOnly.length == tied.count() && codesOnly.forall(_.vec == null))
+    assert(spark.sparkContext.getPersistentRDDs.size > before)
+    b.release()
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   // ---- main + staged delta ----
