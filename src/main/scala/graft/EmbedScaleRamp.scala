@@ -105,10 +105,8 @@ object EmbedScaleRamp {
           mk.write.mode("overwrite").parquet(d)
         spark.read.parquet(d)
       }
-      val centsDf = IvfSearch.centroidsDf(spark, cents)
-      val cells = staged("cells")(IvfSearch.assignCells(corpus, centsDf))
-      val cellsLab = staged("cellslab")(
-        IvfSearch.assignCellsWith(corpus, centsDf, Seq("label")))
+      val cells = staged("cells")(IvfSearch.assignCells(corpus, cents))
+      val cellsLab = staged("cellslab")(IvfSearch.assignCells(corpus, cents, Seq("label")))
       val dvecs = staged("dvecs")(corpus.select(col("vec_id"),
         SqSearch.sqRecon(SqSearch.sqCodes(col("embedding"), vmin, delta),
           vmin, delta).as("dvec")))
@@ -200,11 +198,7 @@ object EmbedScaleRamp {
           // map-side per shard; the in-plan default prices the
           // self-contained job
           val homes = if (sys.env.get("SPARK_GRAFT_SHARD_STAGED").contains("1"))
-            Some(staged("homes")(IvfSearch.probeCellsRanked(
-                corpus.select(col("vec_id"), col("embedding")), cents, nProbe = 1,
-                carry = Seq("cvec" -> col("embedding")))
-              .select(col("query_id").as("vec_id"),
-                col("cvec").as("embedding"), col("cell"))))
+            Some(staged("homes")(IvfSearch.assignCells(corpus, cents, Seq("embedding"))))
           else None
           val perShard = picks.map { i =>
             val t0 = System.nanoTime()
@@ -233,11 +227,7 @@ object EmbedScaleRamp {
       // running at x400, where the unsharded rebuild cannot.
       val deltaStats: Seq[(String, Double)] =
         if (only.exists(_.contains("knn_join_delta"))) {
-          val homes = staged("homes")(IvfSearch.probeCellsRanked(
-              corpus.select(col("vec_id"), col("embedding")), cents, nProbe = 1,
-              carry = Seq("cvec" -> col("embedding")))
-            .select(col("query_id").as("vec_id"),
-              col("cvec").as("embedding"), col("cell")))
+          val homes = staged("homes")(IvfSearch.assignCells(corpus, cents, Seq("embedding")))
           // deterministic ~1%-of-cells content region (≥1 cell; the
           // cell list is driver-sized by construction)
           val allCells = homes.select("cell").distinct().collect()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorFunctions.{vec_cosine, vec_l2}
+import graft.functions.VectorFunctions.vec_cosine
 
 /**
  * Large-scale dedup operators for training-data pipelines: exact
@@ -694,24 +694,17 @@ object Dedup {
   val NeardupProbes: Int = graft.config.GraftConfig.active.neardup.probes
 
   /**
-   * (vec_id, cell) — each vector's `nProbe` nearest IVF cells,
-   * map-only: the centroid table rides along as a literal array inside
-   * ONE projection (transform -> array_sort -> slice -> explode), so
-   * probe assignment costs zero shuffle and zero join — one pass over
-   * the corpus emitting nProbe rows per vector. (The literal is C x dim
-   * floats; for the √N-scaled C of a 1e9 corpus that is a few MB —
-   * still a task-constant, but ship it via `broadcast(centroidsDf)` +
-   * the `assignCells` min_by shape if the literal ever bothers the
-   * plan size.)
+   * (vec_id, cell) — each vector's `nProbe` nearest IVF cells, map-only
+   * ([[graft.query.IvfSearch.probeCellsRanked]] without the rank): the
+   * centroid table rides along as a literal, so probe assignment costs
+   * zero shuffle and zero join — one pass over the corpus emitting
+   * nProbe rows per vector. (The literal is C x dim floats; for the
+   * √N-scaled C of a 1e9 corpus that is a few MB — still a
+   * task-constant.)
    */
-  def probeCells(data: DataFrame, cents: Array[Array[Float]], nProbe: Int): DataFrame = {
-    val centLit = typedLit(cents.zipWithIndex.map { case (cv, cell) => (cell, cv.toSeq) }.toSeq)
-    data.select(col("vec_id"),
-      explode(slice(array_sort(transform(centLit,
-        c => struct(vec_l2(col("embedding"), c.getField("_2")).as("cdist"),
-          c.getField("_1").as("cell")))), 1, nProbe)).as("p"))
-      .select(col("vec_id"), col("p.cell").as("cell"))
-  }
+  def probeCells(data: DataFrame, cents: Array[Array[Float]], nProbe: Int): DataFrame =
+    graft.query.IvfSearch.probeCellsRanked(data, cents, nProbe)
+      .select(col("query_id").as("vec_id"), col("cell"))
 
   /** The lazy plan behind [[neardupPairs]] (kept separate so specs can
     * assert its shape — no cartesian — before caching hides it).

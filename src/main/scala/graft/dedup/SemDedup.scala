@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{vec_cosine, vec_l2}
+import graft.functions.VectorFunctions.vec_cosine
 import graft.query.IvfSearch
 import graft.Tables
 
@@ -77,30 +77,16 @@ object SemDedup {
 
   /**
    * Per-vector home cell + centroid similarity in ONE map-side
-   * projection: sort the (distance, cell, cosine) struct array built
-   * from the centroid literal and take the head — the
-   * [[IvfSearch.probeCellsRanked]] shape with the keeper signal
-   * (4-dp rounded cosine-to-centroid) carried along.
+   * projection: the home cell of [[IvfSearch.route]] plus the keeper
+   * signal (4-dp rounded cosine to the winning centroid — one cosine
+   * per row, not one per centroid). The expression itself is exposed
+   * so the streaming gate routes with the identical expression (its ts
+   * column rides outside it) — `h.cell` / `h.csim` are the fields.
    */
-  /** The head-of-sorted-struct assignment EXPRESSION itself, exposed
-    * so the streaming gate routes with the identical expression (its
-    * ts column rides outside it) — `h.cell` / `h.csim` are the fields. */
   private[graft] def centAssignStruct(cents: Array[Array[Float]]): Column = {
-    val centLit = typedLit(cents.zipWithIndex.map { case (cv, cell) => (cell, cv.toSeq) }.toSeq)
-    // r15: argmin via array_min over (cdist, cell) structs + ONE cosine
-    // for the winning centroid, instead of sorting a C-length struct
-    // array carrying a cosine per centroid. The winner is identical —
-    // the old sort's (cdist, cell, csim) ordering never reached csim
-    // because cell is unique — and csim is the same rounded cosine,
-    // now computed C-fold cheaper (C l2 + 1 cosine vs C l2 + C cosine
-    // + an O(C log C) sort per row — the map pass every semantic entry
-    // pays over the whole corpus).
-    val m = array_min(transform(centLit,
-      c => struct(vec_l2(col("embedding"), c.getField("_2")).as("cdist"),
-        c.getField("_1").as("cell"))))
-    val winner = element_at(centLit, m.getField("cell") + 1).getField("_2")
-    struct(m.getField("cell").as("cell"),
-      round(vec_cosine(col("embedding"), winner), 4).as("csim"))
+    val cell = IvfSearch.route(col("embedding"), cents, 1).getItem(0).getField("cell")
+    val winner = element_at(typedLit(cents.map(_.toSeq).toSeq), cell + 1)
+    struct(cell.as("cell"), round(vec_cosine(col("embedding"), winner), 4).as("csim"))
   }
 
   private[graft] def assignWithCentSim(e: DataFrame,

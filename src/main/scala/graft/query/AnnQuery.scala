@@ -311,7 +311,8 @@ object AnnQuery {
       p: LshParams,
       deletedIds: Option[DataFrame] = None,
       search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame =
-    candidateCut(probed, built, deletedIds)(capHits(_, p, search))
+    candidateCut(probed, built, deletedIds, Encoders.product[Hit])(capHits(_, p, search))
+      .select(col("qid"), col("id"), col("hamming"))
 
   /** Probed blocks joined to the ids they hold (t, d, block, qid, score,
     * id, key). The probe set is query-batch sized (queries x tables x
@@ -343,15 +344,17 @@ object AnnQuery {
       k: Int = 0,
       stab: StabilizationConfig = graft.config.GraftConfig.active.stabilization,
       search: graft.config.SearchConfig = graft.config.GraftConfig.active.search): DataFrame =
-    candidateCut(probed, built, deletedIds)(boundHits(_, k, p, stab, search))
+    candidateCut(probed, built, deletedIds, Encoders.product[Hit])(boundHits(_, k, p, stab, search))
+      .select(col("qid"), col("id"), col("hamming"))
 
   /** The kernel over `built`'s codes-only table: `cut` of each query's
-    * hits from the collected probes, as (qid, id, hamming). */
-  private def candidateCut(probed: DataFrame, built: LshIndex.Built,
-      deletedIds: Option[DataFrame])(cut: Seq[Hit] => Seq[Hit]): DataFrame =
+    * hits from the collected probes. */
+  private def candidateCut[U](probed: DataFrame, built: LshIndex.Built,
+      deletedIds: Option[DataFrame], enc: Encoder[U])(cut: Seq[Hit] => Seq[U]): Dataset[U] =
     cutPerQuery(probed.sparkSession, Map.empty, Seq(Side(built, collectProbes(probed), None, 0)),
-        deletedIds, Encoders.product[Hit])(cut)
-      .select(col("qid"), col("id"), col("hamming"))
+      deletedIds, enc)(cut)
+
+  private val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
   /** A probe frame's rows on the driver (query-batch sized). */
   private def collectProbes(probed: DataFrame): Seq[ProbedBlock] = {
@@ -1015,25 +1018,16 @@ object AnnQuery {
       gtForRatio: Seq[(Long, Long, Double, Int)],
       kVariants: Seq[Int]): DataFrame = {
     import org.apache.spark.sql.types._
-    def roundAt(x: Double, s: Int): Double =
-      java.math.BigDecimal.valueOf(x).setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
     val gridQueries = gtIdRnk.map(_._1).distinct.sorted
     val nQueries = gridQueries.length.toLong
-    // (query, vec) -> gt rank; join with ann ranks for the hit grid
     val gtRnk = gtIdRnk.map(t => (t._1, t._2) -> t._3).toMap
-    val hitPairs = ann.flatMap { case (qid, vid, _, annRnk) =>
-      gtRnk.get((qid, vid)).map(g => (qid, annRnk, g))
-    }
     // (query, rnk) -> gt dist; rank-aligned pairs for the ratio metric
     val gtDist = gtForRatio.map(t => (t._1, t._4) -> t._3).toMap
     val ratioPairs = ann.flatMap { case (qid, _, dAnn, rnk) =>
       gtDist.get((qid, rnk)).map(dGt => (qid, rnk, dAnn, dGt))
     }
     val rows = kVariants.sorted.flatMap { k =>
-      val hitsByQ = hitPairs.filter(p => p._2 <= k && p._3 <= k)
-        .groupBy(_._1).view.mapValues(_.size.toLong).toMap
-      val recall = roundAt(
-        gridQueries.map(q => hitsByQ.getOrElse(q, 0L).toDouble / k).sum / nQueries, 4)
+      val recall = recallAt(ann, gtRnk, gridQueries, k)
       val avgRatio = counts.map { cs =>
         if (cs.isEmpty) None
         else Some(roundAt(cs.map(_._2.toDouble / k).sum / cs.length, 2))
@@ -1109,11 +1103,27 @@ object AnnQuery {
     df.sparkSession.createDataFrame(rows, df.schema)
   }
 
-  /** Unique candidates per query surfaced by a probe set (ratio numerator). */
+  /** `x` rounded HALF_UP to `s` places — Spark's `round`, on the driver. */
+  private[graft] def roundAt(x: Double, s: Int): Double =
+    java.math.BigDecimal.valueOf(x).setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** Recall@k of driver-side (query_id, vec_id, dist, rnk) rows against
+    * ground-truth ranks by (query, vec), over the full query grid: per
+    * query, the rows ranked <= k whose ground-truth rank is <= k, over
+    * k; a zero-hit query counts 0; the mean rounded to 4dp. */
+  private[graft] def recallAt(ann: Seq[(Long, Long, Double, Int)],
+      gtRnk: Map[(Long, Long), Int], queries: Seq[Long], k: Int): Double = {
+    val hits = ann.filter { case (q, v, _, rnk) => rnk <= k && gtRnk.get((q, v)).exists(_ <= k) }
+      .groupBy(_._1).view.mapValues(_.size).toMap
+    roundAt(queries.map(q => hits.getOrElse(q, 0).toDouble / k).sum / queries.length, 4)
+  }
+
+  /** Unique candidates per query surfaced by a probe set (ratio
+    * numerator), (query_id, n_candidates) for each query with one: a
+    * count cut of the kernel over the index's codes-only table. */
   def candidateCounts(probed: DataFrame, built: LshIndex.Built): DataFrame =
-    probedMembers(probed, built)
-      .groupBy("qid").agg(countDistinct("id").as("n_candidates"))
-      .select(col("qid").as("query_id"), col("n_candidates"))
+    candidateCut(probed, built, None, longPair)(hs => Seq((hs.head.qid, hs.size.toLong)))
+      .toDF("query_id", "n_candidates")
 
   /**
    * The touched set of a query batch: every id whose record a lookup
@@ -1543,10 +1553,18 @@ object AnnQuery {
     * with the serving k — the same stage [[annLshTopK]] pays). */
   private[graft] def lshTierCounts(spark: SparkSession, sfDir: String): (Long, Long) = {
     val (model, built) = setupIndex(spark, sfDir)
-    val probed = probeBlocks(spark, queryVecs(spark, sfDir), model, built)
-    val cand = candidateCounts(probed, built)
-      .agg(sum(col("n_candidates"))).head().getLong(0)
-    (cand, boundedCandidates(probed, built, model.params, None, DefaultK).count())
+    candidateTotals(probeBlocks(spark, queryVecs(spark, sfDir), model, built), built,
+      model.params, DefaultK, cfg.stabilization, cfg.search)
+  }
+
+  /** (candidates, bounded candidates) summed over a probe set's
+    * queries, from one kernel pass over the codes-only table. */
+  private[graft] def candidateTotals(probed: DataFrame, built: LshIndex.Built, p: LshParams,
+      k: Int, stab: StabilizationConfig, search: graft.config.SearchConfig): (Long, Long) = {
+    val perQuery = candidateCut(probed, built, None, longPair)(
+        hs => Seq((hs.size.toLong, boundHits(hs, k, p, stab, search).size.toLong)))
+      .collect()
+    (perQuery.map(_._1).sum, perQuery.map(_._2).sum)
   }
 
   /** Chain replay returning ONLY the tier-report cost counters — the

@@ -213,7 +213,7 @@ object BqSearch {
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val thr = fittedThresholds(spark, sfDir)
     TwoStage.topK(data.filter(col("vec_id") < NumQueries), codec(wordsOf(data, thr), thr),
-      TwoStage.Cells(IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents)), cents),
+      TwoStage.Cells(IvfSearch.assignCells(data, cents), cents),
       data.select(col("vec_id"), col("embedding")), HamKeep, K, None)
   }
 
@@ -229,8 +229,7 @@ object BqSearch {
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val thr = fittedThresholds(spark, sfDir)
     TwoStage.topK(data.filter(col("vec_id") < NumQueries), codec(wordsOf(data, thr), thr),
-      TwoStage.LabeledCells(IvfSearch.assignCellsWith(data,
-        IvfSearch.centroidsDf(spark, cents), Seq("label")), cents),
+      TwoStage.LabeledCells(IvfSearch.assignCells(data, cents, Seq("label")), cents),
       data.select(col("vec_id"), col("embedding")), HamKeep, K, None)
   }
 

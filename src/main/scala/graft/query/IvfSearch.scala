@@ -13,12 +13,16 @@ import graft.functions.VectorFunctions.vec_l2
  * coarse cells (nearest of C centroids); a query probes only its
  * `nProbe` nearest cells and refines exactly inside them.
  *
- * Spark posture: centroids are a broadcast dimension (KBs) fitted by
- * deterministic driver-side k-means over a bounded sample (the same
- * posture as the LSH fit: only the sample ever crosses the driver).
- * Cell assignment is a broadcast join + argmin aggregate — one pass;
- * at 100 TB the stored table is bucketed by cell, so a probe only
- * scans `nProbe / C` of the data.
+ * Spark posture: centroids are fitted by deterministic driver-side
+ * k-means over a bounded sample (the same posture as the LSH fit: only
+ * the sample ever crosses the driver) and ride every plan as a literal
+ * (C x dim floats, KBs). One router ([[route]]) states the rule "a
+ * vector's nearest cells, ordered by (distance, cell)" for every
+ * centroid lookup in graft; cell assignment ([[assignCells]]) and probe
+ * selection ([[probeCellsRanked]]) are map-side projections of it — no
+ * join, no shuffle. One capped exact tail ([[cappedTopK]]) serves
+ * [[ivfTopK]] and the k-NN graph. At 100 TB the stored table is
+ * bucketed by cell, so a probe only scans `nProbe / C` of the data.
  *
  * Cell count scales with the corpus ([[scaledCells]]: C ~ sqrt(N),
  * the classic IVF balance point where probe work N*nProbe/C and
@@ -117,67 +121,100 @@ object IvfSearch {
     }
   }
 
-  /** (cell, cv) broadcastable centroid dimension. */
+  /** (cell, cv) centroid table: the fixture exports and
+    * [[rangeSearch]]'s per-cell radius filter. */
   def centroidsDf(spark: SparkSession, cents: Array[Array[Float]]): DataFrame = {
     import spark.implicits._
     cents.zipWithIndex.map { case (cv, cell) => (cell, cv) }.toSeq.toDF("cell", "cv")
   }
 
   /**
-   * (vec_id, cell): nearest-centroid assignment via broadcast argmin.
-   * `min_by` instead of a rank window: the aggregate partial-combines
-   * map-side, so the shuffle carries one row per vector rather than
-   * one per (vector, centroid) — the difference that matters at 1e9
-   * vectors. Tie-break on (dist, cell) keeps it deterministic.
+   * The one cell router: `vec`'s first `n` (cdist, cell) pairs over the
+   * centroid literal, ordered by (cdist, cell) — an array column, so
+   * callers reach a join key through a generator (`explode`,
+   * `posexplode`, `inline`), never through a higher-order-function
+   * alias: keyed on such an alias, Spark 4.1's CollapseProject drops
+   * `embedding` below the join (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
+   * n = 1 is an `array_min` (no sort — measured cheaper on the semantic
+   * dedup map pass); n > 1 sorts and slices. A projection of the home
+   * pair reads it with `getItem(0)`, which the optimizer folds back to
+   * the bare `array_min` (`element_at` is not folded).
    */
-  def assignCells(data: DataFrame, centroids: DataFrame): DataFrame =
-    assignCellsWith(data, centroids, Nil)
+  private[graft] def route(vec: Column, cents: Array[Array[Float]], n: Int): Column = {
+    val centLit = typedLit(cents.zipWithIndex.map { case (cv, cell) => (cell, cv.toSeq) }.toSeq)
+    val pairs = transform(centLit,
+      c => struct(vec_l2(vec, c.getField("_2")).as("cdist"), c.getField("_1").as("cell")))
+    if (n == 1) array(array_min(pairs)) else slice(array_sort(pairs), 1, n)
+  }
 
-  /** [[assignCells]] carrying extra metadata columns through the SAME
-    * single partial-agg shuffle (vec_id is unique, so adding
-    * functionally-dependent columns to the key changes nothing but
-    * what rides along) — the filtered celled tiers use this to land
-    * the label predicate on the assignment table itself, below every
-    * candidate join. */
-  def assignCellsWith(data: DataFrame, centroids: DataFrame,
-      carry: Seq[String]): DataFrame =
-    data.join(broadcast(centroids))
-      .withColumn("cdist", vec_l2(col("embedding"), col("cv")))
-      .groupBy(col("vec_id") +: carry.map(col): _*)
-      .agg(min_by(col("cell"), struct(col("cdist"), col("cell"))).as("cell"))
+  /**
+   * The home side: each vector's nearest cell, (vec_id, carry..., cell),
+   * map-side over the centroid literal — N rows in, N rows out, no join
+   * and no shuffle. `carry` names columns of `data` to keep (the
+   * embedding for the k-NN homes, `label` for the filtered tiers) or
+   * `cdist`, the distance to the home centroid.
+   */
+  def assignCells(data: DataFrame, cents: Array[Array[Float]],
+      carry: Seq[String] = Nil): DataFrame =
+    data.select(col("*"), inline(route(col("embedding"), cents, 1)))
+      .select(col("vec_id") +: carry.map(col) :+ col("cell"): _*)
 
+  /**
+   * The query side: each vector's `nProbe` nearest cells in probe order,
+   * (query_id, carry..., crnk, cell) — N rows in, N*nProbe rows out, no
+   * shuffle. The same router as [[assignCells]], so probe rank 1 IS the
+   * home cell. `carry` columns are aliased under fresh names (an alias
+   * shadowing the column the generator reads would be a lateral-alias
+   * reference).
+   */
+  def probeCellsRanked(data: DataFrame, cents: Array[Array[Float]], nProbe: Int,
+      carry: Seq[(String, Column)] = Nil): DataFrame =
+    data.select(col("vec_id").as("query_id") +:
+        carry.map { case (n, c) => c.as(n) } :+
+        posexplode(route(col("embedding"), cents, nProbe)): _*)
+      .select(col("query_id") +: carry.map { case (n, _) => col(n) } :+
+        (col("pos") + 1).as("crnk") :+ col("col.cell").as("cell"): _*)
+
+  /** Candidate rows of a probe side (query_id, qv, crnk, cell) joined
+    * on `cell` to a home side (vec_id, embedding, cell), with the exact
+    * distance computed in the join output: (query_id, vec_id, crnk,
+    * dist). */
+  private def scored(probes: DataFrame, homes: DataFrame): DataFrame =
+    probes.join(homes, "cell")
+      .select(col("query_id"), col("vec_id"), col("crnk"),
+        vec_l2(col("embedding"), col("qv")).as("dist"))
+
+  /**
+   * The one capped exact tail: candidate rows (query_id, vec_id, crnk,
+   * dist) are capped at `maxCandidates` per query by (crnk, vec_id) —
+   * cells in probe order, ids in id order, so one skewed hot cell cannot
+   * blow up a query (the IVF twin of the LSH hard cap) — then cut to the
+   * top `k` by (dist, vec_id). Both windows share one query_id
+   * partitioning: one exchange, two in-partition sorts. Output:
+   * (query_id, vec_id, dist rounded to 4dp, rnk).
+   */
+  private def cappedTopK(candidates: DataFrame, k: Int, maxCandidates: Int): DataFrame = {
+    val byQuery = Window.partitionBy("query_id")
+    candidates
+      .withColumn("cap_rank", row_number().over(byQuery.orderBy(col("crnk"), col("vec_id"))))
+      .filter(col("cap_rank") <= maxCandidates)
+      .withColumn("rnk", row_number().over(byQuery.orderBy(col("dist"), col("vec_id"))))
+      .filter(col("rnk") <= k)
+      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+  }
+
+  /**
+   * IVF top-k for a query batch: the queries' `nProbe` nearest cells
+   * (query-batch sized — the broadcast side) join the map-side homes on
+   * `cell`, the exact distance is computed in the join output, and
+   * [[cappedTopK]] cuts it. The only shuffle is the tail's one exchange.
+   */
   def ivfTopK(spark: SparkSession, data: DataFrame, queries: DataFrame,
       k: Int, nProbe: Int, cents: Array[Array[Float]],
       maxCandidates: Int = cfg.ivf.maxCandidates): DataFrame = {
-    val centroids = centroidsDf(spark, cents)
-    val cells = assignCells(data, centroids)
-
-    // queries probe their nProbe nearest cells
-    val wp = Window.partitionBy("query_id").orderBy(col("cdist"), col("cell"))
-    val probes = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .join(broadcast(centroids))
-      .withColumn("cdist", vec_l2(col("qv"), col("cv")))
-      .withColumn("crnk", row_number().over(wp))
-      .filter(col("crnk") <= nProbe)
-      .select(col("query_id"), col("cell"), col("crnk"))
-
-    // scan only probed cells; cap each query's candidate union BEFORE
-    // fetching embeddings (the IVF twin of the LSH path's HARD_CAP:
-    // one skewed hot cell cannot blow up a query's partition — cells
-    // kept in probe order, ids within a cell in id order)
-    val wCap = Window.partitionBy("query_id").orderBy(col("crnk"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    probes
-      .join(cells, "cell")
-      .withColumn("cap_rank", row_number().over(wCap))
-      .filter(col("cap_rank") <= maxCandidates)
-      .join(data.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))),
-        "query_id")
-      .withColumn("dist", vec_l2(col("embedding"), col("qv")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("dist"), 4).as("dist"), col("rnk"))
+    val probes = probeCellsRanked(queries, cents, nProbe, carry = Seq("qv" -> col("embedding")))
+    cappedTopK(scored(broadcast(probes), assignCells(data, cents, Seq("embedding"))),
+      k, maxCandidates)
   }
 
   /** Where [[simsearchIvf]] exports the fitted centroids for the
@@ -219,42 +256,18 @@ object IvfSearch {
    * regions): cell, member count, mean and max member-to-centroid
    * distance (floor-truncated, SURVEY §5).
    *
-   * Scale: the [[assignCells]] discipline — broadcast centroids,
-   * per-vector argmin via `min_by` (partial-combines map-side, the
-   * shuffle carries ONE row per vector), then a cells-sized partial
-   * agg. No window over the corpus, no per-(vector, centroid) shuffle.
+   * Scale: the map-side [[assignCells]] (home cell and its distance,
+   * no shuffle), then one cells-sized partial agg. No window over the
+   * corpus, no per-(vector, centroid) row anywhere.
    */
   def embedCluster(spark: SparkSession, sfDir: String): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
     val cents = fittedCorpusCentroids(spark, sfDir, data)
-    data.join(broadcast(centroidsDf(spark, cents)))
-      .withColumn("cdist", vec_l2(col("embedding"), col("cv")))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cell"), struct(col("cdist"), col("cell"))).as("cell"),
-        min(col("cdist")).as("d"))
+    assignCells(data, cents, Seq("cdist"))
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vectors"),
-        (floor(avg(col("d")) * 10000) / 10000).as("mean_dist"),
-        (floor(max(col("d")) * 10000) / 10000).as("max_dist"))
-  }
-
-  /**
-   * Map-side probe assignment: each vector's `nProbe` nearest cells in
-   * probe order against the broadcast centroid literal — N rows in,
-   * N*nProbe rows out, no shuffle and no per-query window over
-   * centroid rows. The ordering is the same (cdist, cell) struct sort
-   * as [[assignCells]]' argmin, so probe rank 1 IS the home cell.
-   */
-  def probeCellsRanked(data: DataFrame, cents: Array[Array[Float]], nProbe: Int,
-      carry: Seq[(String, Column)] = Nil): DataFrame = {
-    val centLit = typedLit(cents.zipWithIndex.map { case (cv, cell) => (cell, cv.toSeq) }.toSeq)
-    data.select(col("vec_id").as("query_id") +:
-        carry.map { case (n, c) => c.as(n) } :+
-        posexplode(slice(array_sort(transform(centLit,
-          c => struct(vec_l2(col("embedding"), c.getField("_2")).as("cdist"),
-            c.getField("_1").as("cell")))), 1, nProbe)): _*)
-      .select(col("query_id") +: carry.map { case (n, _) => col(n) } :+
-        (col("pos") + 1).as("crnk") :+ col("col.cell").as("cell"): _*)
+        (floor(avg(col("cdist")) * 10000) / 10000).as("mean_dist"),
+        (floor(max(col("cdist")) * 10000) / 10000).as("max_dist"))
   }
 
   /**
@@ -278,38 +291,20 @@ object IvfSearch {
    * id-keyed equi-joins) re-sorts N·percell CANDIDATE rows carrying
    * two dim-float vectors each — measured 100+ GB of sort spill at the
    * 200k-vector ramp, vs ~10 GB of skinny rows here; the ~1.7× extra
-   * distance MACs on beyond-cap candidates are cheap codegen. Both
-   * rank windows (probe-order cap, dist top-k) share one query_id
-   * partitioning — one exchange, two in-partition sorts. Never a
-   * corpus broadcast. At 100 TB the stored table is bucketed by cell,
-   * so the candidate join co-locates without a fresh shuffle of the
-   * big side.
+   * distance MACs on beyond-cap candidates are cheap codegen. Self
+   * edges drop before the cap; [[cappedTopK]] cuts the rest. Both
+   * sides are corpus-sized, so the cell equi-join stays unhinted —
+   * never a corpus broadcast. At 100 TB the stored table is bucketed by
+   * cell, so the candidate join co-locates without a fresh shuffle of
+   * the big side.
    */
   def knnJoinPlan(data: DataFrame, k: Int, nProbe: Int,
       cents: Array[Array[Float]], maxCandidates: Int): DataFrame = {
     val e = data.select(col("vec_id"), col("embedding"))
-    // home-cell assignment MAP-SIDE (probe rank 1 IS the home cell —
-    // same (cdist, cell) ordering as assignCells' argmin), with the
-    // vector riding along: no shuffle, and no array-typed grouping key
-    // (carried under a fresh name: an alias that shadows the input
-    // column the generator reads would be a lateral-alias reference)
-    val cells = probeCellsRanked(e, cents, nProbe = 1,
-        carry = Seq("cvec" -> col("embedding")))
-      .select(col("query_id").as("vec_id"), col("cvec").as("embedding"), col("cell"))
-    val probes = probeCellsRanked(e, cents, nProbe,
-      carry = Seq("qv" -> col("embedding")))
-    val wCap = Window.partitionBy("query_id").orderBy(col("crnk"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    probes.join(cells, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("crnk"),
-        vec_l2(col("embedding"), col("qv")).as("dist"))
-      .withColumn("cap_rank", row_number().over(wCap))
-      .filter(col("cap_rank") <= maxCandidates)
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id").as("nbr_id"),
-        round(col("dist"), 4).as("dist"), col("rnk"))
+    val probes = probeCellsRanked(e, cents, nProbe, carry = Seq("qv" -> col("embedding")))
+    cappedTopK(scored(probes, assignCells(e, cents, Seq("embedding")))
+        .filter(col("vec_id") =!= col("query_id")), k, maxCandidates)
+      .withColumnRenamed("vec_id", "nbr_id")
   }
 
   def knnJoin(spark: SparkSession, sfDir: String): DataFrame = {
@@ -343,7 +338,6 @@ object IvfSearch {
       cents: Array[Array[Float]], maxCandidates: Int,
       nShards: Int, shard: Int,
       stagedHomes: Option[DataFrame] = None): DataFrame = {
-    val e = data.select(col("vec_id"), col("embedding"))
     // the (vec_id, embedding, cell) home-assignment table: recomputed
     // in-plan by default (the self-contained harness-entry shape), or
     // read RESIDENT via `stagedHomes` — the production posture, where
@@ -352,10 +346,7 @@ object IvfSearch {
     // in-plan form pays one full map-side re-assignment PER SHARD,
     // which dominates the per-shard wall time once nShards is large —
     // the ramp measures both.
-    val homes = stagedHomes.getOrElse(
-      probeCellsRanked(e, cents, nProbe = 1,
-          carry = Seq("cvec" -> col("embedding")))
-        .select(col("query_id").as("vec_id"), col("cvec").as("embedding"), col("cell")))
+    val homes = stagedHomes.getOrElse(assignCells(data, cents, Seq("embedding")))
     val shardQueries = homes.filter(pmod(col("cell"), lit(nShards)) === shard)
       .select(col("vec_id"), col("embedding"))
     knnForQueries(shardQueries, homes, k, nProbe, cents, maxCandidates)
@@ -377,18 +368,9 @@ object IvfSearch {
     // the probe-adjacency manifest: ≤ C cells, one tiny distinct job
     val manifest = probes.select("cell").distinct().collect().map(_.getInt(0))
     val cellsSide = homes.filter(col("cell").isin(manifest.map(Integer.valueOf): _*))
-    val wCap = Window.partitionBy("query_id").orderBy(col("crnk"), col("vec_id"))
-    val wk = Window.partitionBy("query_id").orderBy(col("dist"), col("vec_id"))
-    probes.join(cellsSide, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("crnk"),
-        vec_l2(col("embedding"), col("qv")).as("dist"))
-      .withColumn("cap_rank", row_number().over(wCap))
-      .filter(col("cap_rank") <= maxCandidates)
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id").as("nbr_id"),
-        round(col("dist"), 4).as("dist"), col("rnk"))
+    cappedTopK(scored(probes, cellsSide).filter(col("vec_id") =!= col("query_id")),
+        k, maxCandidates)
+      .withColumnRenamed("vec_id", "nbr_id")
   }
 
   /** The sharded k-NN graph: union of [[knnJoinShard]] over all
@@ -431,9 +413,7 @@ object IvfSearch {
   private def stagedKnnHomes(spark: SparkSession, sfDir: String,
       data: DataFrame, cents: Array[Array[Float]]): DataFrame = {
     graft.FixtureExport.ensure(s"knnhomes:$sfDir|c=${cents.length}", KnnHomesStagePath) {
-      probeCellsRanked(data.select(col("vec_id"), col("embedding")), cents,
-          nProbe = 1, carry = Seq("cvec" -> col("embedding")))
-        .select(col("query_id").as("vec_id"), col("cvec").as("embedding"), col("cell"))
+      assignCells(data, cents, Seq("embedding"))
         .write.mode("overwrite").parquet(KnnHomesStagePath)
     }
     spark.read.parquet(KnnHomesStagePath)
@@ -528,9 +508,7 @@ object IvfSearch {
     val cents = fittedCorpusCentroids(spark, sfDir, data)
     val isDelta = col("vec_id") % graft.Carves.DeltaMod === 0
     val baseHomes = stagedKnnHomes(spark, sfDir, data, cents).filter(!isDelta)
-    val deltaHomes = probeCellsRanked(data.filter(isDelta), cents, nProbe = 1,
-        carry = Seq("cvec" -> col("embedding")))
-      .select(col("query_id").as("vec_id"), col("cvec").as("embedding"), col("cell"))
+    val deltaHomes = assignCells(data.filter(isDelta), cents, Seq("embedding"))
     knnJoinDeltaPlan(K, NumProbes, cents, cfg.ivf.maxCandidates,
       baseHomes, deltaHomes)
   }
@@ -577,9 +555,7 @@ object IvfSearch {
         .write.mode("overwrite").parquet(KnnBaseGraphStagePath)
     }
     val baseGraph = spark.read.parquet(KnnBaseGraphStagePath)
-    val deltaHomes = probeCellsRanked(data.filter(isDelta), cents, nProbe = 1,
-        carry = Seq("cvec" -> col("embedding")))
-      .select(col("query_id").as("vec_id"), col("cvec").as("embedding"), col("cell"))
+    val deltaHomes = assignCells(data.filter(isDelta), cents, Seq("embedding"))
     // CACHED: the patch feeds BOTH the touched-query anti-join side and
     // the union — uncached, the two knnForQueries legs (the entry's
     // dominant cost) evaluate twice, and nothing is exchange-reusable
@@ -685,8 +661,8 @@ object IvfSearch {
    * curation runs after [[embedCluster]]'s profile, so dense regions
    * can't dominate the sample the way a uniform draw lets them.
    *
-   * Scale: one [[assignCells]]-shaped shuffle (one row per vector via
-   * the min_by partial agg), then [[graft.operators.Corpus.sampleStratified]]
+   * Scale: the map-side [[assignCells]] (no shuffle), then
+   * [[graft.operators.Corpus.sampleStratified]]
    * with cell as the stratum — its u-histogram prefix bounds every
    * ranking window to ≈ quota + cell/1024 rows, so a 100 TB hot cell
    * never serializes through one reducer.
@@ -694,11 +670,7 @@ object IvfSearch {
   def sampleClusterBalanced(spark: SparkSession, sfDir: String): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
     val cents = fittedCorpusCentroids(spark, sfDir, data)
-    val celled = data.join(broadcast(centroidsDf(spark, cents)))
-      .withColumn("cdist", vec_l2(col("embedding"), col("cv")))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cell"), struct(col("cdist"), col("cell"))).as("cell"))
-      .withColumnRenamed("vec_id", "doc_id")
+    val celled = assignCells(data, cents).withColumnRenamed("vec_id", "doc_id")
     graft.operators.Corpus.sampleStratified(celled, "cell", ClusterQuota)
       .withColumnRenamed("doc_id", "vec_id")
   }
@@ -744,7 +716,7 @@ object IvfSearch {
   /**
    * DuckDB twin of the full IVF serving chain over the exported
    * centroids: nearest-centroid assignment (argmin by (dist, cell) —
-   * `assignCells`' min_by tie-break), nProbe probe selection per
+   * the [[route]] order), nProbe probe selection per
    * query, candidate cap in (probe-order, id) order, exact refine,
    * top-k by (dist, vec_id). Distance parity with `vec_l2` (double
    * accumulation over floats) is the same contract `ann_brute_topk`
@@ -809,9 +781,10 @@ object IvfSearch {
    * boundary can't diverge on an ulp.
    *
    * Scale posture: the cell layout (assignment + per-cell covering
-   * radius) is one broadcast-centroid argmin pass — at 100 TB it's the
-   * stored cell-bucketed table plus a cells-sized stats table, both
-   * maintained by ingest, not recomputed per query. Probe selection is
+   * radius) is the map-side [[assignCells]] with its home distance plus
+   * a cells-sized max — at 100 TB it's the stored cell-bucketed table
+   * plus a cells-sized stats table, both maintained by ingest, not
+   * recomputed per query. Probe selection is
    * a tiny broadcast (queries x cells filter); the only data-sized work
    * is scanning the surviving cells. On clustered real-world corpora
    * the bound prunes most cells; on this synthetic uniform corpus
@@ -824,13 +797,9 @@ object IvfSearch {
       cents: Array[Array[Float]]): DataFrame = {
     val spark = data.sparkSession
     val centroids = centroidsDf(spark, cents)
-    // one argmin pass yields both the assignment and the covering radii
-    val assigned = data.join(broadcast(centroids))
-      .withColumn("cdist", vec_l2(col("embedding"), col("cv")))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cell"), struct(col("cdist"), col("cell"))).as("cell"),
-        min(col("cdist")).as("d"))
-    val cellStats = assigned.groupBy("cell").agg(max(col("d")).as("radius"))
+    // the home distances yield the covering radii
+    val assigned = assignCells(data, cents, Seq("cdist"))
+    val cellStats = assigned.groupBy("cell").agg(max(col("cdist")).as("radius"))
     val probes = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       .join(broadcast(cellStats.join(centroids, "cell")))
       .filter(vec_l2(col("qv"), col("cv")) - col("radius") <= r + RangePruneSlack)
@@ -870,8 +839,8 @@ object IvfSearch {
    * it). The same posture as `host_stats`/`dedup_minhash_tune`:
    * the knob-setting table is an entry, not a guess.
    *
-   * Scale posture: the only corpus-sized work is the assignment's one
-   * partial-agg shuffle ([[assignCells]]'s min_by); everything after
+   * Scale posture: the only corpus-sized work is the map-side
+   * [[assignCells]] and one partial agg to cell sizes; everything after
    * runs on the nlist-row cell-size table (cells ~ sqrt(N), KBs at
    * 1e9 vectors), so the rank window over it is bounded by
    * construction. Quantiles are RANK CUTS (size at row ceil(q*used)
@@ -882,7 +851,7 @@ object IvfSearch {
     val data = Tables.embeddings(spark, sfDir)
     val cents = fittedCorpusCentroids(spark, sfDir, data)
     val nlist = cents.length.toLong
-    val sizes = assignCells(data, centroidsDf(spark, cents))
+    val sizes = assignCells(data, cents)
       .groupBy("cell").agg(count(lit(1)).as("sz"))
     val ranked = sizes
       .withColumn("r", row_number().over(Window.orderBy(col("sz"), col("cell"))))
@@ -954,13 +923,12 @@ object IvfSearch {
    * id, -1 for kept). Cells with fewer than 2 members are unsplittable
    * and stay kept. Driver-side work is O(budget x sampleCap) vectors —
    * bounded regardless of corpus size; the cluster-side work is one
-   * assignment pass (the [[assignCells]] partial-agg shuffle) plus one
-   * bounded member-sample fetch for the chosen cells only.
+   * map-side [[assignCells]] (the embedding carried) feeding a cell-size
+   * agg and one bounded member-sample fetch for the chosen cells only.
    */
   private[graft] def rebalancePlan(data: DataFrame, cents: Array[Array[Float]],
       budget: Int, sampleCap: Int = 2000): Array[(Array[Float], String, Int)] = {
-    val spark = data.sparkSession
-    val assign = assignCells(data, centroidsDf(spark, cents))
+    val assign = assignCells(data, cents, Seq("embedding"))
     val sizes = assign.groupBy("cell").agg(count(lit(1)).as("sz"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val chosen = sizes.toSeq.sortBy { case (c0, s) => (-s, c0) }
@@ -971,7 +939,6 @@ object IvfSearch {
       else {
         val wCell = Window.partitionBy("cell").orderBy("vec_id")
         assign.filter(col("cell").isin(chosen.map(Int.box): _*))
-          .join(data.select(col("vec_id"), col("embedding")), "vec_id")
           .withColumn("rn", row_number().over(wCell))
           .filter(col("rn") <= sampleCap)
           .select(col("cell"), col("vec_id"), col("embedding").cast("array<float>"))
@@ -1001,8 +968,8 @@ object IvfSearch {
    * maintenance move (the FAISS re-train posture, budgeted so a
    * 100 TB round touches the tail, not the index).
    *
-   * Scale posture: two assignment passes (each one partial-agg
-   * shuffle over the corpus with a broadcast centroid side) bracket a
+   * Scale posture: two map-side assignment passes (each feeding one
+   * cells-sized partial agg) bracket a
    * driver-side split fit that is bounded by budget x sampleCap
    * vectors; no corpus-sized collect anywhere. Reassignment against
    * the child centroids may legitimately pull borderline vectors from
@@ -1030,7 +997,7 @@ object IvfSearch {
     graft.FixtureExport.ensure(s"ivfreb:$sfDir", RebalanceExportPath) {
       planDf.coalesce(1).write.mode("overwrite").parquet(RebalanceExportPath)
     }
-    val sizes = assignCells(data, planDf.select(col("cell"), col("cv")))
+    val sizes = assignCells(data, plan.map(_._1))
       .groupBy("cell").agg(count(lit(1)).as("sz"))
     planDf.select(col("cell"), col("status"), col("parent"))
       .join(sizes, Seq("cell"), "left")

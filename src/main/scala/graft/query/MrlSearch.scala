@@ -162,7 +162,7 @@ object MrlSearch {
       cents: Array[Array[Float]], comps: Array[(Array[Double], Double)]): MrlIndex = {
     val d = data.select(col("vec_id"), col("embedding"))
     MrlIndex(
-      IvfSearch.assignCells(d, IvfSearch.centroidsDf(spark, cents)),
+      IvfSearch.assignCells(d, cents),
       rotatedPrefix(d, comps), d, cents, comps)
   }
 
@@ -188,8 +188,7 @@ object MrlSearch {
    * query's `label`, completing the predicate parity with the other
    * celled tiers ([[SqSearch.annIvfsqFilteredTopK]]'s discipline
    * verbatim): the label rides the CELL ASSIGNMENT itself
-   * ([[IvfSearch.assignCellsWith]] — the same one-shuffle min_by
-   * aggregate with the functionally-dependent label in the key), so
+   * ([[IvfSearch.assignCells]] carrying `label`, map-side), so
    * the predicate lands on the candidate table below the
    * prefix-distance work and both rank windows — no rotated-distance
    * MAC is spent on a row the filter discards and the AdcKeep
@@ -206,8 +205,7 @@ object MrlSearch {
       cents.head.length / PrefixShare)
     val queries = data.filter(col("vec_id") < NumQueries)
     TwoStage.topK(queries, codec(rotatedPrefix(data, comps), rotatedQp(queries, comps)),
-      TwoStage.LabeledCells(IvfSearch.assignCellsWith(data,
-        IvfSearch.centroidsDf(spark, cents), Seq("label")), cents),
+      TwoStage.LabeledCells(IvfSearch.assignCells(data, cents, Seq("label")), cents),
       data.select(col("vec_id"), col("embedding")), AdcKeep, K, None)
   }
 

@@ -32,10 +32,9 @@ import graft.functions.VectorFunctions.vec_l2
  *    (M x Kc x subDim floats — KBs; `broadcast()` it if a deployment
  *    outgrows plan literals) and each code is an in-order argmin over
  *    `vec_l2` distances — no shuffle anywhere in index construction.
- *  - The cell routing reuses the fitted IVF centroids and replays
- *    `assignCells`' (dist, cell) argmin tie-break as the same
- *    first-position-of-min, so the PQ index and the IVF index route
- *    identically.
+ *  - The cell routing reuses the fitted IVF centroids and the one
+ *    router ([[IvfSearch.route]]), so the PQ index and the IVF index
+ *    route identically.
  *  - ADC candidates are capped per query by a (floored ADC, vec_id)
  *    window BEFORE any embedding fetch — the bandwidth bound that
  *    makes the refine cost independent of cell skew.
@@ -123,14 +122,12 @@ object PqSearch {
     })
   }
 
-  /** Map-only coarse-cell assignment replaying [[IvfSearch.assignCells]]'
-    * (dist, cell) argmin as first-position-of-min over a literal
-    * centroid array — the encode pass needs no join at all. */
-  def cellOf(vecCol: Column, cents: Array[Array[Float]]): Column = {
-    val lit0 = typedLit(cents.map(_.toSeq).toSeq)
-    val dists = transform(lit0, cv => vec_l2(vecCol, cv))
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
+  /** Map-only coarse-cell assignment: the home cell of
+    * [[IvfSearch.route]] as a column — the encode pass needs no join.
+    * A projection only: a join keyed on it must key on
+    * [[IvfSearch.assignCells]]' generator-made `cell` instead. */
+  def cellOf(vecCol: Column, cents: Array[Array[Float]]): Column =
+    IvfSearch.route(vecCol, cents, 1).getItem(0).getField("cell")
 
   /** Per-query ADC lookup tables: luts[m][k] = squared distance from
     * the query's m-th subvector to codeword k (squared so the ADC sum
@@ -176,15 +173,11 @@ object PqSearch {
       .withColumnRenamed("pos", "m").withColumnRenamed("col", "code")
   }
 
-  /** Map-only per-query probe list: the cell indices of the `nProbe`
-    * smallest (distance, cell) pairs over the literal centroid array —
-    * the same probe order [[IvfSearch.ivfTopK]]'s rank window selects,
-    * as one array expression (array_sort on struct sorts by (d, c)). */
-  def topProbeCells(vecCol: Column, cents: Array[Array[Float]], nProbe: Int): Column = {
-    val dists = transform(typedLit(cents.map(_.toSeq).toSeq), cv => vec_l2(vecCol, cv))
-    val sorted = array_sort(transform(dists, (d, i) => struct(d.as("d"), i.as("c"))))
-    transform(slice(sorted, 1, nProbe), s => s.getField("c").cast("int"))
-  }
+  /** Map-only per-query probe list: the cells of [[IvfSearch.route]]'s
+    * first `nProbe` pairs, in probe order — the order
+    * [[IvfSearch.probeCellsRanked]] ranks. */
+  def topProbeCells(vecCol: Column, cents: Array[Array[Float]], nProbe: Int): Column =
+    transform(IvfSearch.route(vecCol, cents, nProbe), _.getField("cell"))
 
   /** `ann_ivfpq_topk`: probe -> ADC rank over codes -> bounded exact
     * refine. Queries are the first [[NumQueries]] corpus vectors (the
@@ -196,14 +189,14 @@ object PqSearch {
   def annIvfpqTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
     val (cents, cb) = fittedFor(spark, sfDir, data)
-    // cell routing via the proven assignCells aggregate (one shuffle
-    // row per vector); codes are a map-only projection joined by plain
-    // vec_id. (An alias that is BOTH a join key and a join output —
-    // keying the join on [[cellOf]] directly — trips a Spark 4.1
-    // optimizer bug: CollapseProject pulls the HOF alias above the
+    // cell routing via the map-side assignCells, whose `cell` comes
+    // out of a generator; codes are a map-only projection joined by
+    // plain vec_id. (An alias that is BOTH a join key and a join
+    // output — keying the join on [[cellOf]] directly — trips a Spark
+    // 4.1 optimizer bug: CollapseProject pulls the HOF alias above the
     // join while column pruning drops `embedding` below it ->
     // INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND.)
-    val cells = IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents))
+    val cells = IvfSearch.assignCells(data, cents)
     val codes = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), pqCodes(col("embedding"), cb).as("codes"))
 
@@ -240,7 +233,7 @@ object PqSearch {
   /**
    * `ann_ivfpq_filtered_topk`: metadata-filtered IVF-PQ — the
    * [[SqSearch.annIvfsqFilteredTopK]] discipline on the 32x tier:
-   * label rides the cell assignment ([[IvfSearch.assignCellsWith]]),
+   * label rides the cell assignment ([[IvfSearch.assignCells]]),
    * the predicate prunes candidates AFTER the cell cut and BEFORE the
    * ADC lookup/rank (codes are never summed for a row the filter
    * would discard; the AdcKeep shortlist is all matching rows), and
@@ -250,8 +243,7 @@ object PqSearch {
   def annIvfpqFilteredTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val data = Tables.embeddings(spark, sfDir)
     val (cents, cb) = fittedFor(spark, sfDir, data)
-    val cells = IvfSearch.assignCellsWith(data,
-      IvfSearch.centroidsDf(spark, cents), Seq("label"))
+    val cells = IvfSearch.assignCells(data, cents, Seq("label"))
     val codes = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), pqCodes(col("embedding"), cb).as("codes"))
     val fetch = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
@@ -284,7 +276,7 @@ object PqSearch {
     * a compacted index bit-identical to a fresh encode. */
   def encode(spark: SparkSession, data: DataFrame,
       cents: Array[Array[Float]], cb: Array[Array[Array[Float]]]): (DataFrame, DataFrame) = {
-    val cells = IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents))
+    val cells = IvfSearch.assignCells(data, cents)
     val codes = data.select(col("vec_id"), pqCodes(col("embedding"), cb).as("codes"))
     (cells, codes)
   }

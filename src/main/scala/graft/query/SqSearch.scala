@@ -163,7 +163,7 @@ object SqSearch {
     val data = Tables.embeddings(spark, sfDir)
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val (vmin, delta) = fittedParams(spark, sfDir)
-    val cells = IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents))
+    val cells = IvfSearch.assignCells(data, cents)
     ivfsqTopKForQueries(spark, data.filter(col("vec_id") < NumQueries),
       cells, dvecsOf(data, vmin, delta), data.select(col("vec_id"), col("embedding")), cents)
   }
@@ -185,7 +185,7 @@ object SqSearch {
       delta: Array[Double]): SqIndex = {
     val d = data.select(col("vec_id"), col("embedding"))
     SqIndex(
-      IvfSearch.assignCells(d, IvfSearch.centroidsDf(spark, cents)),
+      IvfSearch.assignCells(d, cents),
       dvecsOf(d, vmin, delta), d, cents, vmin, delta)
   }
 
@@ -214,7 +214,7 @@ object SqSearch {
    * corpus actually serves did not). The discipline is
    * [[AnnQuery.lshTopKSameLabel]]'s, applied to cells:
    *  - the label rides the CELL ASSIGNMENT itself
-   *    ([[IvfSearch.assignCellsWith]] — same one-shuffle aggregate),
+   *    ([[IvfSearch.assignCells]] carrying `label`, map-side),
    *    so the predicate lands directly on the candidate table, below
    *    the dequantized-distance work and both rank windows: ADC is
    *    never computed for a row the filter would discard, and the
@@ -232,8 +232,7 @@ object SqSearch {
     val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
     val (vmin, delta) = fittedParams(spark, sfDir)
     TwoStage.topK(data.filter(col("vec_id") < NumQueries), codec(dvecsOf(data, vmin, delta)),
-      TwoStage.LabeledCells(IvfSearch.assignCellsWith(data,
-        IvfSearch.centroidsDf(spark, cents), Seq("label")), cents),
+      TwoStage.LabeledCells(IvfSearch.assignCells(data, cents, Seq("label")), cents),
       data.select(col("vec_id"), col("embedding")), AdcKeep, K, None)
   }
 

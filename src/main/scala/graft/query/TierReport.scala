@@ -81,10 +81,9 @@ object TierReport {
     // counts from the same cells + probe lists both serving forms use
     val ivfPerQF = Future {
       val cents = IvfSearch.fittedCorpusCentroids(spark, sfDir, data)
-      val cells = IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents))
-      val probes = data.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"),
-          explode(PqSearch.topProbeCells(col("embedding"), cents, PqSearch.NumProbes)).as("cell"))
+      val cells = IvfSearch.assignCells(data, cents)
+      val probes = IvfSearch.probeCellsRanked(data.filter(col("vec_id") < NumQueries),
+        cents, PqSearch.NumProbes)
       cells.join(probes, Seq("cell"))
         .groupBy("query_id").agg(count(lit(1)).as("n"))
         .collect().map(_.getLong(1))
@@ -135,22 +134,12 @@ object TierReport {
       // dim/4 float prefix = dim bytes per candidate row
       ("ivf_mrl_rot", ivfCand, ivfRefine, dim.toLong))
 
-    def roundAt(x: Double, s: Int): Double =
-      java.math.BigDecimal.valueOf(x).setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
-
+    import AnnQuery.{recallAt, roundAt}
     val gtRnkByPair = gt.map(t => (t._1, t._2) -> t._4).toMap
     val gtDistByRnk = gt.map(t => (t._1, t._4) -> t._3).toMap
     val queries = gt.map(_._1).distinct.sorted
     val rows = tiers.map { case (tier, cand, refine, codeBytes) =>
       val ann = Await.result(annF(tier), Duration.Inf)
-      // recall@k over the full query grid (zero-hit queries count 0),
-      // per-query hits/k averaged — the evalMetricsLocal structure
-      def recallAt(k: Int): Double = {
-        val hits = ann.filter { case (q, v, _, rnk) =>
-          rnk <= k && gtRnkByPair.get((q, v)).exists(_ <= k)
-        }.groupBy(_._1).view.mapValues(_.size).toMap
-        roundAt(queries.map(q => hits.getOrElse(q, 0).toDouble / k).sum / queries.length, 4)
-      }
       // rank-aligned distance ratio: per-query mean over gt-dist>0
       // pairs, only for queries with the full k pairs; then the mean
       // over those queries (-1.0 when no query qualifies)
@@ -166,7 +155,8 @@ object TierReport {
       // recall@K (column named recall_at_10 for the shipped k=10
       // default; the VALUE tracks query.k like the oracle's recallSql(k),
       // so a k override keeps both sides parameter-aligned)
-      Row(tier, recallAt(1), recallAt(K), distRatio, cand, refine,
+      Row(tier, recallAt(ann, gtRnkByPair, queries, 1), recallAt(ann, gtRnkByPair, queries, K),
+        distRatio, cand, refine,
         cand * codeBytes + refine * dim * 4L)
     }
     val schema = StructType(Seq(
@@ -318,18 +308,12 @@ object TierReport {
 
     val gtF = Future(graft.query.AnnQuery.annBruteTopK(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))))
-    val cells = IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents))
+    val cells = IvfSearch.assignCells(data, cents)
     val perProbe = ProbeGrid.map { p => p -> Future {
       val topk = IvfSearch.ivfTopK(spark, data, queries, K, p, cents).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       // candidate rows the capped scan reads at this budget
-      val cand = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        .join(broadcast(IvfSearch.centroidsDf(spark, cents)))
-        .withColumn("cdist", graft.functions.VectorFunctions.vec_l2(col("qv"), col("cv")))
-        .withColumn("crnk", org.apache.spark.sql.functions.row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-            .orderBy(col("cdist"), col("cell"))))
-        .filter(col("crnk") <= p)
+      val cand = IvfSearch.probeCellsRanked(queries, cents, p)
         .join(cells, "cell")
         .groupBy("query_id").agg(count(lit(1)).as("n"))
         .agg(sum(least(col("n"), lit(maxCand.toLong))).as("c"))
@@ -339,17 +323,10 @@ object TierReport {
     val gt = Await.result(gtF, Duration.Inf)
     val gtRnkByPair = gt.map(t => (t._1, t._2) -> t._4).toMap
     val queryIds = gt.map(_._1).distinct.sorted
-    def roundAt(x: Double, s: Int): Double =
-      java.math.BigDecimal.valueOf(x).setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
     val rows = perProbe.map { case (p, f) =>
       val (ann, cand) = Await.result(f, Duration.Inf)
-      def recallAt(k: Int): Double = {
-        val hits = ann.filter { case (q, v, _, rnk) =>
-          rnk <= k && gtRnkByPair.get((q, v)).exists(_ <= k)
-        }.groupBy(_._1).view.mapValues(_.size).toMap
-        roundAt(queryIds.map(q => hits.getOrElse(q, 0).toDouble / k).sum / queryIds.length, 4)
-      }
-      Row(p, recallAt(1), recallAt(K), cand,
+      Row(p, AnnQuery.recallAt(ann, gtRnkByPair, queryIds, 1),
+        AnnQuery.recallAt(ann, gtRnkByPair, queryIds, K), cand,
         math.floor(cand.toDouble / (nVecs * nq) * 10000) / 10000)
     }
     val schema = StructType(Seq(

@@ -39,13 +39,14 @@ object TwoStage {
   sealed trait Probe
   /** Every code row: a broadcast nested loop over the query batch. */
   case object AllRows extends Probe
-  /** The `NumProbes` nearest IVF cells, joined on `cells`' plain `cell`
-    * column ([[IvfSearch.assignCells]] — never a [[PqSearch.cellOf]]
-    * alias: keyed on the HOF alias, Spark 4.1's CollapseProject drops
-    * `embedding` below the join, INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND). */
+  /** The `NumProbes` nearest IVF cells, joined on `cells`' `cell`
+    * column, which [[IvfSearch.assignCells]] takes out of a generator —
+    * never a [[PqSearch.cellOf]] alias: keyed on a higher-order-function
+    * alias, Spark 4.1's CollapseProject drops `embedding` below the
+    * join, INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND. */
   final case class Cells(cells: DataFrame, cents: Array[Array[Float]]) extends Probe
-  /** [[Cells]] over a labeled assignment ([[IvfSearch.assignCellsWith]]
-    * on `label`): candidates must share the query's label, and the probe
+  /** [[Cells]] over a labeled assignment ([[IvfSearch.assignCells]]
+    * carrying `label`): candidates must share the query's label, and the probe
     * budget widens by [[IvfSearch.FilterOverProbe]] against selectivity. */
   final case class LabeledCells(cells: DataFrame, cents: Array[Array[Float]]) extends Probe
 

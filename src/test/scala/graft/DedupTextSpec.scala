@@ -654,11 +654,18 @@ class DedupTextSpec extends SparkSpecBase {
       assert(r.getDouble(2) >= 0 && r.getDouble(2) <= r.getDouble(3) + 1e-9,
         s"cell ${r.getInt(0)}: mean ${r.getDouble(2)} > max ${r.getDouble(3)}")
     }
-    // per-cell counts match an independent assignCells aggregation
+    // per-cell counts match an independent driver-side argmin by
+    // (VectorKernels.l2, cell) over the collected corpus
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     val cents = IvfSearch.fitCentroids(emb, IvfSearch.scaledCells(emb.count()), Some(s"ivf:$sf"))
-    val direct = IvfSearch.assignCells(emb, IvfSearch.centroidsDf(spark, cents))
-      .groupBy("cell").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      .map(c => UnsafeArrayData.fromPrimitiveArray(c))
+    val byDistThenCell = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+    val direct = emb.select(col("embedding").cast("array<float>")).collect()
+      .map { r =>
+        val v = UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](0).toArray)
+        cents.indices.minBy(c => (graft.functions.VectorKernels.l2(v, cents(c)), c))(byDistThenCell)
+      }
+      .groupBy(identity).map { case (cell, vs) => cell -> vs.length.toLong }
     res.foreach(r => assert(direct(r.getInt(0)) == r.getLong(1)))
   }
 

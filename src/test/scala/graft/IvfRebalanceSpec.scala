@@ -23,7 +23,7 @@ class IvfRebalanceSpec extends SparkSpecBase {
       (1 until 60).map(i => (100L + i, pt(150.0, i)))
     val data = rows.toDF("vec_id", "embedding")
     val cents = IvfSearch.fitCentroids(data, 4)
-    val before = IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents))
+    val before = IvfSearch.assignCells(data, cents)
       .groupBy("cell").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val fat = before.maxBy(_._2)._1
     val plan = IvfSearch.rebalancePlan(data, cents, budget = 1)
@@ -34,8 +34,7 @@ class IvfRebalanceSpec extends SparkSpecBase {
     // children partition the old fat cell's members: total preserved,
     // and the fat cell's fill is now spread over two cells
     val newCents = plan.map(_._1)
-    val after = IvfSearch.assignCells(data,
-        IvfSearch.centroidsDf(spark, newCents))
+    val after = IvfSearch.assignCells(data, newCents)
       .groupBy("cell").count().collect().map(_.getLong(1))
     assert(after.sum == rows.length)
     def imbalance(szs: Seq[Long], nlist: Int): Double = {

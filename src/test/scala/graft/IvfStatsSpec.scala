@@ -37,10 +37,9 @@ class IvfStatsSpec extends SparkSpecBase {
     // driver-side from the raw assignment
     val row = IvfSearch.ivfStats(spark, sf).head()
     val data = Tables.embeddings(spark, sf)
-    val cents = IvfSearch.centroidsDf(spark,
-      spark.read.parquet(IvfSearch.CentroidExportPath)
+    val cents = spark.read.parquet(IvfSearch.CentroidExportPath)
         .orderBy("cell").collect()
-        .map(_.getSeq[Float](1).toArray))
+        .map(_.getSeq[Float](1).toArray)
     val sizes = IvfSearch.assignCells(data, cents)
       .groupBy("cell").agg(count(lit(1)).as("sz"))
       .select("sz").collect().map(_.getLong(0)).sorted

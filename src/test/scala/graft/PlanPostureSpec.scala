@@ -429,6 +429,16 @@ class PlanPostureSpec extends SparkSpecBase {
     assert(!mp.contains("Sort"), s"the plan table needs no sort:\n$mp")
   }
 
+  test("IVF cell routing is map-side: no nested-loop centroid join; simsearch_ivf aggregates nothing") {
+    val ivf = plan("simsearch_ivf")
+    assert(!ivf.contains("BroadcastNestedLoopJoin") && !ivf.contains("HashAggregate"),
+      s"simsearch_ivf must route map-side, with no assignment aggregate:\n$ivf")
+    for (name <- Seq("embed_cluster", "ivf_stats", "sample_cluster_balanced")) {
+      val p = plan(name)
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"$name joins the centroids:\n$p")
+    }
+  }
+
   test("knn_join_sharded: every shard plan is cell-equi-join only — no cartesian, no corpus broadcast") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

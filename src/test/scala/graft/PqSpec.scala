@@ -175,8 +175,7 @@ class PqSpec extends SparkSpecBase {
     // every non-empty cell contributes min(|cell|, quota) rows
     val cents = IvfSearch.fitCentroids(Tables.embeddings(spark, sf),
       IvfSearch.scaledCells(Tables.embeddings(spark, sf).count()), Some(s"ivf:$sf"))
-    val sizes = IvfSearch.assignCells(Tables.embeddings(spark, sf),
-        IvfSearch.centroidsDf(spark, cents))
+    val sizes = IvfSearch.assignCells(Tables.embeddings(spark, sf), cents)
       .groupBy("cell").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val drawn = byCell.map(r => r.getInt(0) -> r.getLong(1)).toMap
     for ((cell, n) <- sizes)

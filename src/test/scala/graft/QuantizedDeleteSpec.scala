@@ -50,7 +50,7 @@ class QuantizedDeleteSpec extends SparkSpecBase {
   test("SQ8: tombstoned serving == index rebuilt without the rows; deleted never served") {
     val (vmin, delta) = SqSearch.fitParams(all)
     def parts(data: DataFrame) = (
-      IvfSearch.assignCells(data, IvfSearch.centroidsDf(spark, cents)),
+      IvfSearch.assignCells(data, cents),
       data.select(col("vec_id"),
         SqSearch.sqRecon(SqSearch.sqCodes(col("embedding"), vmin, delta),
           vmin, delta).as("dvec")),

@@ -69,7 +69,7 @@ class ScaleLayoutSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, sf)
     import graft.query.IvfSearch
     val cents = IvfSearch.fitCentroids(emb, 8)
-    val store = IvfSearch.assignCells(emb, IvfSearch.centroidsDf(spark, cents))
+    val store = IvfSearch.assignCells(emb, cents)
       .join(emb, "vec_id")
     store.write.partitionBy("cell").parquet(dir)
 

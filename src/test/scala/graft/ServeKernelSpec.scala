@@ -18,8 +18,10 @@ import graft.query.AnnQuery
  * indexed id missing from the serving view, an empty delta, a
  * delta-only hit and staged vectors served from the main view. The
  * codes-only cut (`cappedCandidates`, `boundedCandidates`) is pinned to
- * the reference's cap and bound on the same probes, and `release()`
- * drops the tables the probe paths cache.
+ * the reference's cap and bound on the same probes, the candidate
+ * counts (`candidateCounts`, `lshTierCounts`) to the reference's
+ * distinct-id count, and `release()` drops the tables the probe paths
+ * cache.
  */
 class ServeKernelSpec extends SparkSpecBase {
 
@@ -203,6 +205,34 @@ class ServeKernelSpec extends SparkSpecBase {
       assertSameSet(AnnQuery.boundedCandidates(probed, built, small, Some(deleted), K, stab, search),
         refBounded(refMembers(probed, built, 0), small, Some(deleted), K, stab, search),
         s"$stab $search")
+  }
+
+  /** Candidates per query as they were counted before: the probed
+    * blocks joined to the ids they hold, distinct ids per query. */
+  private def refCounts(probed: DataFrame, b: LshIndex.Built): Set[(Long, Long)] =
+    refMembers(probed, b, 0).groupBy(col("qid").cast("long")).agg(countDistinct("id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("candidateCounts and the tier totals are count cuts of the kernel") {
+    val want = refCounts(probed, built)
+    val got = AnnQuery.candidateCounts(probed, built).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(want.nonEmpty && got == want, s"kernel-only ${(got -- want).take(5)} reference-only ${(want -- got).take(5)}")
+    for ((stab, search) <- Seq((off, optimized),
+        (StabilizationConfig(enabled = true, minCandidates = 12, targetRatio = 1.5), optimized),
+        (off, baseline)))
+      assert(AnnQuery.candidateTotals(probed, built, small, K, stab, search) ==
+        (want.toSeq.map(_._2).sum,
+          refBounded(refMembers(probed, built, 0), small, None, K, stab, search).count()),
+        s"$stab $search")
+    // the tier report's counters over the entry's resident index
+    val (entryModel, entryBuilt) = AnnQuery.setupIndex(spark, sf)
+    val entryProbed = AnnQuery.probeBlocks(spark,
+      Tables.embeddings(spark, sf).filter(col("vec_id") < AnnQuery.NumQueries), entryModel, entryBuilt)
+    assert(AnnQuery.lshTierCounts(spark, sf) ==
+      (refCounts(entryProbed, entryBuilt).toSeq.map(_._2).sum,
+        AnnQuery.boundedCandidates(entryProbed, entryBuilt, entryModel.params, None,
+          AnnQuery.DefaultK).count()))
   }
 
   test("cappedCandidates is the reference's hard cap on the same probes") {

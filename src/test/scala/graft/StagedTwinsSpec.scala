@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+
 import graft.dedup.{Dedup, SemDedup}
 
 /**
@@ -12,6 +17,19 @@ import graft.dedup.{Dedup, SemDedup}
  * actually runs per merge.
  */
 class StagedTwinsSpec extends SparkSpecBase {
+
+  /** The root paths every file scan of `df`'s physical plan reads, taken
+    * from the scan nodes: the plan string cuts a scan's Location at 100
+    * characters, so a long temp root would hide the file name. */
+  private def scannedRoots(df: DataFrame): Seq[String] = {
+    def roots(p: SparkPlan): Seq[String] = p match {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+      case a: AdaptiveSparkPlanExec => roots(a.executedPlan)
+      case m: InMemoryTableScanExec => roots(m.relation.cachedPlan)
+      case other => (other.children ++ other.subqueries).flatMap(roots)
+    }
+    roots(df.queryExecution.executedPlan)
+  }
 
   test("minhash: staged apply/compact verdict-identical to the in-plan forms") {
     // the in-plan delta runs first (stages the pair report in-JVM) —
@@ -53,14 +71,13 @@ class StagedTwinsSpec extends SparkSpecBase {
       .queryExecution.optimizedPlan.toString()
     assert(!sem.contains("csim"),
       s"staged semantic apply must not re-run the assignment chain:\n$sem")
-    // the physical scan names the staged parquet (the optimized
-    // logical plan prints relations without their paths)
-    val mhPhys = Dedup.dedupMinhashApplyStaged(spark, sf)
-      .queryExecution.executedPlan.toString()
-    val semPhys = SemDedup.dedupSemanticApplyStaged(spark, sf)
-      .queryExecution.executedPlan.toString()
-    assert(mhPhys.contains("minhash_delta_pairs") && semPhys.contains("semdelta_pairs"),
-      "staged twins must read the staged pair parquet")
+    // a physical scan reads the staged parquet (the optimized logical
+    // plan prints relations without their paths)
+    val mhRoots = scannedRoots(Dedup.dedupMinhashApplyStaged(spark, sf))
+    val semRoots = scannedRoots(SemDedup.dedupSemanticApplyStaged(spark, sf))
+    assert(mhRoots.exists(_.contains("minhash_delta_pairs")) &&
+      semRoots.exists(_.contains("semdelta_pairs")),
+      s"staged twins must read the staged pair parquet: $mhRoots / $semRoots")
   }
 
   test("refit: staged report and staged thaw verdict-identical to the in-plan forms") {
@@ -86,7 +103,7 @@ class StagedTwinsSpec extends SparkSpecBase {
     val opt = merged.queryExecution.optimizedPlan.toString()
     assert(!opt.contains("least(") && !opt.contains("csim"),
       s"staged merged corpus must not re-run the delta pair chain:\n$opt")
-    assert(merged.queryExecution.executedPlan.toString().contains("semdelta_pairs"),
+    assert(scannedRoots(merged).exists(_.contains("semdelta_pairs")),
       "staged merged corpus must read the staged pair parquet")
   }
 
@@ -114,7 +131,7 @@ class StagedTwinsSpec extends SparkSpecBase {
     val apOpt = ap.queryExecution.optimizedPlan.toString()
     assert(!apOpt.contains("least(") && !apOpt.contains("csim"),
       s"staged multimodal apply must not re-run the pair chain:\n$apOpt")
-    assert(ap.queryExecution.executedPlan.toString().contains("mm_delta_pairs"),
+    assert(scannedRoots(ap).exists(_.contains("mm_delta_pairs")),
       "staged multimodal apply must read the staged pair parquet")
     // the staged compact's only corpus-touching subtree is the
     // delta-sized map-only assignment: no pair chain, and the ONLY
@@ -125,7 +142,7 @@ class StagedTwinsSpec extends SparkSpecBase {
     assert(!cpOpt.contains("least("),
       s"staged multimodal compact must not re-run the pair chain:\n$cpOpt")
     val cpPhys = cp.queryExecution.executedPlan.toString()
-    assert(cpPhys.contains("mm_delta_pairs"),
+    assert(scannedRoots(cp).exists(_.contains("mm_delta_pairs")),
       "staged multimodal compact must read the staged pair parquet")
     // the anti-join against drops is the broadcast; the carried side
     // streams from the assignment fixture

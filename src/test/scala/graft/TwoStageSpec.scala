@@ -35,7 +35,7 @@ class TwoStageSpec extends SparkSpecBase {
     val exact = AnnQuery.bruteTopK(small, queries, k).collect().toSet
     assert(exact.size == 5 * k)
     val cells = TwoStage.Cells(
-      IvfSearch.assignCells(small, IvfSearch.centroidsDf(spark, cents)), cents)
+      IvfSearch.assignCells(small, cents), cents)
     for ((name, codec) <- codecs; (mode, probe) <- Seq("exhaustive" -> TwoStage.AllRows, "ivf" -> cells)) {
       val got = TwoStage.topK(queries, codec, probe, fetch, keep, k, None).collect().toSet
       assert(got == exact, s"$name/$mode must equal brute force when nothing is cut")
@@ -44,8 +44,7 @@ class TwoStageSpec extends SparkSpecBase {
 
   test("keep >= N through labeled cells: equals the exact same-label brute force") {
     val exact = AnnQuery.bruteTopKSameLabel(small, queries, k).collect().toSet
-    val labeled = TwoStage.LabeledCells(IvfSearch.assignCellsWith(small,
-      IvfSearch.centroidsDf(spark, cents), Seq("label")), cents)
+    val labeled = TwoStage.LabeledCells(IvfSearch.assignCells(small, cents, Seq("label")), cents)
     for ((name, codec) <- codecs) {
       val got = TwoStage.topK(queries, codec, labeled, fetch, keep, k, None).collect().toSet
       assert(got == exact, s"$name/labeled must equal the same-label brute force")
